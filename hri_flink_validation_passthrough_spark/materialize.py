@@ -116,7 +116,9 @@ def materialize(
     ``eager``: compute now (detach semantics — e.g. cutting a result loose
     from a memory-sink view before the view drops) vs ride the first
     consuming job. ``iterative``: the call truncates loop lineage, so only
-    lineage-cutting arms apply ("persist"/"none" fall back to "ckpt").
+    lineage-cutting arms apply ("persist"/"none" fall back to "ckpt") and
+    ``eager=False`` raises: loops read ``observe()`` metrics off the cut
+    (``dedup.min_label_components``); ``Observation.get`` on a lazy frame hangs.
     ``eager=True`` under "none" likewise falls back to "ckpt": eager is a
     SEMANTIC declaration (the source may be gone by read time), not a
     performance hint, so the no-op arm may not honor it by doing nothing.
@@ -126,9 +128,9 @@ def materialize(
         raise ValueError(
             f"SPARK_GRAFT_MATERIALIZE={policy!r}: expected one of {_VALID}"
         )
-    if iterative and policy in ("persist", "none"):
-        policy = "ckpt"
-    if eager and policy == "none":
+    if iterative and not eager:
+        raise ValueError("materialize(iterative=True) must be eager")
+    if (iterative and policy == "persist") or (eager and policy == "none"):
         policy = "ckpt"
     if policy == "ckpt":
         return df.localCheckpoint(eager=eager)

@@ -2242,22 +2242,23 @@ def _pq_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ivfpq_cand_memo: dict[tuple, DataFrame] = {}
 
 
-def _ivfpq_cand(spark: SparkSession, sf_dir: str):
+def _ivfpq_cand(spark: SparkSession, sf_dir: str, nlist: int = NLIST):
     """(cand, probes) for the composed IVF-PQ read path, where cand =
     (vec_id, cell, re) — PQ reconstructions joined with the coarse-cell
     assignment. Both inputs are ingest-time index artifacts (already
     session-memoized); their JOIN is index content too — it is exactly the
     table ann_ivfpq_durable_topk ships to disk partitioned by cell — so
-    composing it per call paid one broadcast build + join job per query
-    (r16, guide §1 fewer jobs). Memoized behind the same lazy
-    localCheckpoint + fingerprint discipline as _pq_recon; probes depend
-    on the query set and stay per-call."""
-    assign, probes = _ivf_assign_probes(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), _fp_key(sf_dir))
+    composing it per call paid one broadcast build + join job per query.
+    Memoized behind the same lazy localCheckpoint + fingerprint discipline
+    as _pq_recon, keyed on *nlist* like *assign* (only tests vary it);
+    probes depend on the query set and stay per-call."""
+    assign, probes = _ivf_assign_probes(spark, sf_dir, nlist=nlist)
+    app, sf = spark.sparkContext.applicationId, sf_dir.rstrip("/")
+    key = (app, sf, nlist, _fp_key(sf_dir))
     if key not in _ivfpq_cand_memo:
         from ..session import evict_stale_memo
 
-        evict_stale_memo(_ivfpq_cand_memo, key, 2)
+        evict_stale_memo(_ivfpq_cand_memo, key, 3)
         _ivfpq_cand_memo[key] = (
             _pq_recon(spark, sf_dir)
             .join(assign.select("vec_id", "cell"), "vec_id")

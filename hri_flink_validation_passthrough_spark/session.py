@@ -8,9 +8,9 @@ Two entry points:
   ``spark.sql.*`` runtime confs are touched; never the master or memory.
 
 Scale posture (100 TB, ~1000 executors): everything here is either
-runtime-settable or per-job. Shuffle partitioning is sized to cores locally
-but would be AQE-coalesced on a real cluster; adaptive skew-join handling is
-on so a hot batchId / hot join key re-splits at runtime.
+runtime-settable or per-job. ``prepare()`` sizes stream state to the cores
+(one wave) and starts batch shuffles at >= 8 for AQE to coalesce; adaptive
+skew-join handling is on so a hot batchId / hot join key re-splits at runtime.
 """
 
 from __future__ import annotations
@@ -90,11 +90,16 @@ def prepare(spark: SparkSession) -> SparkSession:
             RuntimeWarning,
             stacklevel=2,
         )
-    # Size the shuffle for the session's actual parallelism; AQE coalesces
-    # down, so erring high is cheap.
+    # Shuffle partitions = cores: a stream (run without AQE) fixes its state
+    # count from this at its first checkpoint; more means two waves a trigger.
+    # Batch (AQE) starts at >= 8, so one slow task cannot set a stage's time.
     try:
         cores = spark.sparkContext.defaultParallelism
-        spark.conf.set("spark.sql.shuffle.partitions", str(max(cores, 8)))
+        spark.conf.set("spark.sql.shuffle.partitions", str(cores))
+        if cores < 8:
+            spark.conf.set(
+                "spark.sql.adaptive.coalescePartitions.initialPartitionNum", "8"
+            )
     except Exception:
         pass
     return spark
@@ -112,7 +117,6 @@ def build_session(
     b = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(n, 8)))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # context-start-only (ContextCleaner reads it once): reliable

@@ -29,7 +29,9 @@ Semantics deltas vs Flink, documented per SURVEY.md §3.3/§2C.6:
 Scale posture: state is one tiny row per batchId (RocksDB provider for large
 key counts); the shuffle is one hash exchange on batchId — exactly the
 reference's ``keyBy``; ``maxOffsetsPerTrigger`` bounds per-trigger work. A
-single hot batch serializes on one task, same as in Flink.
+single hot batch serializes on one task, same as in Flink. State partitions =
+cores (``session.prepare``; the harness replays cap them at 8), fixed at the
+first checkpoint: one stateful wave per trigger, kept across restarts.
 """
 
 from __future__ import annotations

@@ -27,13 +27,13 @@ from ..materialize import cut
 
 QUERIES: dict[str, QuerySpec] = {}
 
-# State-store partition count for these finite-replay harness queries. A
-# streaming aggregation creates one state store per shuffle partition and
-# every microbatch pays per-partition checkpoint I/O even for empty
-# partitions — under an untuned driver session (200 shuffle partitions) that
-# is ~25× more tiny-file I/O than the data needs. The partition count is
-# fixed into the checkpoint at query start, so pinning it here only affects
-# the freshly started query; production jobs size it to key cardinality.
+# Cap on state-store partitions for these finite-replay harness queries:
+# min(conf, 8), so at <= 8 cores they keep session.prepare's one-wave rule
+# (partitions = cores). Every microbatch pays checkpoint I/O per state
+# partition, even empty ones: an untuned driver session (200 partitions)
+# pays ~25× the I/O the data needs, and bench.py measured 32 slower than 8
+# for the routed replay. The count is fixed into the checkpoint at query
+# start, so the cap only affects the freshly started query.
 _STATE_PARTITIONS = 8
 
 
@@ -558,16 +558,12 @@ def stream_passthrough_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     notifs = spark.readStream.schema(
         spark.read.parquet(f"{tmp}/ctrl").schema
     ).parquet(f"{tmp}/ctrl")
-    # Size the state store to the keyed-state cardinality (one key per
-    # batch): empty state partitions still pay per-microbatch checkpoint
-    # I/O. Restored after the run; see bench.py for the measurement.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     routed = build_routed_stream(
         records, notifs, completion_delay_ms=1500, per_trigger_bound=bound
     )
     name = f"route_{uuid.uuid4().hex[:8]}"
-    q = start_memory_query(routed, name, f"{tmp}/ckpt")
+    with _pinned_state(spark):
+        q = start_memory_query(routed, name, f"{tmp}/ckpt")
     try:
         # run until every record routed AND every batch's completion timer
         # has fired (the 'completed' notification is emitted by a later
@@ -594,7 +590,6 @@ def stream_passthrough_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out
     finally:
         q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         # the returned frame reads the in-memory sink, never these files —
         # drop the events-sized replay copies so repeated bench reps don't
         # accumulate one each (same class as the ADVICE r10 maintenance-

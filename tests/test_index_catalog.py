@@ -219,6 +219,23 @@ def test_memo_staleness_same_session_regen(spark, tmp_path, monkeypatch):
     )
 
 
+def test_ivfpq_cand_memo_rederives_on_changed_nlist(spark):
+    """The IVF-PQ candidate memo keys on the coarse grid its assignment
+    input is keyed on: a table built for one nlist is never served for
+    another."""
+    from hri_flink_validation_passthrough_spark.operators import similarity as S
+
+    small = 4
+    base, _ = S._ivfpq_cand(spark, SF_ORACLE)
+    assert S._ivfpq_cand(spark, SF_ORACLE)[0] is base  # memo hit
+    other, _ = S._ivfpq_cand(spark, SF_ORACLE, nlist=small)
+    assert other is not base, "memo served the default grid's table"
+    assert other.agg(F.max("cell")).first()[0] < small
+    assert base.agg(F.max("cell")).first()[0] >= small
+    # the default grid's entry survives the other grid's build
+    assert S._ivfpq_cand(spark, SF_ORACLE)[0] is base
+
+
 def test_publish_race_loser_yields_to_winner(tmp_path, monkeypatch):
     """ADVICE r9 (low): POSIX rename onto an existing non-empty directory
     fails (ENOTEMPTY) — the losing concurrent publisher must treat the

@@ -190,3 +190,30 @@ def test_reliable_local_fallback_warns_on_nonlocal_master(monkeypatch):
     fake.sparkContext.dir = "hdfs://nn/ckpt"
     M._ensure_checkpoint_dir(fake)
     assert fake.sparkContext.dir == "hdfs://nn/ckpt"
+
+
+def test_lazy_iterative_result_is_rejected_not_hung(spark, policy_guard):
+    """iterative=True must hand back an action-backed frame: loop drivers
+    read observe() metrics off it (dedup.min_label_components), and
+    Observation.get blocks until a job fills it. A lazy iterative request
+    must fail fast under every arm instead of returning a frame whose
+    metric read would wait forever."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    for arm in ("ckpt", "reliable", "persist", "none"):
+        M.POLICY = arm
+        obs = Observation(f"lazy_{arm}")
+        df = spark.range(10).observe(obs, F.sum("id").alias("s"))
+        with pytest.raises(ValueError, match="must be eager"):
+            M.materialize(df, eager=False, iterative=True)
+        with pytest.raises(ValueError, match="must be eager"):
+            df.transform(M.cut(eager=False, iterative=True))
+        assert not M.PINNED
+    # the eager form is action-backed: the metric is already filled
+    M.POLICY = "ckpt"
+    obs = Observation("eager_ckpt")
+    spark.range(10).observe(obs, F.sum("id").alias("s")).transform(
+        M.cut(iterative=True)
+    )
+    assert obs.get["s"] == 45

@@ -484,3 +484,51 @@ def test_streaming_data_before_started_at_volume(spark, stream_env):
     assert [x["status"] for x in n] == ["completed"]
     # the 200 unknown-batch rejects are NOT in the batch's record count
     assert n[0]["recordCount"] == 25 and n[0]["expectedRecordCount"] == 25
+
+
+def test_routed_stream_state_partitions_match_cores(spark, tmp_path):
+    """A fresh routed stream on a build_session() session runs as many
+    state partitions as the session has cores: the stateful stage runs in
+    one wave. A floor above the cores would run two waves of Python
+    tasks (each a data pass plus a timer pass) per trigger."""
+    q, _ = _cold_start_env(
+        spark, tmp_path, [_notif_row("started", t=0, seq=0)],
+        [_rec_row(i) for i in range(5)],
+    )
+    try:
+        t0 = time.time()
+        while time.time() - t0 < 30:
+            p = q.lastProgress
+            if p is not None and p.stateOperators:
+                break
+            time.sleep(0.3)
+        assert p is not None and p.stateOperators, "no stateful progress"
+        assert (
+            p.stateOperators[0].numShufflePartitions
+            == spark.sparkContext.defaultParallelism
+        )
+    finally:
+        q.stop()
+
+
+def test_prepare_sizes_shuffle_partitions_to_cores():
+    """prepare() sets shuffle partitions (a stream's state partitions) to
+    the session's cores, with no floor: a 4-core session gets 4, not 8.
+    Batch shuffles keep the floor through AQE's initial partition count,
+    which streams do not read; at >= 8 cores that count is left alone."""
+    from types import SimpleNamespace
+
+    from hri_flink_validation_passthrough_spark.session import prepare
+
+    class _Conf(dict):
+        def set(self, k, v):
+            self[k] = v
+
+    initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    for cores, batch in ((4, "8"), (8, None), (16, None)):
+        fake = SimpleNamespace(
+            conf=_Conf(), sparkContext=SimpleNamespace(defaultParallelism=cores)
+        )
+        prepare(fake)
+        assert fake.conf["spark.sql.shuffle.partitions"] == str(cores)
+        assert fake.conf.get(initial) == batch

@@ -99,15 +99,11 @@ def stateful_backend(request, spark):
     return request.param == "tws"
 
 
-def test_restart_from_checkpoint_no_loss_no_dup(spark, tmp_path, stateful_backend):
+def _restartable_route(spark, tmp_path, prefer_tws=False):
+    """(write_ctrl, write_recs, start_query, wait_for) over one routed
+    stream whose parquet sink and checkpoint survive a stop/start cycle."""
     data_dir, ctrl_dir = str(tmp_path / "d"), str(tmp_path / "c")
     ckpt, out_dir = str(tmp_path / "k"), str(tmp_path / "out")
-
-    # health monitor — parity with the reference's Flink REST monitor thread
-    # (flink_job.rb:47-66): fail on root exceptions, observe checkpoint
-    # (microbatch) progress across the kill/restart cycle
-    mon = StreamingHealthMonitor()
-    spark.streams.addListener(mon)
 
     def write_ctrl(rows):
         spark.createDataFrame(rows, CTRL_SCHEMA).coalesce(1).write.mode(
@@ -126,7 +122,7 @@ def test_restart_from_checkpoint_no_loss_no_dup(spark, tmp_path, stateful_backen
             records,
             notifs,
             completion_delay_ms=DELAY_MS,
-            prefer_transform_with_state=stateful_backend,
+            prefer_transform_with_state=prefer_tws,
             per_trigger_bound=1000,  # staged chaos scenarios are tiny
         )
         return (
@@ -151,6 +147,31 @@ def test_restart_from_checkpoint_no_loss_no_dup(spark, tmp_path, stateful_backen
                 return r
             time.sleep(0.4)
         pytest.fail(f"timeout: {msg}; sink has {len(sink_rows())} rows")
+
+    return write_ctrl, write_recs, start_query, wait_for
+
+
+def _assert_routed_once(rows, n):
+    """Records 0..n-1 reached `out` exactly once and one `completed`
+    notification counts all n."""
+    out = [r for r in rows if r.dest == "out"]
+    keys = sorted(bytes(r.key).decode() for r in out)
+    assert keys == sorted(str(i) for i in range(n)), "loss or duplication"
+    notifs = [json.loads(bytes(r.value)) for r in rows if r.dest == "notification"]
+    assert [x["status"] for x in notifs] == ["completed"]
+    assert notifs[0]["recordCount"] == n
+
+
+def test_restart_from_checkpoint_no_loss_no_dup(spark, tmp_path, stateful_backend):
+    write_ctrl, write_recs, start_query, wait_for = _restartable_route(
+        spark, tmp_path, stateful_backend
+    )
+
+    # health monitor — parity with the reference's Flink REST monitor thread
+    # (flink_job.rb:47-66): fail on root exceptions, observe checkpoint
+    # (microbatch) progress across the kill/restart cycle
+    mon = StreamingHealthMonitor()
+    spark.streams.addListener(mon)
 
     write_ctrl([_notif_row("started", t=0, seq=0)])
     write_recs([_rec_row(i) for i in range(8)])
@@ -187,12 +208,52 @@ def test_restart_from_checkpoint_no_loss_no_dup(spark, tmp_path, stateful_backen
     finally:
         spark.streams.removeListener(mon)
 
-    out = [r for r in rows if r.dest == "out"]
-    keys = sorted(bytes(r.key).decode() for r in out)
-    assert keys == sorted(str(i) for i in range(15)), "loss or duplication"
-    notifs = [json.loads(bytes(r.value)) for r in rows if r.dest == "notification"]
-    assert [n["status"] for n in notifs] == ["completed"]
-    assert notifs[0]["recordCount"] == 15
+    _assert_routed_once(rows, 15)
+
+
+@pytest.mark.slow  # ~15 s: two incarnations of the routed stream
+def test_restart_keeps_checkpointed_state_partitions(spark, tmp_path):
+    """A checkpoint written under 8 shuffle partitions restarts on a session
+    sized to 4: the state-store count is fixed at the first checkpoint, so
+    the restarted query keeps 8 stores and routes with no loss and no
+    duplicates. Pins that deployments checkpointed before shuffle
+    partitions were sized to cores still restart."""
+    write_ctrl, write_recs, start_query, wait_for = _restartable_route(
+        spark, tmp_path
+    )
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "8")
+        write_ctrl([_notif_row("started", t=0, seq=0)])
+        write_recs([_rec_row(i) for i in range(8)])
+        q = start_query()
+        wait_for(lambda r: len([x for x in r if x.dest == "out"]) >= 8,
+                 msg="first 8 records committed")
+        q.stop()
+
+        spark.conf.set(key, "4")
+        write_recs([_rec_row(i) for i in range(8, 15)])
+        write_ctrl([_notif_row("sendCompleted", expected=15, t=300, seq=1)])
+        q2 = start_query()
+        try:
+            rows = wait_for(
+                lambda r: len([x for x in r if x.dest == "out"]) >= 15
+                and [x for x in r if x.dest == "notification"],
+                msg="all 15 records + terminal notification after restart",
+            )
+            parts = {
+                op.numShufflePartitions
+                for p in q2.recentProgress
+                for op in p.stateOperators
+            }
+        finally:
+            q2.stop()
+    finally:
+        spark.conf.set(key, prev)
+
+    assert parts == {8}, f"restarted query ran {parts} state partitions"
+    _assert_routed_once(rows, 15)
 
 
 def test_cdc_merger_replayed_epoch_is_idempotent(spark, tmp_path):
