@@ -75,8 +75,9 @@ def _outcomes(
     ctrl_agg: DataFrame | None = None,
 ) -> DataFrame:
     """Per-batch outcome table: (batch_id, term_t, completed_t,
-    final_status, known) — one row per batch_id present in ``records``,
-    ``known`` TRUE where a control row matched (NULL for unknown batches).
+    final_status, known) — one row per control batch that has records
+    (``known`` is TRUE on every row). Bounded by the control batches, not by
+    the distinct ids in ``records``: unknown-batch records never enter it.
     ``records``: envelope rows with batch_id/time_ms/seq;
     ``controls``: notification columns + time_ms/seq. ``ctrl_agg``: the
     already-aggregated (batch_id, started_t, sc_t, expected, term_t) table
@@ -115,12 +116,14 @@ def _outcomes(
     # records, whose final_status is provably NULL — failed_at_sc needs
     # processed_at_sc > expected (no agg row → NULL → false), armed needs
     # t_expected (a record) — so they emit no notification and can join no
-    # record: the routed output is identical. `known` is attached here,
-    # below the aggregation, so unknown-batch records (no ctrl match)
-    # surface as known-NULL outcome rows, which route to invalid exactly as
-    # the old missing-row form did.)
+    # record: the routed output is identical. The join is INNER: records of
+    # unknown batches (no ctrl match, null batch_id included) cannot change
+    # any known batch's outcome, so they stay out of the aggregation and of
+    # the outcome table; route_records_relational's left join misses them
+    # and routes them to invalid. Arbitrarily many garbage batch ids thus
+    # never grow a broadcast.)
     r = records.select("batch_id", "time_ms", "seq").join(
-        F.broadcast(ctrl.withColumn("known", F.lit(True))), "batch_id", "left"
+        F.broadcast(ctrl.withColumn("known", F.lit(True))), "batch_id"
     )
     eligible = F.col("term_t").isNull() | (F.col("time_ms") < F.col("term_t"))
     # Per-batch running count as a TWO-LEVEL prefix sum (same technique as
@@ -228,10 +231,10 @@ def route_records_relational(
     # eager-vs-lazy choice. This is the plan's ONLY materialization (r16):
     # _outcomes no longer checkpoints the control aggregate separately.
     outcomes = _materialize(_outcomes(records, controls, delay_ms, ctrl_agg))
-    # outcomes carries one row per batch_id seen in `records` with `known`
-    # already attached (TRUE where a control row matched, NULL otherwise),
-    # so a single broadcast join both marks known batches and attaches their
-    # terminal times — no separate known-ids join over the record stream.
+    # outcomes carries one row per known batch (known = TRUE), so a single
+    # broadcast join both marks known batches and attaches their terminal
+    # times — no separate known-ids join over the record stream. Unknown
+    # batch ids miss the join (known NULL) and route to invalid.
     rec = records.join(F.broadcast(outcomes), "batch_id", "left")
 
     unknown_body = F.encode(

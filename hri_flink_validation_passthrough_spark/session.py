@@ -11,6 +11,12 @@ Scale posture (100 TB, ~1000 executors): everything here is either
 runtime-settable or per-job. ``prepare()`` sizes stream state to the cores
 (one wave) and starts batch shuffles at >= 8 for AQE to coalesce; adaptive
 skew-join handling is on so a hot batchId / hot join key re-splits at runtime.
+
+Python tasks no longer re-read Spark's zip archives: importing the package
+makes the worker's per-task ``importlib.invalidate_caches()`` skip unchanged
+archives (see ``_skip_unchanged_zip_rereads`` in ``__init__``). With a
+pip-only pyspark (no ``pyspark.zip`` on the worker path) only the spark-core
+jar's importers were paying, so the gain is smaller there.
 """
 
 from __future__ import annotations
@@ -111,8 +117,8 @@ def build_session(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Create the tuned local session used by tests, bench.py and the CLI.
-    *extra_conf* lets diagnostic harnesses (tools/diag_pyworker.py) pin
-    session-start-only confs like spark.python.worker.reuse."""
+    *extra_conf* adds session-start-only confs (e.g. spark.local.dir) on
+    top of the tuning."""
     n = cpus or _local_cpus()
     b = (
         SparkSession.builder.master(f"local[{n}]")

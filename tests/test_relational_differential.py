@@ -271,3 +271,96 @@ def test_zero_record_control_batches_match_state_machine(spark):
     assert left == right, f"machine={left} relational={right}"
     # and the zero-record batches emitted nothing through either engine
     assert not {"z1", "z2", "z3"} & set(left)
+
+
+def test_garbage_batch_ids_stay_off_the_broadcast(spark):
+    """Adversarial cardinality: 50k distinct unknown batch ids beside three
+    known batches. The broadcast outcome table must stay one row per control
+    batch (unknown ids take the left-join miss instead of a broadcast row),
+    and every garbage record must still route to invalid with the
+    unknown-batch body while the known batches complete as usual."""
+    from hri_flink_validation_passthrough_spark.model import UNKNOWN_BATCH_FAILURE
+    from hri_flink_validation_passthrough_spark.sources.envelope import (
+        batch_id_from_headers,
+    )
+
+    n_garbage, n_known, per_batch = 50_000, 3, 4
+    records, controls = [], []
+    for b in range(n_known):
+        bid, t0 = f"k{b}", BASE + b * 1_000
+        controls += [
+            (bid, bid, "ingest.t.x.in", "x", -1, STARTED, None, t0, 0),
+            (bid, bid, "ingest.t.x.in", "x", -1, SEND_COMPLETED, per_batch,
+             t0 + 500, 1),
+        ]
+        records += [
+            (f"{bid}-k{i}".encode(), f"{bid}-v{i}".encode(),
+             [("batchId", bid.encode())], t0 + 10 * (i + 1), b * 100 + i)
+            for i in range(per_batch)
+        ]
+    garbage_id = F.concat(F.lit("garbage-"), F.col("id").cast("string"))
+    garbage = spark.range(n_garbage).select(
+        F.encode(F.concat(F.lit("g-k"), F.col("id").cast("string")), "UTF-8").alias("key"),
+        F.encode(F.lit("g-v"), "UTF-8").alias("value"),
+        F.array(
+            F.struct(
+                F.lit("batchId").alias("key"),
+                F.encode(garbage_id, "UTF-8").alias("value"),
+            )
+        ).alias("headers"),
+        (F.lit(BASE) + F.col("id")).alias("time_ms"),
+        (F.lit(1_000_000) + F.col("id")).alias("seq"),
+    )
+    ctrl_df = spark.createDataFrame(controls, CTRL_SCHEMA)
+    env = (
+        spark.createDataFrame(records, REC_SCHEMA)
+        .unionByName(garbage)
+        .withColumn("batch_id", batch_id_from_headers())
+    )
+
+    routed = route_records_relational(env, ctrl_df, delay_ms=DELAY_MS)
+    unknown_body = F.encode(
+        F.lit('{"failure": "%s"}' % UNKNOWN_BATCH_FAILURE), "UTF-8"
+    )
+    # an invalid row counts as invalid only with the unknown-batch body
+    body_checked = routed.withColumn(
+        "dest",
+        F.when(
+            (F.col("dest") == "invalid") & (F.col("value") != unknown_body),
+            F.lit("invalid-other-body"),
+        ).otherwise(F.col("dest")),
+    )
+    is_garbage = F.col("batch_id").startswith("garbage-").alias("garbage")
+    shapes = (
+        _summarize(body_checked)
+        .groupBy(is_garbage, "n_out", "n_invalid", "final_status")
+        .count()
+    )
+    # (garbage?, out, invalid, status, number of batches with that shape)
+    assert {tuple(r) for r in shapes.collect()} == {
+        (False, per_batch, 0, "completed", n_known),
+        (True, 0, 1, None, n_garbage),
+    }
+    # every broadcast the run built held at most one row per control batch
+    # (the outcome table joined to the records among them)
+    rows = _broadcast_rows(shapes)
+    assert rows and max(rows) <= n_known, rows
+
+
+def _broadcast_rows(df) -> list[int]:
+    """numOutputRows of every BroadcastExchange in *df*'s executed plan
+    (call after an action: AQE's final plan holds the metrics)."""
+    rows, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+            continue
+        if "QueryStage" in node.getClass().getSimpleName():
+            todo.append(node.plan())
+            continue
+        if node.nodeName() == "BroadcastExchange":
+            rows.append(node.metrics().apply("numOutputRows").value())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return rows
