@@ -27,31 +27,9 @@ SRP-local ``_SRP_MATERIALIZE`` knob, ``operators/dedup.py``):
     CONTEXT-start conf, set by ``session.build_session``; sessions built
     elsewhere should set it too or accept accrual.
 
-``persist``
-    ``df.persist(MEMORY_AND_DISK)`` pinned in :data:`PINNED` so a harness
-    can :func:`release_pinned` after the consuming action — the leak-free
-    form of a per-call persist (measurement arm for A/B tools; lineage is
-    KEPT, so recompute-on-loss works as long as the source does). Not
-    valid for iterative lineage truncation: those sites fall back to
-    ``ckpt`` (un-truncated iterative lineage grows geometrically — the
-    r6-diagnosed driver OOM during codegen). CAVEAT (r13 ADVICE): at
-    ``eager=True`` detach sites the caller removes the source right after
-    (memory-sink view drop, staged-parquet rmtree), so a cached-block loss
-    would make the lineage recompute FAIL — unlike the ``ckpt`` fallback
-    ``none`` gets. This arm stays persist anyway because it exists only
-    for single-box A/B harnesses (``tools/ab_srp_materialize.py``), where
-    MEMORY_AND_DISK blocks survive memory pressure by spilling and are
-    lost only with the whole JVM; a ckpt fallback at eager sites would
-    make the arm silently measure ``ckpt``. It is NOT a production arm —
-    never ship a cluster job with ``SPARK_GRAFT_MATERIALIZE=persist``.
-
-``none``
-    No materialization (measurement arm: quantifies what the
-    materialization saves). Applies only to LAZY requests: an
-    ``eager=True`` call declares detach semantics — the caller will read
-    the result after its source is gone (a dropped memory-sink view, a
-    loop variable about to be rebound) — so ``none`` falls back to
-    ``ckpt`` there, as it does for ``iterative`` sites.
+Two arms only: the interleaved sf0.1 A/B (BASELINE.md r13) measured a
+``persist`` arm at 6.02 s and a no-materialization arm at 5.31 s against
+``ckpt``'s 5.04 s median, so neither survived as a policy.
 
 Set via the ``SPARK_GRAFT_MATERIALIZE`` env var at process start, or by
 assigning :data:`POLICY` (tests/harnesses; always restore in ``finally``).
@@ -66,12 +44,7 @@ from pyspark.sql import DataFrame
 
 POLICY: str = os.environ.get("SPARK_GRAFT_MATERIALIZE", "ckpt")
 
-_VALID = ("ckpt", "reliable", "persist", "none")
-
-# "persist"-arm handles awaiting an explicit release_pinned() — the
-# leak-free contract: whoever flips the policy to "persist" owns the
-# release after the consuming action (tools/ab_srp_materialize.py shape).
-PINNED: list[DataFrame] = []
+_VALID = ("ckpt", "reliable")
 
 
 def _ensure_checkpoint_dir(spark) -> None:
@@ -115,13 +88,10 @@ def materialize(
 
     ``eager``: compute now (detach semantics — e.g. cutting a result loose
     from a memory-sink view before the view drops) vs ride the first
-    consuming job. ``iterative``: the call truncates loop lineage, so only
-    lineage-cutting arms apply ("persist"/"none" fall back to "ckpt") and
-    ``eager=False`` raises: loops read ``observe()`` metrics off the cut
-    (``dedup.min_label_components``); ``Observation.get`` on a lazy frame hangs.
-    ``eager=True`` under "none" likewise falls back to "ckpt": eager is a
-    SEMANTIC declaration (the source may be gone by read time), not a
-    performance hint, so the no-op arm may not honor it by doing nothing.
+    consuming job. ``iterative``: the call truncates loop lineage (both
+    arms cut it), and ``eager=False`` raises: loops read ``observe()``
+    metrics off the cut (``dedup.min_label_components``);
+    ``Observation.get`` on a lazy frame hangs.
     """
     policy = POLICY
     if policy not in _VALID:
@@ -130,22 +100,10 @@ def materialize(
         )
     if iterative and not eager:
         raise ValueError("materialize(iterative=True) must be eager")
-    if (iterative and policy == "persist") or (eager and policy == "none"):
-        policy = "ckpt"
     if policy == "ckpt":
         return df.localCheckpoint(eager=eager)
-    if policy == "reliable":
-        _ensure_checkpoint_dir(df.sparkSession)
-        return df.checkpoint(eager=eager)
-    if policy == "persist":
-        out = df.persist()
-        PINNED.append(out)
-        if eager:
-            # persist is lazy; eager callers rely on the data being cut
-            # loose NOW (memory-sink detach, loop-step ordering)
-            out.count()
-        return out
-    return df  # "none"
+    _ensure_checkpoint_dir(df.sparkSession)
+    return df.checkpoint(eager=eager)
 
 
 def cut(eager: bool = True, iterative: bool = False):
@@ -153,12 +111,3 @@ def cut(eager: bool = True, iterative: bool = False):
     ``df.groupBy(...).agg(...).transform(cut())`` reads like the
     ``localCheckpoint`` call it replaces while consulting the policy."""
     return lambda df: materialize(df, eager=eager, iterative=iterative)
-
-
-def release_pinned() -> int:
-    """Unpersist every "persist"-arm handle; returns how many released."""
-    n = 0
-    while PINNED:
-        PINNED.pop().unpersist()
-        n += 1
-    return n

@@ -1085,10 +1085,9 @@ def srp_lsh_pairs(
     # scale. Materialization is the REPO-WIDE policy switch (materialize.py
     # — the r13 generalization of the knob that lived here as
     # _SRP_MATERIALIZE): "ckpt" lazy-localCheckpoint default (the r7
-    # eager-vs-lazy A/B; the r8 interleaved persist-vs-ckpt A/B in
-    # BASELINE.md re-confirmed ckpt — tools/ab_srp_materialize.py is the
-    # harness, now flipping materialize.POLICY), "reliable"/"persist"/"none"
-    # per the module docstring.
+    # eager-vs-lazy A/B; the r8 and r13 interleaved A/Bs in BASELINE.md
+    # re-confirmed ckpt over persist and over no materialization), or the
+    # cluster-durable "reliable" arm per the module docstring.
     keyed = materialize(keyed, eager=False)
     buckets = keyed.select("vec_id", F.explode("keys").alias("bkey"))
     pair_structs = _pair_structs(F.col("ids"), "vec_a", "vec_b")

@@ -51,23 +51,6 @@ def _big():
 _BUCKET_MS = 3_600_000
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """Materialize a per-batch-cardinality table consumed by two branches
-    (each consumer would otherwise re-run the whole sub-plan — a full
-    events-table aggregation). Mode knob for the eager-vs-lazy A/B (r6
-    verdict ask #6): ``HRI_PASSTHROUGH_CKPT`` = ``eager`` | ``lazy`` |
-    ``off``. Default LAZY: the interleaved sf0.1 A/B (BASELINE.md) showed
-    eager's two serial driver-blocking checkpoint jobs are pure fixed
-    overhead — lazy folds materialization into the first consuming job and
-    both consumers still read the stored partitions."""
-    import os
-
-    mode = os.environ.get("HRI_PASSTHROUGH_CKPT", "lazy")
-    if mode == "off":
-        return df
-    return materialize(df, eager=(mode == "eager"))
-
-
 def _outcomes(
     records: DataFrame,
     controls: DataFrame | None,
@@ -227,10 +210,15 @@ def route_records_relational(
     # full record set; measured ~2× the query's cost at sf0.1). The table is
     # per-batch cardinality — tiny at any scale — so a localCheckpoint
     # (the same lineage-control trade as dedup_clusters) materializes it once
-    # and both consumers read the stored rows; see _materialize for the
-    # eager-vs-lazy choice. This is the plan's ONLY materialization (r16):
-    # _outcomes no longer checkpoints the control aggregate separately.
-    outcomes = _materialize(_outcomes(records, controls, delay_ms, ctrl_agg))
+    # and both consumers read the stored rows. Lazy, not eager: the
+    # interleaved sf0.1 A/B (BASELINE.md) showed eager's serial
+    # driver-blocking checkpoint job is pure fixed overhead, while lazy folds
+    # the materialization into the first consuming job. This is the plan's
+    # ONLY materialization (r16): _outcomes no longer checkpoints the
+    # control aggregate separately.
+    outcomes = materialize(
+        _outcomes(records, controls, delay_ms, ctrl_agg), eager=False
+    )
     # outcomes carries one row per known batch (known = TRUE), so a single
     # broadcast join both marks known batches and attaches their terminal
     # times — no separate known-ids join over the record stream. Unknown

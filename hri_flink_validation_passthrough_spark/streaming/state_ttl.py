@@ -5,22 +5,20 @@ VERIFIED operator beyond the passthrough batch lifecycle (reference contract:
 the completion-delay timer in hri-flink-validation's batch notification flow,
 ``PassthroughStreamingJob.java`` wiring at reference
 ``src/main/java/.../PassthroughStreamingJob.java:110-117``; its spec drives
-the timer at ``flink_validation_passthrough_spec.rb:202``). Two operators,
-each implemented on BOTH stateful backends:
+the timer at ``flink_validation_passthrough_spec.rb:202``). Each operator
+runs on ``applyInPandasWithState`` (GroupState + ProcessingTimeTimeout), the
+same stateful seam as ``topology.build_routed_stream``:
 
 - ``stream_state_ttl_metrics`` — per-key aggregate state with an idle-TTL
   eviction timer: every arriving row re-arms the key's timer; when a key
   goes idle for ``ttl_ms`` the timer fires, the key EMITS its aggregate and
-  its state is evicted (``state.clear()`` / ``state.remove()``). This is the
+  its state is evicted (``state.remove()``). This is the
   sessionization-by-inactivity shape (user session rollups, connection
   accounting) — emit-on-eviction, exactly one output row per key per idle
-  period. The transformWithState path ALSO passes ``ttlDurationMs`` to the
-  value state (engine-side TTL, set far above the flush timer) so the Spark 4
-  TTL-config surface is exercised; the flush itself must be timer-driven
-  because engine TTL eviction is silent — there is no on-evict callback to
-  emit from.
-- ``stream_windowed_topk_eviction`` — per-key bounded top-k list state with
-  CAPACITY eviction: each batch merges arrivals into the key's ListState,
+  period. The flush is timer-driven because it must emit: silent engine-side
+  TTL eviction has no on-evict callback to emit from.
+- ``stream_windowed_topk_eviction`` — per-key bounded top-k state with
+  CAPACITY eviction: each batch merges arrivals into the key's top-k list,
   sorts, and truncates to K (evicting dominated rows from state — state size
   is O(K) per key no matter how much data streams through); an idle timer
   flushes the surviving K rows with ranks and evicts the key.
@@ -38,8 +36,8 @@ At 100 TB: keys are the unit of state; both operators keep O(1)/O(K) state
 per key and emit once per idle period, so state size tracks LIVE key
 cardinality, not stream volume. The users set kept per bucket for the
 n_users metric is the one component that grows with key fanout — the
-docstring'd scale path swaps it for MapState (per-user subkeys) or an HLL
-register when per-key user cardinality is unbounded.
+scale path swaps it for an HLL register when per-key user cardinality is
+unbounded.
 """
 
 from __future__ import annotations
@@ -62,20 +60,18 @@ from ..materialize import cut
 QUERIES: dict[str, QuerySpec] = {}
 
 TTL_MS = 1500  # idle-flush timer: fires after the finite replay drains
-ENGINE_TTL_MS = 3_600_000  # Spark 4 state TTL (exercised, never fires here)
 TOPK_K = 8
 N_BUCKETS = 10
 
 _METRICS_STATE_SCHEMA = (
     "n_events long, sum_cents long, min_ts long, max_ts long, "
-    "users_json string, deadline long"
+    "users_json string"
 )
 _METRICS_OUT_SCHEMA = (
     "bucket long, n_events long, n_users long, sum_cents long, "
     "min_ts long, max_ts long"
 )
-_TOPK_STATE_ROW = "event_id long, value double, ts long"
-_TOPK_GS_STATE_SCHEMA = "items_json string, deadline long"
+_TOPK_STATE_SCHEMA = "items_json string"
 _TOPK_OUT_SCHEMA = "event_type string, rank int, event_id long, value double, ts long"
 
 
@@ -135,7 +131,7 @@ def _empty_metrics() -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Backend A: applyInPandasWithState (GroupState + ProcessingTimeTimeout)
+# State functions (GroupState + ProcessingTimeTimeout)
 # ---------------------------------------------------------------------------
 def metrics_with_group_state(ttl_ms: int = TTL_MS):
     """(key, pdf_iter, state) fn: idle-TTL aggregate with emit-on-eviction."""
@@ -168,7 +164,6 @@ def _encode_metrics(st: dict) -> tuple:
         st["min_ts"],
         st["max_ts"],
         json.dumps(sorted(st["users"])),
-        None,
     )
 
 
@@ -201,7 +196,7 @@ def topk_with_group_state(k: int = TOPK_K, ttl_ms: int = TTL_MS):
                 for e, v, t in zip(pdf["event_id"], pdf["value"], pdf["ts_us"])
             )
         items = _truncate_topk(items, k)
-        state.update((json.dumps(items), None))
+        state.update((json.dumps(items),))
         state.setTimeoutDuration(ttl_ms)
 
     return fn
@@ -224,191 +219,11 @@ def _topk_rows(key, items: list) -> pd.DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Backend B: transformWithStateInPandas (Spark 4 — ValueState/ListState with
-# ttlDurationMs + registered timers)
+# Stream builders
 # ---------------------------------------------------------------------------
-try:
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    class TtlMetricsProcessor(StatefulProcessor):
-        """ValueState (with engine ttlDurationMs) + an idle-flush timer that
-        emits the key's aggregate and clears its state."""
-
-        def __init__(self, ttl_ms: int = TTL_MS):
-            self.ttl_ms = ttl_ms
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.state = handle.getValueState(
-                "ttl_metrics", _METRICS_STATE_SCHEMA, ttlDurationMs=ENGINE_TTL_MS
-            )
-
-        def handleInputRows(
-            self, key, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            stored = self.state.get()
-            st = _decode_metrics(stored) if stored is not None else _empty_metrics()
-            old_deadline = stored[5] if stored is not None else None
-            for pdf in rows:
-                if len(pdf):
-                    _merge_metrics(st, pdf)
-            deadline = timerValues.getCurrentProcessingTimeInMs() + self.ttl_ms
-            if old_deadline is not None:
-                self.handle.deleteTimer(old_deadline)
-            self.handle.registerTimer(deadline)
-            enc = _encode_metrics(st)
-            self.state.update(enc[:5] + (deadline,))
-            return iter(())
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ) -> Iterator[pd.DataFrame]:
-            stored = self.state.get()
-            if stored is None:  # stale timer after eviction: no-op
-                return
-            st = _decode_metrics(stored)
-            self.state.clear()  # EVICTION
-            yield _metrics_row(key[0], st)
-
-        def close(self) -> None:
-            pass
-
-    class TopKEvictionProcessor(StatefulProcessor):
-        """ListState bounded at K rows (capacity eviction on every merge) +
-        an idle-flush timer; the flush deadline rides in a ValueState."""
-
-        def __init__(self, k: int = TOPK_K, ttl_ms: int = TTL_MS):
-            self.k = k
-            self.ttl_ms = ttl_ms
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.items = handle.getListState(
-                "topk_items", _TOPK_STATE_ROW, ttlDurationMs=ENGINE_TTL_MS
-            )
-            self.deadline = handle.getValueState("topk_deadline", "deadline long")
-
-        def handleInputRows(
-            self, key, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            items = [
-                [int(e), float(v), int(t)] for e, v, t in self.items.get()
-            ]
-            for pdf in rows:
-                items.extend(
-                    [int(e), float(v), int(t)]
-                    for e, v, t in zip(pdf["event_id"], pdf["value"], pdf["ts_us"])
-                )
-            items = _truncate_topk(items, self.k)
-            self.items.put([tuple(r) for r in items])
-            old = self.deadline.get()
-            if old is not None:
-                self.handle.deleteTimer(old[0])
-            deadline = timerValues.getCurrentProcessingTimeInMs() + self.ttl_ms
-            self.handle.registerTimer(deadline)
-            self.deadline.update((deadline,))
-            return iter(())
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ) -> Iterator[pd.DataFrame]:
-            items = [[int(e), float(v), int(t)] for e, v, t in self.items.get()]
-            if not items:
-                return
-            self.items.clear()
-            self.deadline.clear()
-            yield _topk_rows(key[0], items)
-
-        def close(self) -> None:
-            pass
-
-except ImportError:  # pragma: no cover - older Spark
-    TtlMetricsProcessor = None  # type: ignore[assignment]
-    TopKEvictionProcessor = None  # type: ignore[assignment]
-
-
-# ---------------------------------------------------------------------------
-# Stream builders (backend dispatch — same seam as topology.build_routed_stream)
-# ---------------------------------------------------------------------------
-def _use_tws(prefer: bool | None) -> bool:
-    from .topology import _protobuf_available
-
-    if prefer is None:
-        return _protobuf_available() and TtlMetricsProcessor is not None
-    return prefer
-
-
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-
-
-def _tws_session(spark: SparkSession) -> None:
-    from ..protobuf_shim import ensure_protobuf
-
-    if not ensure_protobuf(spark) or TtlMetricsProcessor is None:
-        raise RuntimeError(
-            "transformWithStateInPandas requested but no google.protobuf "
-            "runtime reaches this session's Python workers"
-        )
-    _stash_and_set_rocksdb_provider(spark)
-
-
-def _stash_and_set_rocksdb_provider(spark: SparkSession) -> None:
-    """transformWithState requires the RocksDB provider, but the conf is
-    session-wide: without a restore, every LATER streaming query in the
-    session (including group_state-backed ones) would silently switch
-    provider too (ADVICE r6). Stash the prior value; restore_state_provider
-    puts it back once the TWS query has stopped (the conf is read lazily at
-    state-store init, so it must stay set for the query's whole lifetime —
-    restoring right after .start() would be a race). Shared with
-    topology.build_routed_stream's TWS branch (r11 self-review found it
-    setting the conf raw)."""
-    if not hasattr(spark, "_hri_prev_state_provider"):
-        try:
-            prev = spark.conf.get(_PROVIDER_CONF)
-        except Exception:
-            prev = None
-        spark._hri_prev_state_provider = prev
-    spark.conf.set(
-        _PROVIDER_CONF,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-
-
-def restore_state_provider(spark: SparkSession) -> None:
-    """Undo _tws_session's provider switch (idempotent; no-op when the
-    builder took the group_state path and never changed the conf)."""
-    if not hasattr(spark, "_hri_prev_state_provider"):
-        return
-    prev = spark._hri_prev_state_provider
-    del spark._hri_prev_state_provider
-    if prev is None:
-        spark.conf.unset(_PROVIDER_CONF)
-    else:
-        spark.conf.set(_PROVIDER_CONF, prev)
-
-
-def build_ttl_metrics_stream(
-    keyed: DataFrame,
-    ttl_ms: int = TTL_MS,
-    prefer_transform_with_state: bool | None = None,
-) -> DataFrame:
+def build_ttl_metrics_stream(keyed: DataFrame, ttl_ms: int = TTL_MS) -> DataFrame:
     """keyed: streaming DF with (bucket, user_id, value, ts_us)."""
-    grouped = keyed.groupBy("bucket")
-    if _use_tws(prefer_transform_with_state):
-        _tws_session(keyed.sparkSession)
-        return grouped.transformWithStateInPandas(
-            TtlMetricsProcessor(ttl_ms),
-            outputStructType=_METRICS_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="processingTime",
-        )
-    return grouped.applyInPandasWithState(
+    return keyed.groupBy("bucket").applyInPandasWithState(
         metrics_with_group_state(ttl_ms),
         outputStructType=_METRICS_OUT_SCHEMA,
         stateStructType=_METRICS_STATE_SCHEMA,
@@ -418,25 +233,13 @@ def build_ttl_metrics_stream(
 
 
 def build_topk_eviction_stream(
-    keyed: DataFrame,
-    k: int = TOPK_K,
-    ttl_ms: int = TTL_MS,
-    prefer_transform_with_state: bool | None = None,
+    keyed: DataFrame, k: int = TOPK_K, ttl_ms: int = TTL_MS
 ) -> DataFrame:
     """keyed: streaming DF with (event_type, event_id, value, ts_us)."""
-    grouped = keyed.groupBy("event_type")
-    if _use_tws(prefer_transform_with_state):
-        _tws_session(keyed.sparkSession)
-        return grouped.transformWithStateInPandas(
-            TopKEvictionProcessor(k, ttl_ms),
-            outputStructType=_TOPK_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="processingTime",
-        )
-    return grouped.applyInPandasWithState(
+    return keyed.groupBy("event_type").applyInPandasWithState(
         topk_with_group_state(k, ttl_ms),
         outputStructType=_TOPK_OUT_SCHEMA,
-        stateStructType=_TOPK_GS_STATE_SCHEMA,
+        stateStructType=_TOPK_STATE_SCHEMA,
         outputMode="append",
         timeoutConf="ProcessingTimeTimeout",
     )
@@ -513,7 +316,6 @@ def _run_until_rows(
         return out
     finally:
         q.stop()
-        restore_state_provider(spark)
         import shutil
 
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -534,19 +336,15 @@ def _run_until_rows(
     GROUP BY 1
     """,
     doc="Keyed aggregate state with IDLE-TTL EVICTION through the real "
-    "streaming engine, on whichever stateful backend the session supports "
-    "(both are tested): every arrival re-arms the key's processing-time "
+    "streaming engine (applyInPandasWithState): every arrival re-arms the "
+    "key's processing-time "
     "timer; after ttl_ms of silence the timer fires, the key emits its "
     "rollup and its state is cleared. The emitted values are all "
     "order-independent (counts, exact int64 cent sums, min/max ts, user "
     "sets), so the oracle is a plain batch GROUP BY. Emit-on-eviction "
     "session accounting; state is O(live keys), not O(stream).",
 )
-def stream_state_ttl_metrics(
-    spark: SparkSession,
-    sf_dir: str,
-    prefer_transform_with_state: bool | None = None,
-) -> DataFrame:
+def stream_state_ttl_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     from ..session import load_table
 
@@ -563,9 +361,7 @@ def stream_state_ttl_metrics(
     )
     out = _run_until_rows(
         spark,
-        build_ttl_metrics_stream(
-            keyed, prefer_transform_with_state=prefer_transform_with_state
-        ),
+        build_ttl_metrics_stream(keyed),
         n_keys,
         "ttlmet",
     )
@@ -598,19 +394,15 @@ def stream_state_ttl_metrics(
     )
     WHERE rn <= {TOPK_K}
     """,
-    doc="Streaming top-k with CAPACITY EVICTION in list state: each "
-    "microbatch merges arrivals into the key's ListState, sorts (value "
+    doc="Streaming top-k with CAPACITY EVICTION in keyed state: each "
+    "microbatch merges arrivals into the key's top-k list, sorts (value "
     "DESC, event_id tiebreak) and truncates to K — dominated rows are "
     "evicted from state immediately, so state is O(K) per key regardless "
     "of stream volume; an idle timer flushes the survivors with ranks and "
     "clears the key. Sort-merge is order-independent, so the oracle is "
     "the batch row_number() top-k.",
 )
-def stream_windowed_topk_eviction(
-    spark: SparkSession,
-    sf_dir: str,
-    prefer_transform_with_state: bool | None = None,
-) -> DataFrame:
+def stream_windowed_topk_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     from ..session import load_table
 
@@ -628,9 +420,7 @@ def stream_windowed_topk_eviction(
     )
     out = _run_until_rows(
         spark,
-        build_topk_eviction_stream(
-            keyed, prefer_transform_with_state=prefer_transform_with_state
-        ),
+        build_topk_eviction_stream(keyed),
         int(n_expected),
         "topkev",
     )
@@ -646,8 +436,7 @@ def stream_windowed_topk_eviction(
 
 
 # ---------------------------------------------------------------------------
-# MapState per-subkey accounting (completes the state-type matrix:
-# ValueState = ttl metrics, ListState = top-k, MapState = this)
+# Per-subkey accounting: a user_id -> count map inside each bucket key
 # ---------------------------------------------------------------------------
 _MAP_OUT_SCHEMA = (
     "bucket long, n_users long, n_events long, max_user_events long"
@@ -669,8 +458,8 @@ def _user_activity_row(key, counts: dict) -> pd.DataFrame:
 
 
 def user_activity_with_group_state(ttl_ms: int = TTL_MS):
-    """group_state twin: the per-user map rides the state struct as JSON
-    (GroupState has no map primitive — the JSON dict is the same shape)."""
+    """(key, pdf_iter, state) fn: the per-user map rides the state struct as
+    JSON (GroupState has no map primitive) and flushes on the idle timer."""
 
     def fn(key, pdf_iter, state) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
@@ -689,89 +478,18 @@ def user_activity_with_group_state(ttl_ms: int = TTL_MS):
         for pdf in pdf_iter:
             for u, c in pdf.groupby("user_id").size().items():
                 counts[int(u)] = counts.get(int(u), 0) + int(c)
-        state.update((json.dumps(counts), None))
+        state.update((json.dumps(counts),))
         state.setTimeoutDuration(ttl_ms)
 
     return fn
 
 
-try:
-    from pyspark.sql.streaming.stateful_processor import (  # noqa: F811
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    class UserActivityMapProcessor(StatefulProcessor):
-        """MapState keyed by user_id inside each bucket key — per-subkey
-        updateValue/getValue/iterator, engine TTL on the map, idle-flush
-        timer like the other processors."""
-
-        def __init__(self, ttl_ms: int = TTL_MS):
-            self.ttl_ms = ttl_ms
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.per_user = handle.getMapState(
-                "per_user", "user_id long", "n long", ttlDurationMs=ENGINE_TTL_MS
-            )
-            self.deadline = handle.getValueState("ua_deadline", "deadline long")
-
-        def handleInputRows(
-            self, key, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in rows:
-                for u, c in pdf.groupby("user_id").size().items():
-                    cur = self.per_user.getValue((int(u),))
-                    base = int(cur[0]) if cur is not None else 0
-                    self.per_user.updateValue((int(u),), (base + int(c),))
-            old = self.deadline.get()
-            if old is not None:
-                self.handle.deleteTimer(old[0])
-            deadline = timerValues.getCurrentProcessingTimeInMs() + self.ttl_ms
-            self.handle.registerTimer(deadline)
-            self.deadline.update((deadline,))
-            return iter(())
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ) -> Iterator[pd.DataFrame]:
-            counts = {
-                int(k[0]): int(v[0]) for k, v in self.per_user.iterator()
-            }
-            if not counts:
-                return
-            self.per_user.clear()
-            self.deadline.clear()
-            yield _user_activity_row(key[0], counts)
-
-        def close(self) -> None:
-            pass
-
-except ImportError:  # pragma: no cover - older Spark
-    UserActivityMapProcessor = None  # type: ignore[assignment]
-
-
-def build_user_activity_stream(
-    keyed: DataFrame,
-    ttl_ms: int = TTL_MS,
-    prefer_transform_with_state: bool | None = None,
-) -> DataFrame:
+def build_user_activity_stream(keyed: DataFrame, ttl_ms: int = TTL_MS) -> DataFrame:
     """keyed: streaming DF with (bucket, user_id)."""
-    grouped = keyed.groupBy("bucket")
-    if _use_tws(prefer_transform_with_state):
-        _tws_session(keyed.sparkSession)
-        return grouped.transformWithStateInPandas(
-            UserActivityMapProcessor(ttl_ms),
-            outputStructType=_MAP_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="processingTime",
-        )
-    return grouped.applyInPandasWithState(
+    return keyed.groupBy("bucket").applyInPandasWithState(
         user_activity_with_group_state(ttl_ms),
         outputStructType=_MAP_OUT_SCHEMA,
-        stateStructType="counts_json string, deadline long",
+        stateStructType="counts_json string",
         outputMode="append",
         timeoutConf="ProcessingTimeTimeout",
     )
@@ -791,22 +509,13 @@ def build_user_activity_stream(
            CAST(max(n) AS BIGINT) AS max_user_events
     FROM per_user GROUP BY bucket
     """,
-    doc="Per-subkey keyed state through MAP state — the third state "
-    "primitive (ValueState = ttl metrics, ListState = top-k eviction, "
-    "MapState = this): each bucket key holds a user_id -> count map "
-    "updated per arrival (updateValue/getValue; engine ttlDurationMs on "
-    "the map), flushed by the idle timer into per-bucket user-activity "
-    "stats. The group_state twin carries the same map as JSON in the "
-    "state struct. All emitted values are order-independent, so the "
-    "oracle is the two-level batch GROUP BY. At scale MapState is the "
-    "primitive that keeps per-subkey updates O(1) instead of "
-    "rewrite-the-whole-blob.",
+    doc="Per-subkey keyed state: each bucket key holds a user_id -> count "
+    "map (carried as JSON in the GroupState struct) updated per arrival "
+    "and flushed by the idle timer into per-bucket user-activity stats. "
+    "All emitted values are order-independent, so the oracle is the "
+    "two-level batch GROUP BY.",
 )
-def stream_user_activity_mapstate(
-    spark: SparkSession,
-    sf_dir: str,
-    prefer_transform_with_state: bool | None = None,
-) -> DataFrame:
+def stream_user_activity_mapstate(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     from ..session import load_table
 
@@ -819,9 +528,7 @@ def stream_user_activity_mapstate(
     keyed = _events_keyed_stream(spark, sf_dir).select("bucket", "user_id")
     out = _run_until_rows(
         spark,
-        build_user_activity_stream(
-            keyed, prefer_transform_with_state=prefer_transform_with_state
-        ),
+        build_user_activity_stream(keyed),
         n_keys,
         "uamap",
     )

@@ -6,19 +6,13 @@ shape: two ``readStream``s → normalize to the common envelope → ``unionByNam
 → keyed stateful operator → ``foreachBatch`` fan-out to out/invalid/
 notification.
 
-Two interchangeable stateful implementations (same pure core,
-operators/batch_state.py):
-
-- ``BatchLifecycleProcessor`` — ``transformWithStateInPandas`` (Spark 4 API:
-  value state + explicit timers). Preferred on clusters; requires the
-  ``protobuf`` Python package, which this container lacks.
-- ``lifecycle_with_group_state`` — ``applyInPandasWithState`` (Spark 3.4+
-  API: GroupState + ProcessingTimeTimeout). No extra deps; the active path
-  here. Timeout semantics: Spark clears a key's timeout whenever the
-  function runs for that key, so the deadline is re-armed from state on
-  every invocation.
-
-``build_routed_stream`` picks automatically (probe protobuf).
+One stateful implementation over the pure core (operators/batch_state.py):
+``lifecycle_with_group_state`` under ``applyInPandasWithState`` (GroupState +
+ProcessingTimeTimeout). Timeout semantics: Spark clears a key's timeout
+whenever the function runs for that key, so the deadline is re-armed from
+state on every invocation. A batch id that is still unknown after its
+trigger keeps no state row: its records route to invalid without touching a
+counter, and a missing row rebuilds the identical fresh ``BatchState``.
 
 Semantics deltas vs Flink, documented per SURVEY.md §3.3/§2C.6:
 - timers fire at microbatch boundaries: ``completed`` lands at the first
@@ -26,8 +20,8 @@ Semantics deltas vs Flink, documented per SURVEY.md §3.3/§2C.6:
 - sinks are at-least-once per topic (no cross-topic transaction); replays
   are idempotent by (key, batchId) for downstream dedup.
 
-Scale posture: state is one tiny row per batchId (RocksDB provider for large
-key counts); the shuffle is one hash exchange on batchId — exactly the
+Scale posture: state is one tiny row per known batchId (RocksDB provider for
+large key counts); the shuffle is one hash exchange on batchId — exactly the
 reference's ``keyBy``; ``maxOffsetsPerTrigger`` bounds per-trigger work. A
 single hot batch serializes on one task, same as in Flink. State partitions =
 cores (``session.prepare``; the harness replays cap them at 8), fixed at the
@@ -65,16 +59,6 @@ _STATE_SCHEMA = "state_json STRING"
 TRIGGER_GROUP_WARN_ROWS = 5_000_000
 
 
-def _protobuf_available() -> bool:
-    """Auto-detection gate for the transformWithStateInPandas backend: a
-    REAL pip-installed protobuf only. The filesystem shim (``protobuf_shim``)
-    never flips the default — callers opt in with
-    ``prefer_transform_with_state=True`` after preparing the env."""
-    from ..protobuf_shim import have_pip_protobuf
-
-    return have_pip_protobuf()
-
-
 def _sorted_rows(pdf: pd.DataFrame) -> pd.DataFrame:
     """The replay ordering rule (controls before data at equal time, then
     seq) — pandas twin of run_pipeline_batch's kind_rank column; a change
@@ -108,9 +92,6 @@ def _apply_rows(machine, st, pdf: pd.DataFrame, now: int, outs: Outputs) -> None
             )
 
 
-# ---------------------------------------------------------------------------
-# Path A: applyInPandasWithState (GroupState; no extra deps — active here)
-# ---------------------------------------------------------------------------
 def _headers_to_json(h) -> str | None:
     """Encode a routed row's header list (``[{key, value-bytes}]`` dicts) as
     the SAME JSON form Spark's ``to_json``/``from_json`` use for
@@ -218,101 +199,20 @@ def lifecycle_with_group_state(
             if rows:
                 frames.append(pd.DataFrame(rows, columns=_OUT_COLS))
 
-        state.update((json.dumps(st.to_dict()),))
-        # Spark clears the key's timeout each time this function runs —
-        # re-arm from state unconditionally.
-        if st.deadline_ms is not None:
-            state.setTimeoutDuration(max(1, st.deadline_ms - now))
+        if st.known:
+            state.update((json.dumps(st.to_dict()),))
+            # Spark clears the key's timeout each time this function runs —
+            # re-arm from state unconditionally.
+            if st.deadline_ms is not None:
+                state.setTimeoutDuration(max(1, st.deadline_ms - now))
+        else:
+            # an unknown (garbage) batch id keeps no row: its records went
+            # to invalid without touching a counter, so the row would equal
+            # a fresh BatchState and only grow the store
+            state.remove()
         yield from frames
 
     return fn
-
-
-# ---------------------------------------------------------------------------
-# Path B: transformWithStateInPandas (Spark 4 timers; needs protobuf)
-# ---------------------------------------------------------------------------
-try:  # the import itself is safe; instantiation needs protobuf at runtime
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    class BatchLifecycleProcessor(StatefulProcessor):
-        """Keyed batch lifecycle (ops 5-13) with explicit processing-time
-        timers. A straggler overage clears the deadline in state, and
-        ``on_timer`` re-checks it, so a stale timer firing is a no-op."""
-
-        def __init__(
-            self,
-            completion_delay_ms: int = DEFAULT_BATCH_COMPLETION_DELAY_MS,
-            validator=passthrough_validator,
-            lookup=None,
-        ):
-            self.delay_ms = completion_delay_ms
-            self.validator = validator
-            self.lookup = lookup
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.state = handle.getValueState("batch_state", _STATE_SCHEMA)
-            self.machine = BatchStateMachine(
-                self.delay_ms, self.validator, self.lookup
-            )
-
-        def _load(self, batch_id: str | None) -> BatchState:
-            v = self.state.get()
-            if v is None:
-                return BatchState(batch_id=batch_id or "")
-            return BatchState.from_dict(json.loads(v[0]))
-
-        def _save(self, st: BatchState) -> None:
-            self.state.update((json.dumps(st.to_dict()),))
-
-        def handleInputRows(
-            self, key, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            batch_id = key[0] if key is not None else None
-            st = self._load(batch_id)
-            old_deadline = st.deadline_ms
-            now = timerValues.getCurrentProcessingTimeInMs()
-            outs = Outputs()
-            # whole-trigger ordering, not per-chunk (see the group_state
-            # path's comment)
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if chunks:
-                whole = (
-                    pd.concat(chunks, ignore_index=True)
-                    if len(chunks) > 1 else chunks[0]
-                )
-                _apply_rows(self.machine, st, whole, now, outs)
-            if st.deadline_ms != old_deadline:
-                if old_deadline is not None:
-                    self.handle.deleteTimer(old_deadline)
-                if st.deadline_ms is not None:
-                    self.handle.registerTimer(st.deadline_ms)
-            self._save(st)
-            out_rows = outputs_to_rows(outs, batch_id)
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=_OUT_COLS)
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ) -> Iterator[pd.DataFrame]:
-            batch_id = key[0] if key is not None else None
-            st = self._load(batch_id)
-            outs = self.machine.on_timer(st, expiredTimerInfo.getExpiryTimeInMs())
-            self._save(st)
-            out_rows = outputs_to_rows(outs, batch_id)
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=_OUT_COLS)
-
-        def close(self) -> None:
-            pass
-
-except ImportError:  # pragma: no cover - older Spark
-    BatchLifecycleProcessor = None  # type: ignore[assignment]
 
 
 # ---------------------------------------------------------------------------
@@ -324,7 +224,6 @@ def build_routed_stream(
     completion_delay_ms: int = DEFAULT_BATCH_COMPLETION_DELAY_MS,
     validator=passthrough_validator,
     lookup=None,
-    prefer_transform_with_state: bool | None = None,
     per_trigger_bound: int | str | None = None,
 ) -> DataFrame:
     """records/notifications: STREAMING DataFrames already in record/
@@ -378,41 +277,6 @@ def build_routed_stream(
             "must be 'source-option' or a positive int"
         )
     env = control_to_envelope(notifications).unionByName(data_to_envelope(records))
-    grouped = env.groupBy("batch_id")
-
-    use_tws = (
-        prefer_transform_with_state
-        if prefer_transform_with_state is not None
-        else (_protobuf_available() and BatchLifecycleProcessor is not None)
-    )
-    if use_tws:
-        from ..protobuf_shim import ensure_protobuf
-
-        spark = records.sparkSession
-        if BatchLifecycleProcessor is None:
-            raise RuntimeError(
-                "transformWithStateInPandas requested but this pyspark has "
-                "no stateful_processor API (needs Spark 4+)"
-            )
-        if not ensure_protobuf(spark):
-            raise RuntimeError(
-                "transformWithStateInPandas requested but no google.protobuf "
-                "runtime reaches this session's Python workers (see "
-                "protobuf_shim.pre_jvm_env)"
-            )
-        # stash-then-set, NEVER a raw session-wide set: without the stash,
-        # every later streaming query in the session silently inherits the
-        # RocksDB provider (ADVICE r6; state_ttl.restore_state_provider
-        # undoes it once the TWS query has stopped)
-        from .state_ttl import _stash_and_set_rocksdb_provider
-
-        _stash_and_set_rocksdb_provider(spark)
-        return grouped.transformWithStateInPandas(
-            BatchLifecycleProcessor(completion_delay_ms, validator, lookup),
-            outputStructType=ROUTED_SCHEMA,
-            outputMode="append",
-            timeMode="processingTime",
-        )
     fast = validator is passthrough_validator and lookup is None
     if fast:
         # Encoded boundary for the streaming fast path (r15, guide §4 —
@@ -448,7 +312,7 @@ def build_routed_stream(
             "value",
             F.from_json("headers", HEADER_TYPE).alias("headers"),
         )
-    return grouped.applyInPandasWithState(
+    return env.groupBy("batch_id").applyInPandasWithState(
         lifecycle_with_group_state(completion_delay_ms, validator, lookup),
         outputStructType=ROUTED_SCHEMA,
         stateStructType=_STATE_SCHEMA,

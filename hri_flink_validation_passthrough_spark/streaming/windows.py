@@ -505,8 +505,8 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
     doc="The reference pipeline itself through the REAL streaming engine: "
     "file sources -> envelope union -> keyed lifecycle state machine "
-    "(applyInPandasWithState / transformWithState, processing-time "
-    "completion timers) -> memory sink, then the same per-batch summary as "
+    "(applyInPandasWithState, processing-time completion timers) -> "
+    "memory sink, then the same per-batch summary as "
     "the batch replay. Same oracle as passthrough_route, so the streaming "
     "topology, the batch state machine, the relational plan, and DuckDB "
     "all agree on the happy path.",

@@ -6,13 +6,6 @@ import pytest
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
-# Before ANY SparkSession boots: make a google.protobuf runtime reachable by
-# JVM-launched Python processes so the transformWithStateInPandas backend is
-# testable (no-op when protobuf is pip-installed / no fallback exists).
-from hri_flink_validation_passthrough_spark.protobuf_shim import pre_jvm_env  # noqa: E402
-
-pre_jvm_env()
-
 SF_SMALL = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_SF_ORACLE", "/root/testdata/sf0.01")
 

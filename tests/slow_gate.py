@@ -61,27 +61,18 @@ SLOW_NODEIDS = frozenset({
     "tests/test_round10_ops.py::test_stream_maintenance_after_retrain_serves_rebalanced_index",
     "tests/test_round10_ops.py::test_stream_maintenance_cleans_work_dir",
     "tests/test_round10_ops.py::test_upsert_records_drift_stats",
-    "tests/test_round6_ops.py::test_stream_state_ttl_metrics_both_backends[tws]",
-    "tests/test_round6_ops.py::test_stream_topk_eviction_both_backends[tws]",
-    "tests/test_round6_ops.py::test_ttl_eviction_actually_clears_state[group_state]",
-    "tests/test_round6_ops.py::test_ttl_eviction_actually_clears_state[tws]",
+    "tests/test_round6_ops.py::test_ttl_eviction_actually_clears_state",
     "tests/test_round6_ops.py::test_ttl_metrics_survive_checkpoint_restart",
     "tests/test_round7_ops.py::test_hll_integer_harmonic_sum_is_exact",
     "tests/test_round8_ops.py::test_ivf_upsert_index_compaction_roundtrip",
     "tests/test_streaming.py::test_passthrough_route_auto_bounded_replay",
-    "tests/test_streaming.py::test_streaming_data_before_started_at_volume[group_state]",
-    "tests/test_streaming.py::test_streaming_data_before_started_at_volume[tws]",
-    "tests/test_streaming.py::test_streaming_lifecycle_end_to_end[group_state]",
-    "tests/test_streaming.py::test_streaming_lifecycle_end_to_end[tws]",
-    "tests/test_streaming.py::test_streaming_multi_batch_interleaving[group_state]",
-    "tests/test_streaming.py::test_streaming_multi_batch_interleaving[tws]",
-    "tests/test_streaming.py::test_streaming_terminate_drops_later_records[group_state]",
-    "tests/test_streaming.py::test_streaming_terminate_drops_later_records[tws]",
+    "tests/test_streaming.py::test_streaming_data_before_started_at_volume",
+    "tests/test_streaming.py::test_streaming_lifecycle_end_to_end",
+    "tests/test_streaming.py::test_streaming_multi_batch_interleaving",
+    "tests/test_streaming.py::test_streaming_terminate_drops_later_records",
     "tests/test_streaming.py::test_streaming_terminate_mid_trigger_splits_by_event_order",
-    "tests/test_streaming.py::test_streaming_unknown_batch_and_overcount[group_state]",
-    "tests/test_streaming.py::test_streaming_unknown_batch_and_overcount[tws]",
-    "tests/test_streaming_restart.py::test_restart_from_checkpoint_no_loss_no_dup[group_state]",
-    "tests/test_streaming_restart.py::test_restart_from_checkpoint_no_loss_no_dup[tws]",
+    "tests/test_streaming.py::test_streaming_unknown_batch_and_overcount",
+    "tests/test_streaming_restart.py::test_restart_from_checkpoint_no_loss_no_dup",
     "tests/test_streaming_watermark.py::test_watermark_closes_windows_and_drops_late",
     "tests/test_trained_pq.py::test_durable_ivfpq_decodes_from_sidecar_alone",
     "tests/test_trained_pq.py::test_trained_codebook_shrinks_recon_err_on_driver_corpus",

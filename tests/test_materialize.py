@@ -5,8 +5,7 @@ The localCheckpoint convention sites now consult ONE module-level switch
 the switch honest: every arm must be a pure materialization strategy —
 frame-equal results on representative touched queries (a multi-consumer
 aggregate cut, an iterative lineage-truncating loop, and a streaming
-memory-sink detach) — and the "persist" arm must honor its leak-free
-release contract.
+memory-sink detach) — and every arm must cut lineage.
 """
 
 from __future__ import annotations
@@ -18,12 +17,10 @@ from hri_flink_validation_passthrough_spark import materialize as M
 
 @pytest.fixture
 def policy_guard():
-    """Restore the policy (and release any pinned handles) after each test
-    — a leaked 'persist'/'none' policy would skew every later test."""
+    """Restore the policy after each test — a leaked 'reliable' policy
+    would skew every later test."""
     before = M.POLICY
     yield
-    while M.PINNED:
-        M.PINNED.pop().unpersist()
     M.POLICY = before
 
 
@@ -41,18 +38,13 @@ def test_policy_arms_frame_equal_on_multi_consumer_cut(spark, policy_guard):
     sf = "/root/testdata/sf0.001"
     M.POLICY = "ckpt"
     want = _rows(column_profile_stats(spark, sf))
-    for arm in ("reliable", "persist", "none"):
-        M.POLICY = arm
-        got = _rows(column_profile_stats(spark, sf))
-        assert got == want, f"arm {arm} diverged"
-        M.release_pinned()
+    M.POLICY = "reliable"
+    assert _rows(column_profile_stats(spark, sf)) == want
 
 
 def test_policy_arms_frame_equal_on_iterative_loop(spark, policy_guard):
     """The transitive-closure loop truncates lineage per round through
-    materialize(iterative=True); the reliable arm must agree, and the
-    non-truncating arms must FALL BACK to a truncating one (geometric
-    lineage growth is the r6-diagnosed driver OOM) while still agreeing."""
+    materialize(iterative=True); the reliable arm must agree."""
     from hri_flink_validation_passthrough_spark.plans.relational import (
         QUERIES,
     )
@@ -61,10 +53,8 @@ def test_policy_arms_frame_equal_on_iterative_loop(spark, policy_guard):
     sf = "/root/testdata/sf0.001"
     M.POLICY = "ckpt"
     want = _rows(fn(spark, sf))
-    for arm in ("reliable", "persist", "none"):
-        M.POLICY = arm
-        assert _rows(fn(spark, sf)) == want, f"arm {arm} diverged"
-        M.release_pinned()
+    M.POLICY = "reliable"
+    assert _rows(fn(spark, sf)) == want
 
 
 def test_policy_arms_frame_equal_on_memory_sink_detach(spark, policy_guard):
@@ -78,61 +68,30 @@ def test_policy_arms_frame_equal_on_memory_sink_detach(spark, policy_guard):
     sf = "/root/testdata/sf0.001"
     M.POLICY = "ckpt"
     want = _rows(fn(spark, sf))
-    # incl. "none": eager=True declares detach semantics, so the no-op arm
-    # must fall back to a materializing one instead of breaking the read
-    # of a dropped memory-sink view (r13 self-review)
-    for arm in ("reliable", "persist", "none"):
-        M.POLICY = arm
-        assert _rows(fn(spark, sf)) == want, f"arm {arm} diverged"
-        M.release_pinned()
-
-
-def test_persist_arm_pins_and_release_unpersists(spark, policy_guard):
-    """'persist' materializations register in PINNED; release_pinned()
-    unpersists them all — the leak-free contract the A/B harnesses rely
-    on (tools/ab_srp_materialize.py)."""
-    M.POLICY = "persist"
-    df = spark.range(100).selectExpr("id", "id * 2 AS v")
-    out = M.materialize(df)
-    assert M.PINNED, "persist arm did not pin its handle"
-    assert out.storageLevel.useMemory
-    n = M.release_pinned()
-    assert n >= 1 and not M.PINNED
-    assert not out.storageLevel.useMemory
+    M.POLICY = "reliable"
+    assert _rows(fn(spark, sf)) == want
 
 
 def test_invalid_policy_rejected(spark, policy_guard):
-    M.POLICY = "bogus"
-    with pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE"):
-        M.materialize(spark.range(1))
+    # incl. the retired "persist"/"none" arms: no silent fallback to ckpt
+    for bad in ("bogus", "persist", "none"):
+        M.POLICY = bad
+        with pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE"):
+            M.materialize(spark.range(1))
 
 
 def test_iterative_falls_back_to_truncating_arm(spark, policy_guard):
-    """iterative=True under 'persist'/'none' must produce a
-    lineage-truncated frame (localCheckpoint fallback), not a persisted or
-    pass-through one — un-truncated loop lineage grows geometrically."""
-    M.POLICY = "none"
-    df = spark.range(10)
-    out = M.materialize(df, iterative=True)
-    # localCheckpoint rewrites the plan onto materialized blocks; a pure
-    # pass-through would keep the Range scan in the physical plan
-    assert "Range" not in out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple"
-    )
-    M.POLICY = "persist"
-    out = M.materialize(df, iterative=True)
-    assert not M.PINNED  # fell back to ckpt, nothing pinned
-    # eager=True under "none" is a detach declaration — must materialize
-    M.POLICY = "none"
-    out = M.materialize(spark.range(7), eager=True)
-    assert "Range" not in out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple"
-    )
-    # lazy under "none" really is a pass-through (the measurement arm)
-    out = M.materialize(spark.range(7), eager=False)
-    assert "Range" in out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple"
-    )
+    """iterative=True must produce a lineage-truncated frame under every
+    arm — un-truncated loop lineage grows geometrically (the r6-diagnosed
+    driver OOM). Both arms cut lineage, so none needs a fallback."""
+    for arm in M._VALID:
+        M.POLICY = arm
+        out = M.materialize(spark.range(10), iterative=True)
+        # a checkpoint rewrites the plan onto materialized blocks; a
+        # pass-through would keep the Range scan in the physical plan
+        assert "Range" not in out._sc._jvm.PythonSQLUtils.explainString(
+            out._jdf.queryExecution(), "simple"
+        ), arm
 
 
 def test_reliable_local_fallback_warns_on_nonlocal_master(monkeypatch):
@@ -201,7 +160,7 @@ def test_lazy_iterative_result_is_rejected_not_hung(spark, policy_guard):
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    for arm in ("ckpt", "reliable", "persist", "none"):
+    for arm in M._VALID:
         M.POLICY = arm
         obs = Observation(f"lazy_{arm}")
         df = spark.range(10).observe(obs, F.sum("id").alias("s"))
@@ -209,7 +168,6 @@ def test_lazy_iterative_result_is_rejected_not_hung(spark, policy_guard):
             M.materialize(df, eager=False, iterative=True)
         with pytest.raises(ValueError, match="must be eager"):
             df.transform(M.cut(eager=False, iterative=True))
-        assert not M.PINNED
     # the eager form is action-backed: the metric is already filled
     M.POLICY = "ckpt"
     obs = Observation("eager_ckpt")

@@ -49,26 +49,10 @@ def test_bm25_scored_is_session_memoized(spark):
 import time
 import uuid
 
-import pytest
 
-
-@pytest.fixture(params=["group_state", "tws"])
-def ttl_backend(request, spark):
-    prefer = request.param == "tws"
-    if prefer:
-        from hri_flink_validation_passthrough_spark.protobuf_shim import (
-            ensure_protobuf,
-        )
-
-        if not ensure_protobuf(spark):
-            pytest.skip("no google.protobuf runtime reaches Python workers")
-    return prefer
-
-
-def test_stream_state_ttl_metrics_both_backends(spark, ttl_backend):
-    """Verdict-r5 ask #4: idle-TTL eviction metrics hash-match the batch
-    recompute on BOTH stateful backends (group_state timers and
-    transformWithState registered timers + ttlDurationMs state)."""
+def test_stream_state_ttl_metrics(spark):
+    """Verdict-r5 ask #4: idle-TTL eviction metrics (GroupState timers)
+    hash-match the batch recompute."""
     from hri_flink_validation_passthrough_spark.session import load_table, prepare
     from hri_flink_validation_passthrough_spark.streaming.state_ttl import (
         N_BUCKETS,
@@ -78,9 +62,7 @@ def test_stream_state_ttl_metrics_both_backends(spark, ttl_backend):
     prepare(spark)
     got = {
         r["bucket"]: (r["n_events"], r["n_users"], r["sum_value"])
-        for r in stream_state_ttl_metrics(
-            spark, SF, prefer_transform_with_state=ttl_backend
-        ).collect()
+        for r in stream_state_ttl_metrics(spark, SF).collect()
     }
     e = load_table(spark, SF, "events")
     want = {
@@ -98,9 +80,9 @@ def test_stream_state_ttl_metrics_both_backends(spark, ttl_backend):
     assert got == want and len(got) == N_BUCKETS
 
 
-def test_stream_topk_eviction_both_backends(spark, ttl_backend):
-    """Capacity-evicting streaming top-k matches the batch row_number top-k
-    on both backends, including rank order and tiebreaks."""
+def test_stream_topk_eviction(spark):
+    """Capacity-evicting streaming top-k matches the batch row_number top-k,
+    including rank order and tiebreaks."""
     from hri_flink_validation_passthrough_spark.session import load_table, prepare
     from hri_flink_validation_passthrough_spark.streaming.state_ttl import (
         TOPK_K,
@@ -111,9 +93,7 @@ def test_stream_topk_eviction_both_backends(spark, ttl_backend):
     prepare(spark)
     got = {
         (r["event_type"], r["rank"]): r["event_id"]
-        for r in stream_windowed_topk_eviction(
-            spark, SF, prefer_transform_with_state=ttl_backend
-        ).collect()
+        for r in stream_windowed_topk_eviction(spark, SF).collect()
     }
     e = load_table(spark, SF, "events")
     w = Window.partitionBy("event_type").orderBy(F.desc("value"), "event_id")
@@ -126,7 +106,7 @@ def test_stream_topk_eviction_both_backends(spark, ttl_backend):
     assert got == want
 
 
-def test_ttl_eviction_actually_clears_state(spark, tmp_path, ttl_backend):
+def test_ttl_eviction_actually_clears_state(spark, tmp_path):
     """The TTL flush EVICTS: data arriving for a key after its idle flush
     starts a FRESH aggregate (second emitted row covers only the new data) —
     pinning emit-on-eviction semantics rather than running totals."""
@@ -144,9 +124,7 @@ def test_ttl_eviction_actually_clears_state(spark, tmp_path, ttl_backend):
 
     write([(1, 10, 1.0, 1_000_000), (1, 11, 2.0, 2_000_000)])
     stream = spark.readStream.schema(schema).parquet(data_dir)
-    out = build_ttl_metrics_stream(
-        stream, ttl_ms=1200, prefer_transform_with_state=ttl_backend
-    )
+    out = build_ttl_metrics_stream(stream, ttl_ms=1200)
     name = f"ttlev_{uuid.uuid4().hex[:8]}"
     q = (
         out.writeStream.format("memory")
@@ -259,8 +237,7 @@ def test_ttl_metrics_survive_checkpoint_restart(spark, tmp_path):
     microbatch (before the idle timer fires), restart from the SAME
     checkpoint with more data staged — recovered keyed state must fold the
     new arrivals into the same aggregate and flush exactly one row with the
-    combined totals (group_state backend; the tws path shares the
-    state-machine logic and is covered by the both-backends tests)."""
+    combined totals."""
     import time as _t
     import uuid as _u
 
@@ -284,9 +261,7 @@ def test_ttl_metrics_survive_checkpoint_restart(spark, tmp_path):
         # ("This query does not support recovering from checkpoint
         # location"), and recovery is the point of this test
         stream = spark.readStream.schema(schema).parquet(data_dir)
-        out = build_ttl_metrics_stream(
-            stream, ttl_ms=ttl_ms, prefer_transform_with_state=False
-        )
+        out = build_ttl_metrics_stream(stream, ttl_ms=ttl_ms)
 
         def sink(df, _epoch):
             collected.extend(df.collect())
@@ -380,10 +355,9 @@ def test_custom_stream_source_resumes_from_checkpoint(spark, tmp_path):
         q2.stop()
 
 
-def test_stream_user_activity_mapstate_both_backends(spark, ttl_backend):
-    """MapState (the third state primitive) matches the batch two-level
-    recompute on both backends: per-bucket user maps updated per arrival,
-    flushed by the idle timer."""
+def test_stream_user_activity_mapstate(spark):
+    """Per-subkey keyed state matches the batch two-level recompute:
+    per-bucket user maps updated per arrival, flushed by the idle timer."""
     from hri_flink_validation_passthrough_spark.session import load_table, prepare
     from hri_flink_validation_passthrough_spark.streaming.state_ttl import (
         N_BUCKETS,
@@ -393,9 +367,7 @@ def test_stream_user_activity_mapstate_both_backends(spark, ttl_backend):
     prepare(spark)
     got = {
         r["bucket"]: (r["n_users"], r["n_events"], r["max_user_events"])
-        for r in stream_user_activity_mapstate(
-            spark, SF, prefer_transform_with_state=ttl_backend
-        ).collect()
+        for r in stream_user_activity_mapstate(spark, SF).collect()
     }
     e = load_table(spark, SF, "events")
     per_user = e.groupBy(

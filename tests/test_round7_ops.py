@@ -21,32 +21,6 @@ def test_letter_counts_null_text_yields_zero_histogram():
     assert int(out.iloc[2][25]) == 2
 
 
-def test_tws_provider_conf_is_stashed_and_restored(spark):
-    """ADVICE r6: _tws_session switches the session-wide state-store
-    provider to RocksDB; without a restore every LATER streaming query
-    silently inherits it. The stash/restore pair must round-trip."""
-    from hri_flink_validation_passthrough_spark.streaming import state_ttl
-
-    conf = state_ttl._PROVIDER_CONF
-    try:
-        before = spark.conf.get(conf)
-    except Exception:
-        before = None
-
-    # simulate the switch without requiring protobuf: stash + set directly
-    spark._hri_prev_state_provider = before
-    spark.conf.set(conf, "org.example.FakeProvider")
-    state_ttl.restore_state_provider(spark)
-
-    try:
-        after = spark.conf.get(conf)
-    except Exception:
-        after = None
-    assert after == before
-    # idempotent no-op when nothing was stashed
-    state_ttl.restore_state_provider(spark)
-
-
 def test_quantile_sketch_merges_losslessly(spark):
     """The sketch's core contract: build on two disjoint halves, merge by
     cell-wise addition, and the quantile readout equals the single-pass

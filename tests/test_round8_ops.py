@@ -244,8 +244,8 @@ def test_stream_quantile_sketch_windowed_both_backends(spark, provider):
     """r7 verdict ask #5: per-window sketch state in APPEND mode with
     watermark eviction, oracle-green on BOTH state-store providers. The
     provider conf is session-wide and read lazily at state-store init, so
-    it is stashed and restored around the whole query lifetime (the r6/r7
-    _tws_session lesson)."""
+    it is stashed and restored around the whole query lifetime, so later
+    streaming queries in the session keep the default provider."""
     import __spark_entry__ as entrymod
 
     conf = "spark.sql.streaming.stateStore.providerClass"

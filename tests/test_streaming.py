@@ -61,20 +61,10 @@ def _rec_row(i, bid=b"batch-42", t=100):
     )
 
 
-@pytest.fixture(params=["group_state", "tws"])
-def stream_env(request, spark, tmp_path):
-    """The MiniCluster scenario matrix runs over BOTH stateful backends:
-    ``group_state`` = applyInPandasWithState (path A), ``tws`` =
-    transformWithStateInPandas (path B, Spark 4 timers — needs a protobuf
-    runtime, provided by protobuf_shim.pre_jvm_env in conftest)."""
-    prefer = request.param == "tws"
-    if prefer:
-        from hri_flink_validation_passthrough_spark.protobuf_shim import (
-            ensure_protobuf,
-        )
-
-        if not ensure_protobuf(spark):
-            pytest.skip("no google.protobuf runtime reaches Python workers")
+@pytest.fixture
+def stream_env(spark, tmp_path):
+    """One routed stream (applyInPandasWithState) over two file sources
+    that the MiniCluster scenarios below stage rows into."""
     data_dir = str(tmp_path / "data")
     ctrl_dir = str(tmp_path / "ctrl")
     ckpt = str(tmp_path / "ckpt")
@@ -99,7 +89,6 @@ def stream_env(request, spark, tmp_path):
         records,
         notifs,
         completion_delay_ms=DELAY_MS,
-        prefer_transform_with_state=prefer,
         per_trigger_bound=1000,  # per-scenario staged rows, all tiny
     )
     name = f"routed_{uuid.uuid4().hex[:8]}"
@@ -356,7 +345,7 @@ def test_passthrough_route_empty_corpus_returns_empty_summary(spark, tmp_path):
     assert out.count() == 0
 
 
-def _cold_start_env(spark, tmp_path, ctrl_rows, rec_rows):
+def _cold_start_env(spark, tmp_path, ctrl_rows, rec_rows, per_trigger_bound=1000):
     """Start the topology AFTER staging all control/data files: the first
     microbatch ingests everything, so the per-trigger whole-group sort by
     (time_ms, kind_rank, seq) — not file-arrival races — defines the
@@ -373,7 +362,10 @@ def _cold_start_env(spark, tmp_path, ctrl_rows, rec_rows):
     records = spark.readStream.schema(REC_SCHEMA).parquet(data_dir)
     notifs = spark.readStream.schema(CTRL_SCHEMA).parquet(ctrl_dir)
     routed = build_routed_stream(
-        records, notifs, completion_delay_ms=DELAY_MS, per_trigger_bound=1000
+        records,
+        notifs,
+        completion_delay_ms=DELAY_MS,
+        per_trigger_bound=per_trigger_bound,
     )
     name = f"routed_{uuid.uuid4().hex[:8]}"
     q = start_memory_query(routed, name, str(tmp_path / "ckpt"))
@@ -414,6 +406,82 @@ def test_streaming_empty_control_topic_routes_all_unknown(spark, tmp_path):
             by_bid[bid] = by_bid.get(bid, 0) + 1
         assert by_bid == {b"batch-A": 20, b"batch-B": 20}
         assert not _dest(r, "out") and not _notifs(r)
+    finally:
+        q.stop()
+
+
+@pytest.mark.slow  # ~25 s: 2,000 single-row keys cross the Python state boundary
+def test_garbage_batch_ids_leave_no_state_rows(spark, tmp_path):
+    """Unbounded unknown batch ids must not grow the state store: 2,000
+    distinct garbage ids over two triggers leave no state row, while the
+    two known batches keep theirs. Routing is unchanged — every garbage
+    record goes to invalid with the unknown-batch body, the known batches'
+    records reach out, and both complete with their own counts."""
+    n_garbage, per_batch = 1000, 5
+
+    def garbage(lo):
+        return [_rec_row(i, bid=f"garbage-{i}".encode(), t=100)
+                for i in range(lo, lo + n_garbage)]
+
+    def known(lo, t):
+        return [_rec_row(i, bid=bid, t=t)
+                for bid in (b"batch-A", b"batch-B")
+                for i in range(lo, lo + per_batch)]
+
+    ctrl = [_notif_row("started", bid=b, t=0, seq=k)
+            for k, b in enumerate(("batch-A", "batch-B"))]
+    # trigger 1: both batches start; 1,000 garbage ids + 5 records each
+    q, rows = _cold_start_env(
+        spark, tmp_path, ctrl, garbage(0) + known(10_000, 100),
+        per_trigger_bound=4 * n_garbage,
+    )
+    try:
+        def wait_for(cond, msg):
+            t0 = time.time()
+            while time.time() - t0 < 60:
+                r = rows()
+                if cond(r):
+                    return r
+                time.sleep(0.3)
+            pytest.fail(f"timed out waiting for: {msg}")
+
+        wait_for(lambda r: len(_dest(r, "invalid")) == n_garbage,
+                 "first garbage wave on invalid")
+        # trigger 2+: 1,000 new garbage ids, 5 more records each, and the
+        # sendCompleted controls
+        spark.createDataFrame(
+            garbage(n_garbage) + known(20_000, 500), REC_SCHEMA
+        ).coalesce(1).write.mode("append").parquet(str(tmp_path / "data"))
+        spark.createDataFrame(
+            [_notif_row("sendCompleted", bid=b, expected=2 * per_batch,
+                        t=900, seq=2 + k)
+             for k, b in enumerate(("batch-A", "batch-B"))],
+            CTRL_SCHEMA,
+        ).coalesce(1).write.mode("append").parquet(str(tmp_path / "ctrl"))
+        r = wait_for(lambda r: len(_notifs(r)) == 2, "both batches complete")
+
+        inv = _dest(r, "invalid")
+        assert len(inv) == 2 * n_garbage
+        assert {bytes(x.key) for x in inv} == {
+            str(i).encode() for i in range(2 * n_garbage)
+        }
+        for x in inv:
+            assert json.loads(bytes(x.value)) == {
+                "failure": "Bad Message - Unknown batchId"
+            }
+        out = _dest(r, "out")
+        assert sorted(int(bytes(x.key)) for x in out) == sorted(
+            list(range(10_000, 10_000 + per_batch)) * 2
+            + list(range(20_000, 20_000 + per_batch)) * 2
+        )
+        n = {x["id"]: x for x in _notifs(r)}
+        assert set(n) == {"batch-A", "batch-B"}
+        assert all(x["status"] == "completed" for x in n.values())
+        assert all(x["recordCount"] == 2 * per_batch for x in n.values())
+
+        p = q.lastProgress
+        assert p is not None and p.stateOperators, "no stateful progress"
+        assert p.stateOperators[0].numRowsTotal == 2
     finally:
         q.stop()
 

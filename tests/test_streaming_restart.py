@@ -84,22 +84,7 @@ def test_health_monitor_catches_failing_query(spark, tmp_path):
         spark.streams.removeListener(mon)
 
 
-@pytest.fixture(params=["group_state", "tws"])
-def stateful_backend(request, spark):
-    """Run the chaos cycle over BOTH stateful backends — restart recovery
-    must hold for applyInPandasWithState (HDFS state store) and
-    transformWithStateInPandas (RocksDB store, Spark 4 timers) alike."""
-    if request.param == "tws":
-        from hri_flink_validation_passthrough_spark.protobuf_shim import (
-            ensure_protobuf,
-        )
-
-        if not ensure_protobuf(spark):
-            pytest.skip("no google.protobuf runtime reaches Python workers")
-    return request.param == "tws"
-
-
-def _restartable_route(spark, tmp_path, prefer_tws=False):
+def _restartable_route(spark, tmp_path):
     """(write_ctrl, write_recs, start_query, wait_for) over one routed
     stream whose parquet sink and checkpoint survive a stop/start cycle."""
     data_dir, ctrl_dir = str(tmp_path / "d"), str(tmp_path / "c")
@@ -122,7 +107,6 @@ def _restartable_route(spark, tmp_path, prefer_tws=False):
             records,
             notifs,
             completion_delay_ms=DELAY_MS,
-            prefer_transform_with_state=prefer_tws,
             per_trigger_bound=1000,  # staged chaos scenarios are tiny
         )
         return (
@@ -162,9 +146,9 @@ def _assert_routed_once(rows, n):
     assert notifs[0]["recordCount"] == n
 
 
-def test_restart_from_checkpoint_no_loss_no_dup(spark, tmp_path, stateful_backend):
+def test_restart_from_checkpoint_no_loss_no_dup(spark, tmp_path):
     write_ctrl, write_recs, start_query, wait_for = _restartable_route(
-        spark, tmp_path, stateful_backend
+        spark, tmp_path
     )
 
     # health monitor — parity with the reference's Flink REST monitor thread

@@ -157,6 +157,9 @@ def test_oversized_trigger_group_logs_warning(monkeypatch, caplog):
         def update(self, t):
             self.stored = t
 
+        def remove(self):
+            self.stored = None
+
         def getCurrentProcessingTimeMs(self):
             return 0
 

@@ -50,7 +50,7 @@ def _outcomes_old(records, controls, delay_ms, ctrl_agg=None):
             F.when(F.col("sc_t").isNull(), F.lit(None)).otherwise(F.col("expected_raw")),
         ).select("batch_id", "started_t", "sc_t", "expected", "term_t")
 
-    ctrl = prel._materialize(ctrl)
+    ctrl = prel.materialize(ctrl, eager=False)
 
     r = records.select("batch_id", "time_ms", "seq").join(
         F.broadcast(ctrl), "batch_id", "left"
