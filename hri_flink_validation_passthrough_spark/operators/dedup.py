@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cosine_similarity, fingerprint_md5
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table, prepare, session_memo
 from ..materialize import cut, materialize
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -206,36 +206,12 @@ def _jaccard_pairs_capped(s: DataFrame, threshold: float, df_cap: int = DF_CAP) 
     return _verify_jaccard_pairs(cand, s, threshold)
 
 
-# ---------------------------------------------------------------------------
-# Per-session memo of persisted intermediates. The driver runs all queries of
-# this module sequentially in ONE session; shingling and the 0.5-threshold pair
-# set are shared by 4+ queries, so each is computed once and persisted (tiny:
-# one row per doc / per near-dup pair). At 100 TB the same role is played by a
-# checkpointed parquet dataset; in-session persist is the local analogue.
-# ---------------------------------------------------------------------------
-_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _memo_key(spark: SparkSession, sf_dir: str, what: str) -> tuple:
-    # documents fingerprint in the key: an in-place corpus regeneration
-    # invalidates every cached shingle/pair table (r9 ADVICE pattern,
-    # generalized from similarity._fp_key). Computing the key also EVICTS
-    # stale same-slot entries — their persisted plans are semantically
-    # equal to any rebuild, and Spark's CacheManager would otherwise serve
-    # the old InMemoryRelation (session.evict_stale_memo). Single choke
-    # point: linkage's memo users share this function.
-    from ..session import evict_stale_memo, source_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        what,
-        source_fingerprint(sf_dir, "documents.parquet"),
-    )
-    evict_stale_memo(_MEMO, key, 3)
-    return key
-
-
+# Persisted intermediates shared across queries (session_memo). The driver
+# runs all queries of this module sequentially in ONE session; shingling and
+# the 0.5-threshold pair set are shared by 4+ queries, so each is computed
+# once and persisted (tiny: one row per doc / per near-dup pair). At 100 TB
+# the same role is played by a checkpointed parquet dataset; in-session
+# persist is the local analogue.
 def _shingles_for(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     """Persisted (doc_id, sh) n-gram shingle table, computed once per session.
 
@@ -247,21 +223,24 @@ def _shingles_for(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     tokenizing split inlined once per element_at!) on the single
     pre-repartition input split. Observed 15-20x slowdown at sf0.1.
     """
-    key = _memo_key(spark, sf_dir, f"shingles_{n}")
-    if key not in _MEMO:
-        par = spark.sparkContext.defaultParallelism
-        docs = load_table(spark, sf_dir, "documents").repartition(par, "doc_id")
-        _MEMO[key] = _shingles(docs, n).persist()
-    return _MEMO[key]
+    return session_memo(spark, sf_dir, "documents.parquet", _shingles_build, n)
+
+
+def _shingles_build(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    par = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents").repartition(par, "doc_id")
+    return _shingles(docs, n).persist()
 
 
 def _capped_pairs_for(spark: SparkSession, sf_dir: str, threshold: float) -> DataFrame:
     """Persisted df-capped Jaccard pair set at `threshold` (production path)."""
-    key = _memo_key(spark, sf_dir, f"capped_pairs_{threshold}")
-    if key not in _MEMO:
-        s = _shingles_for(spark, sf_dir)
-        _MEMO[key] = _jaccard_pairs_capped(s, threshold).persist()
-    return _MEMO[key]
+    return session_memo(
+        spark, sf_dir, "documents.parquet", _capped_pairs_build, threshold
+    )
+
+
+def _capped_pairs_build(spark: SparkSession, sf_dir: str, threshold: float):
+    return _jaccard_pairs_capped(_shingles_for(spark, sf_dir), threshold).persist()
 
 
 # DuckDB twin of the capped candidate index + exact verification (mirrors

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions import floor_nudge
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table, prepare, session_memo
 from ..materialize import cut
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -73,9 +73,6 @@ _GRAPH_SQL = f"""
 """
 
 
-_graph_memo: dict[tuple, tuple] = {}
-
-
 def _mutual_knn_edges(spark: SparkSession, sf_dir: str):
     """(edges, nodes): the mutual top-K co-order graph. Edges directed both
     ways (mutuality makes it symmetric); both persisted — every consumer
@@ -86,18 +83,10 @@ def _mutual_knn_edges(spark: SparkSession, sf_dir: str):
     self-join that builds it dominates each one's cost — in production the
     edge list is a stored artifact written once at graph-build time.
     """
-    from ..session import source_fingerprint
+    return session_memo(spark, sf_dir, "lineitem.parquet", _knn_graph_build)[:2]
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        source_fingerprint(sf_dir, "lineitem.parquet"),
-    )
-    if key in _graph_memo:
-        return _graph_memo[key][:2]
-    from ..session import evict_stale_memo
 
-    evict_stale_memo(_graph_memo, key, 2)
+def _knn_graph_build(spark: SparkSession, sf_dir: str):
     prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     a, b = li.alias("a"), li.alias("b")
@@ -129,13 +118,9 @@ def _mutual_knn_edges(spark: SparkSession, sf_dir: str):
         .persist()
     )
     nodes = li.select(F.col("l_suppkey").alias("s")).distinct().persist()
-    # topk rides the memo tuple so evict_stale_memo unpersists it with the
+    # topk rides the memo tuple so session_memo unpersists it with the
     # graph (it is persisted too — r10 self-review finding)
-    _graph_memo[key] = (edges, nodes, topk)
-    return edges, nodes
-
-
-_oriented_memo: dict[tuple, DataFrame] = {}
+    return edges, nodes, topk
 
 
 def _oriented_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -144,20 +129,12 @@ def _oriented_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Triangle counting and the clustering coefficient both orient the mutual
     graph the same way; previously each call persisted its own copy,
     accumulating executor cache across a multi-query run (ADVICE r5)."""
-    from ..session import source_fingerprint
+    return session_memo(spark, sf_dir, "lineitem.parquet", _orient_build)
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        source_fingerprint(sf_dir, "lineitem.parquet"),
-    )
-    if key not in _oriented_memo:
-        from ..session import evict_stale_memo
 
-        evict_stale_memo(_oriented_memo, key, 2)
-        edges, _ = _mutual_knn_edges(spark, sf_dir)
-        _oriented_memo[key] = edges.filter(F.col("src") < F.col("dst")).persist()
-    return _oriented_memo[key]
+def _orient_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    edges, _ = _mutual_knn_edges(spark, sf_dir)
+    return edges.filter(F.col("src") < F.col("dst")).persist()
 
 
 def _pr_oracle() -> str:

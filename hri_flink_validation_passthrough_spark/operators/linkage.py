@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table, prepare, session_memo
 from .corpus import _SQL_SHINGLES_5, EVAL_MOD, EVAL_REM
 from .dedup import _JACCARD_ORACLE, _shingles_for
 from ..materialize import cut
@@ -65,23 +65,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-@register(
-    QUERIES,
-    "set_similarity_prefix_join",
-    oracle=_JACCARD_ORACLE.format(thr=PREFIX_TAU),
-    doc="Exact Jaccard>=0.7 self-join via AllPairs prefix filtering: shingle "
-    "sets ordered by ascending global document frequency, only the first "
-    "|s|-ceil(tau*|s|)+1 shingles indexed, candidates must share a prefix "
-    "shingle and pass the tau*|a|<=|b|<=|a|/tau length filter, then exact "
-    "array_intersect verification. Same brute-force oracle as "
-    "dedup_ngram_jaccard — a third independent exact path (inverted-index, "
-    "LSH, prefix-filter) over the same semantics. At 100 TB the index holds "
-    "only rare-token postings, so the candidate join never sees a hot key.",
-)
-def set_similarity_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
-    s = _shingles_for(spark, sf_dir)  # doc_id, sh (distinct 3-gram shingles)
+def _prefix_index(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
+    """(doc_id, n, g): the indexed prefix of every shingle set — its first
+    ``n - ceil(tau*n) + 1`` shingles in ascending global document frequency.
 
+    Persisted (session-memoized): BOTH sides of the candidate self-join
+    read this table, and Catalyst does not reuse the exchange across the
+    aliased subtrees — without the persist the df-count + rank pipeline
+    runs twice (measured ~2x the query's cost at sf0.1)."""
+    s = _shingles_for(spark, sf_dir)
     # (doc_id, set size, token) — size carried through the explode so no
     # per-doc side table needs joining (or broadcasting) later.
     e = s.select(
@@ -101,18 +93,30 @@ def set_similarity_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Binary 0.7 < 7/10 exactly, so ceil(tau*n) never overshoots an integer
     # boundary — the prefix is never too short (pruning stays lossless).
-    # Persisted (session-memoized): BOTH sides of the candidate self-join
-    # read this table, and Catalyst does not reuse the exchange across the
-    # aliased subtrees — without the persist the df-count + rank pipeline
-    # runs twice (measured ~2x the query's cost at sf0.1).
-    from .dedup import _MEMO, _memo_key
+    return ranked.filter(
+        F.col("rn") <= F.col("n") - F.ceil(F.lit(tau) * F.col("n")) + 1
+    ).select("doc_id", "n", "g").persist()
 
-    key = _memo_key(spark, sf_dir, f"prefix_{PREFIX_TAU}")
-    if key not in _MEMO:
-        _MEMO[key] = ranked.filter(
-            F.col("rn") <= F.col("n") - F.ceil(F.lit(PREFIX_TAU) * F.col("n")) + 1
-        ).select("doc_id", "n", "g").persist()
-    prefix = _MEMO[key]
+
+@register(
+    QUERIES,
+    "set_similarity_prefix_join",
+    oracle=_JACCARD_ORACLE.format(thr=PREFIX_TAU),
+    doc="Exact Jaccard>=0.7 self-join via AllPairs prefix filtering: shingle "
+    "sets ordered by ascending global document frequency, only the first "
+    "|s|-ceil(tau*|s|)+1 shingles indexed, candidates must share a prefix "
+    "shingle and pass the tau*|a|<=|b|<=|a|/tau length filter, then exact "
+    "array_intersect verification. Same brute-force oracle as "
+    "dedup_ngram_jaccard — a third independent exact path (inverted-index, "
+    "LSH, prefix-filter) over the same semantics. At 100 TB the index holds "
+    "only rare-token postings, so the candidate join never sees a hot key.",
+)
+def set_similarity_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    prepare(spark)
+    s = _shingles_for(spark, sf_dir)  # doc_id, sh (distinct 3-gram shingles)
+    prefix = session_memo(
+        spark, sf_dir, "documents.parquet", _prefix_index, PREFIX_TAU
+    )
 
     a, b = prefix.alias("a"), prefix.alias("b")
     cand = (
@@ -254,6 +258,55 @@ def fuzzy_part_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cross.unionByName(same)
 
 
+def _eval_grams(sh5: DataFrame) -> DataFrame:
+    """(g): the distinct 5-gram shingles of the eval split."""
+    is_eval = F.col("doc_id") % EVAL_MOD == EVAL_REM
+    return sh5.filter(is_eval).select(F.explode("sh").alias("g")).distinct()
+
+
+def _bloom_bitmap(spark: SparkSession, sf_dir: str) -> list[int]:
+    """The eval grams' Bloom filter as BLOOM_WORDS 64-bit words.
+
+    The bitmap is a tiny fixed-size MODEL artifact (8 KiB regardless of
+    eval-set size), like the IVF centroids / PQ codebook elsewhere:
+    collect-then-broadcast is the intended pattern, and like those
+    artifacts it is session-memoized (r7) — in production the decontam
+    bloom is built once when the eval set is frozen and reused by every
+    corpus query, not rebuilt per scan. The distributed part — hashing and
+    OR-ing eval grams — happens executor-side; only BLOOM_WORDS
+    pre-reduced rows cross to the driver."""
+    ev = _eval_grams(_shingles_for(spark, sf_dir, 5))
+    # build: position = pmod(xxhash64(i, g), m), OR'd into 64-bit words
+    pos = ev.select(
+        F.explode(
+            F.array(
+                *[
+                    F.pmod(
+                        F.xxhash64(F.lit(i), F.col("g")),
+                        F.lit(BLOOM_BITS),
+                    )
+                    for i in range(BLOOM_K)
+                ]
+            )
+        ).alias("p")
+    )
+    words = (
+        pos.select(
+            F.expr("cast(p div 64 as int)").alias("w"),
+            F.expr(
+                "shiftleft(cast(1 as bigint), cast(p % 64 as int))"
+            ).alias("m"),
+        )
+        .groupBy("w")
+        .agg(F.expr("bit_or(m)").alias("mask"))
+        .collect()
+    )
+    bitmap = [0] * BLOOM_WORDS
+    for r in words:
+        bitmap[r["w"]] = r["mask"]
+    return bitmap
+
+
 @register(
     QUERIES,
     "decontam_bloom_prefilter",
@@ -287,52 +340,7 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh5 = _shingles_for(spark, sf_dir, 5)  # doc_id, distinct 5-gram shingles
     is_eval = F.col("doc_id") % EVAL_MOD == EVAL_REM
     tr = sh5.filter(~is_eval).select("doc_id", F.explode("sh").alias("g"))
-
-    # The bitmap is a tiny fixed-size MODEL artifact (8 KiB regardless of
-    # eval-set size), like the IVF centroids / PQ codebook elsewhere:
-    # collect-then-broadcast-as-literal is the intended pattern, and like
-    # those artifacts it is session-memoized (r7) — in production the
-    # decontam bloom is built once when the eval set is frozen and reused
-    # by every corpus query, not rebuilt per scan. The distributed part —
-    # hashing and OR-ing eval grams — happens executor-side; only
-    # BLOOM_WORDS pre-reduced rows cross to the driver.
-    from .dedup import _MEMO, _memo_key
-
-    # ev is consumed by the bitmap build (memo-miss only) AND by the
-    # exact-confirm semi-join below on every run — keep it unconditional
-    ev = sh5.filter(is_eval).select(F.explode("sh").alias("g")).distinct()
-    memo_key = _memo_key(spark, sf_dir, "decontam_bloom_bitmap")
-    bitmap = _MEMO.get(memo_key)
-    if bitmap is None:
-        # build: position = pmod(xxhash64(i, g), m), OR'd into 64-bit words
-        pos = ev.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(
-                            F.xxhash64(F.lit(i), F.col("g")),
-                            F.lit(BLOOM_BITS),
-                        )
-                        for i in range(BLOOM_K)
-                    ]
-                )
-            ).alias("p")
-        )
-        words = (
-            pos.select(
-                F.expr("cast(p div 64 as int)").alias("w"),
-                F.expr(
-                    "shiftleft(cast(1 as bigint), cast(p % 64 as int))"
-                ).alias("m"),
-            )
-            .groupBy("w")
-            .agg(F.expr("bit_or(m)").alias("mask"))
-            .collect()
-        )
-        bitmap = [0] * BLOOM_WORDS
-        for r in words:
-            bitmap[r["w"]] = r["mask"]
-        _MEMO[memo_key] = bitmap
+    bitmap = session_memo(spark, sf_dir, "documents.parquet", _bloom_bitmap)
     # The bitmap rides as a BROADCAST 1-row DataFrame, not a literal array
     # in the expression tree: 1024 long literals are a per-call planning
     # tax (~0.55 s here — interleaved A/B in BASELINE.md r9, the same
@@ -357,7 +365,7 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # exact confirm: semi-join the bloom-positive grams against the real
     # eval gram set — removes any false positive.
-    confirmed = hit.join(ev, "g", "left_semi")
+    confirmed = hit.join(_eval_grams(sh5), "g", "left_semi")
     return confirmed.groupBy("doc_id").agg(
         F.count_distinct("g").alias("n_eval_grams")
     )

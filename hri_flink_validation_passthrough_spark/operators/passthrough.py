@@ -25,7 +25,6 @@ from ..model import SEND_COMPLETED, STARTED, TERMINATED, UNKNOWN_BATCH_FAILURE
 from ..plans import QuerySpec, register
 from ..session import load_table, prepare
 from ..sources.envelope import (
-    KIND_DATA,
     ROUTED_SCHEMA,
     control_to_envelope,
     data_to_envelope,
@@ -119,9 +118,8 @@ def _route_blocks(
     the state machine, but runs of data rows between controls are routed in
     BULK (pandas slices, no per-row Python). Returns ``(parts, notifs)``
     where ``parts`` is ``[(block_slice, dest, body_override), ...]`` in
-    replay order and ``notifs`` the emitted notification dicts — callers
-    format parts either as payload rows (:func:`_replay_vectorized`) or as
-    order-key intervals (:func:`_decide_intervals`). Valid ONLY for the
+    replay order and ``notifs`` the emitted notification dicts, which
+    :func:`_replay_vectorized` formats as payload rows. Valid ONLY for the
     passthrough validator with no external lookup — the per-row path covers
     everything else. The differential property test
     (tests/test_replay_equivalence.py) pins this to the row-wise reference
@@ -335,178 +333,6 @@ def make_replay(
     return replay
 
 
-# ---------------------------------------------------------------------------
-# interval-decision plan (r15, guide §8): the state machine decides on
-# METADATA only; payload bytes never cross the Python boundary
-# ---------------------------------------------------------------------------
-# Decision rows emitted by the metadata replay. kind: 'interval' (a run of
-# data rows sharing one routing decision, bounded INCLUSIVELY by the order
-# keys of its first/last row), 'notification' (an emitted notification,
-# body = its JSON bytes), or 'fallback' (the batch's in-batch sort key is
-# ambiguous — see _decide_intervals — so the caller must use the
-# payload-through-Python plan instead).
-_DECISION_SCHEMA = T.StructType(
-    [
-        T.StructField("batch_id", T.StringType(), True),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("dest", T.StringType(), True),
-        T.StructField("s_tnn", T.IntegerType(), True),
-        T.StructField("s_t", T.LongType(), True),
-        T.StructField("s_snn", T.IntegerType(), True),
-        T.StructField("s_s", T.LongType(), True),
-        T.StructField("e_tnn", T.IntegerType(), True),
-        T.StructField("e_t", T.LongType(), True),
-        T.StructField("e_snn", T.IntegerType(), True),
-        T.StructField("e_s", T.LongType(), True),
-        T.StructField("body", T.BinaryType(), True),
-    ]
-)
-
-_DECISION_COLS = [f.name for f in _DECISION_SCHEMA.fields]
-
-
-def _ord_key(time_v, seq_v) -> tuple[int, int, int, int]:
-    """Replay order key of one row as a null-safe 4-tuple mirroring the
-    pandas sort (``na_position='first'``): (time-not-null, time,
-    seq-not-null, seq) — null sorts before every value."""
-    t = _none_if_nan(time_v)
-    s = _none_if_nan(seq_v)
-    return (
-        0 if t is None else 1,
-        int(t) if t is not None else 0,
-        0 if s is None else 1,
-        int(s) if s is not None else 0,
-    )
-
-
-def _decide_intervals(
-    pdf: pd.DataFrame, machine: BatchStateMachine, batch_id
-) -> pd.DataFrame:
-    """Run the metadata replay and emit DECISIONS instead of payload rows.
-
-    An interval [first-row key, last-row key] identifies a block's rows only
-    if no two rows of the batch share the (time_ms, kind_rank, seq) sort
-    key — duplicate keys make any boundary inside the tie-run inexpressible
-    (the JVM join cannot discriminate tied rows), so such a batch emits a
-    single 'fallback' marker and the caller reverts to the encoded plan.
-    Deterministic producers (unique seq per batch — events_as_records, the
-    envelope's monotonic default) never hit this."""
-    row = {c: None for c in _DECISION_COLS}
-    row["batch_id"] = batch_id
-    if bool(pdf.duplicated(subset=["time_ms", "kind_rank", "seq"]).any()):
-        row["kind"] = "fallback"
-        return pd.DataFrame([row], columns=_DECISION_COLS)
-    parts, notifs = _route_blocks(pdf, machine, batch_id, encoded=True)
-    recs = []
-    for block, dest, body in parts:
-        s = _ord_key(block["time_ms"].iloc[0], block["seq"].iloc[0])
-        e = _ord_key(block["time_ms"].iloc[-1], block["seq"].iloc[-1])
-        r = dict(row, kind="interval", dest=dest, body=body)
-        r["s_tnn"], r["s_t"], r["s_snn"], r["s_s"] = s
-        r["e_tnn"], r["e_t"], r["e_snn"], r["e_s"] = e
-        recs.append(r)
-    for n in notifs:
-        recs.append(
-            dict(row, kind="notification", dest="notification",
-                 body=_notification_json(n))
-        )
-    return pd.DataFrame(recs, columns=_DECISION_COLS)
-
-
-def _make_decide(delay_ms: int):
-    """Per-group decision fn for applyInPandas over the METADATA envelope
-    (batch_id, kind, time_ms, seq, kind_rank, notification-as-json)."""
-
-    def decide(pdf: pd.DataFrame) -> pd.DataFrame:
-        machine = BatchStateMachine(delay_ms, passthrough_validator, None)
-        pdf = pdf.sort_values(["time_ms", "kind_rank", "seq"], na_position="first")
-        raw_bid = pdf["batch_id"].iloc[0]
-        batch_id = raw_bid if isinstance(raw_bid, str) else None
-        return _decide_intervals(pdf, machine, batch_id)
-
-    return decide
-
-
-def _interval_plan(env: DataFrame, completion_delay_ms: int) -> DataFrame | None:
-    """Guide §8 boundary for the fast path: ship ONLY metadata through the
-    grouped Python replay; route the payload JVM-side with a broadcast join
-    against the returned decision intervals.
-
-    The old (encoded) fast path shuffled every key/value/headers byte into
-    Python and back — two Arrow conversions plus a payload shuffle — yet
-    the passthrough decisions depend only on (batch_id, kind, time_ms, seq,
-    notification). Here the metadata replay returns O(#controls) interval
-    rows per batch; the payload leg is one scan + one BroadcastHashJoin
-    (no payload shuffle at all — rows are dropped/tagged where they are
-    read). Returns None when any batch reports an ambiguous sort key (the
-    caller then builds the encoded plan; the spent metadata pass is the
-    probe's price, never hit by deterministic unique-seq producers)."""
-    from ..materialize import materialize
-    from ..model import HEADER_TYPE
-
-    meta = env.select(
-        "batch_id", "kind", "time_ms", "seq", "kind_rank",
-        F.to_json("notification").alias("notification"),
-    )
-    # decisions are consumed three times (fallback probe, interval join,
-    # notifications leg) and are per-batch/control cardinality — tiny at
-    # any scale; one eager materialization runs the metadata pass now.
-    decisions = materialize(
-        meta.groupBy("batch_id").applyInPandas(
-            _make_decide(completion_delay_ms), _DECISION_SCHEMA
-        ),
-        eager=True,
-    )
-    if decisions.where(F.col("kind") == "fallback").limit(1).count():
-        return None
-    iv = decisions.where(F.col("kind") == "interval").select(
-        F.col("batch_id").alias("iv_batch_id"),
-        "dest",
-        "body",
-        F.struct(
-            F.col("s_tnn").alias("tnn"), F.col("s_t").alias("t"),
-            F.col("s_snn").alias("snn"), F.col("s_s").alias("s"),
-        ).alias("iv_start"),
-        F.struct(
-            F.col("e_tnn").alias("tnn"), F.col("e_t").alias("t"),
-            F.col("e_snn").alias("snn"), F.col("e_s").alias("s"),
-        ).alias("iv_end"),
-    )
-    data = env.where(F.col("kind") == KIND_DATA).withColumn(
-        "ord",
-        F.struct(
-            F.col("time_ms").isNotNull().cast("int").alias("tnn"),
-            F.coalesce(F.col("time_ms"), F.lit(0)).cast("long").alias("t"),
-            F.col("seq").isNotNull().cast("int").alias("snn"),
-            F.coalesce(F.col("seq"), F.lit(0)).cast("long").alias("s"),
-        ),
-    )
-    j = data.join(
-        F.broadcast(iv),
-        data["batch_id"].eqNullSafe(F.col("iv_batch_id"))
-        & (F.col("ord") >= F.col("iv_start"))
-        & (F.col("ord") <= F.col("iv_end")),
-        "inner",
-    )
-    routed = j.select(
-        "dest",
-        "batch_id",
-        "key",
-        F.when(F.col("body").isNotNull(), F.col("body"))
-        .otherwise(F.col("value"))
-        .alias("value"),
-        "headers",
-    )
-    notifs = decisions.where(F.col("kind") == "notification").select(
-        F.lit("notification").alias("dest"),
-        "batch_id",
-        F.encode(F.coalesce(F.col("batch_id"), F.lit("")), "UTF-8").alias("key"),
-        F.col("body").alias("value"),
-        F.array().cast(HEADER_TYPE).alias("headers"),
-    )
-    return routed.unionByName(notifs)
-
-
 def run_pipeline_batch(
     records: DataFrame,
     notifications: DataFrame,
@@ -528,42 +354,6 @@ def run_pipeline_batch(
         return env.groupBy("batch_id").applyInPandas(
             make_replay(completion_delay_ms, validator, lookup), ROUTED_SCHEMA
         )
-    # Fast path boundary choice (HRI_PASSTHROUGH_BOUNDARY):
-    #   'encoded' (default) — the flat-column Arrow boundary below (also the
-    #     automatic fallback when a batch's sort key is ambiguous).
-    #   'interval' — metadata-only replay + JVM broadcast-interval routing
-    #     (_interval_plan); requires caller-provided time_ms AND seq on the
-    #     records frame, because the envelope subtree is evaluated by two
-    #     plan legs and a generated monotonically_increasing_id seq is not
-    #     guaranteed identical across evaluations.
-    # Default chosen by measurement (guide §1.1 — the "ideal" plan lost the
-    # empirical loop at driver scale): interval never moves payload bytes
-    # through Python or a shuffle, but at sf0.1 the boundary cost is
-    # row-count-bound, not byte-bound — the metadata pass alone (~0.92 s)
-    # costs as much as the whole encoded replay, so interval benched 2.04 s
-    # vs encoded 1.38 s; at 20x payload width the two tie (1.91 vs 1.95).
-    # On a real cluster, where the payload shuffle crosses NICs and records
-    # are KB-MB blobs, 'interval' is the right arm — it is kept tested
-    # (row-level differential vs encoded) and selectable here.
-    import os as _os
-
-    boundary = _os.environ.get("HRI_PASSTHROUGH_BOUNDARY", "encoded")
-    # The notifications frame must carry its own time_ms AND seq too
-    # (ADVICE r15): control_to_envelope otherwise defaults every control's
-    # seq to 0 with null time_ms, so any batch with >= 2 controls
-    # deterministically trips the duplicate-key fallback — interval mode
-    # would pay the full eager metadata pass (localCheckpoint + count at
-    # plan-build time) on EVERY batch only to revert to the encoded plan.
-    if (
-        boundary == "interval"
-        and "seq" in records.columns
-        and "time_ms" in records.columns
-        and "seq" in notifications.columns
-        and "time_ms" in notifications.columns
-    ):
-        routed = _interval_plan(env, completion_delay_ms)
-        if routed is not None:
-            return routed
     # Encoded fast path (r15, guide §4): the passthrough validator never
     # inspects headers and notifications only matter on the handful of
     # control rows, yet the nested ARRAY<STRUCT<..binary>> / notification

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from .. import iofs
 from ..functions import cosine_similarity, floor_nudge, py_floor_nudge
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table, prepare, session_memo
 from ..materialize import cut, materialize
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -93,7 +93,27 @@ def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ivf_assign_memo: dict[tuple, DataFrame] = {}
+def _coarse_cells(v: DataFrame, nlist: int) -> DataFrame:
+    """(cid, ce): the untrained coarse grid, the first *nlist* vectors."""
+    return v.filter(F.col("vec_id") < nlist).withColumnsRenamed(
+        {"vec_id": "cid", "e": "ce"}
+    )
+
+
+def _ivf_assign(spark: SparkSession, sf_dir: str, nlist: int) -> DataFrame:
+    """(vec_id, e, cell): every vector bucketed to its nearest coarse cell,
+    persisted — the stored IVF index (see _ivf_assign_probes)."""
+    v = _emb(spark, sf_dir)
+    sim_vc = F.round(cosine_similarity(F.col("e"), F.col("ce")), 6)
+    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
+    return (
+        v.crossJoin(F.broadcast(_coarse_cells(v, nlist)))
+        .select("vec_id", "e", "cid", sim_vc.alias("sim"))
+        .withColumn("rn", F.row_number().over(w_assign))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "e", F.col("cid").alias("cell"))
+        .persist()
+    )
 
 
 def _ivf_assign_probes(
@@ -114,37 +134,9 @@ def _ivf_assign_probes(
     queries re-deriving the crossJoin+window per call was paying an
     ingest-time cost at query time. Probes depend on the query set and
     stay per-call."""
+    assign = session_memo(spark, sf_dir, "embeddings.parquet", _ivf_assign, nlist)
     v = _emb(spark, sf_dir)
-    cent = (
-        v.filter(F.col("vec_id") < nlist)
-        .withColumnsRenamed({"vec_id": "cid", "e": "ce"})
-    )
-    sim_vc = F.round(cosine_similarity(F.col("e"), F.col("ce")), 6)
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("sim"), F.asc("cid")
-    )
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        nlist,
-        _fp_key(sf_dir),
-    )
-    assign = _ivf_assign_memo.get(memo_key)
-    if assign is None:
-        # stale-fingerprint entries must be UNCACHED, not just re-keyed:
-        # CacheManager plan-equality would serve the old InMemoryRelation
-        from ..session import evict_stale_memo
-
-        evict_stale_memo(_ivf_assign_memo, memo_key, 3)
-        assign = (
-            v.crossJoin(F.broadcast(cent))
-            .select("vec_id", "e", "cid", sim_vc.alias("sim"))
-            .withColumn("rn", F.row_number().over(w_assign))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "e", F.col("cid").alias("cell"))
-            .persist()
-        )
-        _ivf_assign_memo[memo_key] = assign
+    cent = _coarse_cells(v, nlist)
     q = v.filter(F.col("vec_id") < N_QUERIES).withColumnsRenamed(
         {"vec_id": "qid", "e": "qe"}
     )
@@ -301,20 +293,6 @@ def _corpus_fingerprint(sf_dir: str) -> dict:
     if st is None:
         return {"src": src, "missing": True}
     return {"src": src, "size": st["size"], "mtime_ns": st["mtime_ns"]}
-
-
-def _fp_key(sf_dir: str, fname: str = "embeddings.parquet") -> tuple:
-    """Hashable corpus-fingerprint component for session memo keys. Every
-    memo caching anything DERIVED from the corpus (cell assignments,
-    centroids, PQ codebooks/encodings) keys on this, so regenerating the
-    dataset in place mid-session invalidates the memo instead of feeding a
-    fingerprint-mismatch rebuild with stale cached inputs — the silent-
-    staleness hole the r9 ADVICE found: the rebuild would consume old
-    memoized centroids yet stamp the NEW fingerprint, producing a
-    permanently 'current' index built from old data."""
-    from ..session import source_fingerprint
-
-    return source_fingerprint(sf_dir, fname)
 
 
 def read_index_meta(base: str) -> dict | None:
@@ -703,9 +681,6 @@ def ivf_upsert_index(spark: SparkSession, sf_dir: str, nlist: int = DNLIST) -> s
 # step SQL-expressible, so the trained index stays oracle-checked.
 TRAINED_ITERS = 2
 
-_first_n_cent_memo: dict[tuple, list[list[float]]] = {}
-_trained_cent_memo: dict[tuple, list[list[float]]] = {}
-
 
 def _first_n_centroids(
     spark: SparkSession, sf_dir: str, k: int
@@ -713,16 +688,17 @@ def _first_n_centroids(
     """The frozen first-*k* vectors — the untrained coarse grid, collected
     once per session (k x dim floats, the model artifact recorded in the
     index sidecar)."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), k, _fp_key(sf_dir))
-    if key not in _first_n_cent_memo:
-        _first_n_cent_memo[key] = [
-            [float(x) for x in r["e"]]
-            for r in _emb(spark, sf_dir)
-            .filter(F.col("vec_id") < k)
-            .orderBy("vec_id")
-            .collect()
-        ]
-    return _first_n_cent_memo[key]
+    return session_memo(spark, sf_dir, "embeddings.parquet", _collect_first_n, k)
+
+
+def _collect_first_n(spark: SparkSession, sf_dir: str, k: int) -> list[list[float]]:
+    return [
+        [float(x) for x in r["e"]]
+        for r in _emb(spark, sf_dir)
+        .filter(F.col("vec_id") < k)
+        .orderBy("vec_id")
+        .collect()
+    ]
 
 
 def lloyd_trained_centroids(
@@ -737,22 +713,17 @@ def lloyd_trained_centroids(
     oracle reproduces the trained centroid table with chained CTEs. At
     100 TB training runs on a sample at ingest; the E-step is a
     zero-shuffle literal-array scan per iteration."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        k,
-        iters,
-        _fp_key(sf_dir),
-    )
-    if key in _trained_cent_memo:
-        return _trained_cent_memo[key]
-    cents = _lloyd_iterate(
+    return session_memo(spark, sf_dir, "embeddings.parquet", _train_cells, k, iters)
+
+
+def _train_cells(
+    spark: SparkSession, sf_dir: str, k: int, iters: int
+) -> list[list[float]]:
+    return _lloyd_iterate(
         _emb(spark, sf_dir),
         [list(c) for c in _first_n_centroids(spark, sf_dir, k)],
         iters,
     )
-    _trained_cent_memo[key] = cents
-    return cents
 
 
 def _lloyd_iterate(
@@ -1452,9 +1423,6 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bm25_scored_memo: dict[tuple, tuple] = {}
-
-
 def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, score): the rounded BM25 score for every document — shared
     by the pure keyword search and the RRF hybrid fusion.
@@ -1463,16 +1431,10 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers invoked in one session previously each built and persisted an
     independent per_doc copy, accumulating executor cache across a
     multi-query run (ADVICE r5)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        _fp_key(sf_dir, "documents.parquet"),
-    )
-    if key in _bm25_scored_memo:
-        return _bm25_scored_memo[key][0]
-    from ..session import evict_stale_memo
+    return session_memo(spark, sf_dir, "documents.parquet", _bm25_build)[0]
 
-    evict_stale_memo(_bm25_scored_memo, key, 2)
+
+def _bm25_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
@@ -1510,11 +1472,10 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.round(score, 6).alias("score")
     )
     # memoize the PERSISTED intermediate alongside the result:
-    # evict_stale_memo unpersists every frame in a tuple entry, and
+    # session_memo unpersists every frame in a tuple entry, and
     # unpersisting only `scored` (not itself persisted) would leave
     # per_doc's cache pinned after a corpus-regen eviction (r12 review)
-    _bm25_scored_memo[key] = (scored, per_doc)
-    return scored
+    return scored, per_doc
 
 
 @register(
@@ -1877,8 +1838,6 @@ PQ_SHORTLIST = 50  # ADC shortlist size fed to the exact rerank
 # chained-CTE oracle tractable.
 PQ_TRAIN_ITERS = 2
 
-_pq_codebook_memo: dict[tuple, list[list[list[float]]]] = {}
-
 
 def _pq_frozen_codebook(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     """codebook[m][c] = PQ_DSUB-dim subvector c of subspace m, frozen from
@@ -1995,10 +1954,7 @@ def _pq_codebook(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     (session, corpus fingerprint) — in production this is the 'load the
     trained codebook' step; training happens once at index-build time and
     the result rides the durable index's _catalog_meta.json sidecar."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), _fp_key(sf_dir))
-    if key not in _pq_codebook_memo:
-        _pq_codebook_memo[key] = _pq_train_codebook(spark, sf_dir)
-    return _pq_codebook_memo[key]
+    return session_memo(spark, sf_dir, "embeddings.parquet", _pq_train_codebook)
 
 
 def _sqdist(a, b, dim: int | None = None):
@@ -2019,9 +1975,6 @@ def _sqdist(a, b, dim: int | None = None):
     )
 
 
-_pq_encoded_memo: dict[tuple, DataFrame] = {}
-
-
 def _pq_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """vec_id, e, code_0..code_{M-1} (int), d_0..d_{M-1} (chosen sq dist).
 
@@ -2029,13 +1982,10 @@ def _pq_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed IVF-PQ) read this table — in production it IS a stored table,
     written once at index-build time.
     """
-    # normalize like dedup._memo_key: 'sf0.1' and 'sf0.1/' are one dataset
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), _fp_key(sf_dir))
-    if key in _pq_encoded_memo:
-        return _pq_encoded_memo[key]
-    from ..session import evict_stale_memo
+    return session_memo(spark, sf_dir, "embeddings.parquet", _pq_encode_build)
 
-    evict_stale_memo(_pq_encoded_memo, key, 2)
+
+def _pq_encode_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = _pq_codebook(spark, sf_dir)
     if not cb or not cb[0]:
         # empty corpus: no codebook — the encode expression cannot even be
@@ -2045,11 +1995,8 @@ def _pq_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
             [f"code_{m} int" for m in range(PQ_M)]
             + [f"d_{m} double" for m in range(PQ_M)]
         )
-        out = spark.createDataFrame([], schema).persist()
-    else:
-        out = _pq_encode_with(_emb(spark, sf_dir), cb).persist()
-    _pq_encoded_memo[key] = out
-    return out
+        return spark.createDataFrame([], schema).persist()
+    return _pq_encode_with(_emb(spark, sf_dir), cb).persist()
 
 
 def _pq_encode_with(df: DataFrame, cb: list[list[list[float]]]) -> DataFrame:
@@ -2205,9 +2152,6 @@ def _pq_recon_expr(cb):
     )
 
 
-_pq_recon_memo: dict[tuple, DataFrame] = {}
-
-
 def _pq_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, re): PQ reconstructions — shared by the flat ADC scan, the
     composed IVF-PQ path, and the durable-codes read. Memoized per
@@ -2219,27 +2163,20 @@ def _pq_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     The checkpoint truncates downstream plans to a Scan ExistingRDD, so
     consumers never re-carry the literal tree; the decode itself still
     runs distributed, once per session."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), _fp_key(sf_dir))
-    if key not in _pq_recon_memo:
-        from ..session import evict_stale_memo
-
-        evict_stale_memo(_pq_recon_memo, key, 2)
-        cb = _pq_codebook(spark, sf_dir)
-        if not cb or not cb[0]:
-            # empty corpus: decode expression is unconstructible, result is
-            # empty either way (r14 empty-corpus sweep)
-            _pq_recon_memo[key] = spark.createDataFrame(
-                [], "vec_id long, re array<double>"
-            )
-        else:
-            enc = _pq_encoded(spark, sf_dir)
-            _pq_recon_memo[key] = enc.select(
-                "vec_id", _pq_recon_expr(cb).alias("re")
-            ).transform(cut(eager=False))
-    return _pq_recon_memo[key]
+    return session_memo(spark, sf_dir, "embeddings.parquet", _pq_recon_build)
 
 
-_ivfpq_cand_memo: dict[tuple, DataFrame] = {}
+def _pq_recon_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cb = _pq_codebook(spark, sf_dir)
+    if not cb or not cb[0]:
+        # empty corpus: decode expression is unconstructible, result is
+        # empty either way (r14 empty-corpus sweep)
+        return spark.createDataFrame([], "vec_id long, re array<double>")
+    return (
+        _pq_encoded(spark, sf_dir)
+        .select("vec_id", _pq_recon_expr(cb).alias("re"))
+        .transform(cut(eager=False))
+    )
 
 
 def _ivfpq_cand(spark: SparkSession, sf_dir: str, nlist: int = NLIST):
@@ -2252,19 +2189,18 @@ def _ivfpq_cand(spark: SparkSession, sf_dir: str, nlist: int = NLIST):
     Memoized behind the same lazy localCheckpoint + fingerprint discipline
     as _pq_recon, keyed on *nlist* like *assign* (only tests vary it);
     probes depend on the query set and stay per-call."""
-    assign, probes = _ivf_assign_probes(spark, sf_dir, nlist=nlist)
-    app, sf = spark.sparkContext.applicationId, sf_dir.rstrip("/")
-    key = (app, sf, nlist, _fp_key(sf_dir))
-    if key not in _ivfpq_cand_memo:
-        from ..session import evict_stale_memo
+    _, probes = _ivf_assign_probes(spark, sf_dir, nlist=nlist)
+    cand = session_memo(spark, sf_dir, "embeddings.parquet", _ivfpq_cand_build, nlist)
+    return cand, probes
 
-        evict_stale_memo(_ivfpq_cand_memo, key, 3)
-        _ivfpq_cand_memo[key] = (
-            _pq_recon(spark, sf_dir)
-            .join(assign.select("vec_id", "cell"), "vec_id")
-            .transform(cut(eager=False))
-        )
-    return _ivfpq_cand_memo[key], probes
+
+def _ivfpq_cand_build(spark: SparkSession, sf_dir: str, nlist: int) -> DataFrame:
+    assign = session_memo(spark, sf_dir, "embeddings.parquet", _ivf_assign, nlist)
+    return (
+        _pq_recon(spark, sf_dir)
+        .join(assign.select("vec_id", "cell"), "vec_id")
+        .transform(cut(eager=False))
+    )
 
 
 

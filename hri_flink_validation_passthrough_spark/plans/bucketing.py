@@ -32,10 +32,11 @@ QUERIES: dict[str, QuerySpec] = {}
 N_BUCKETS = 8
 
 # (appId, sf_dir, prefix) -> (tag, [catalog tables], [data dirs]): the
-# session-written table copies' analog of session.evict_stale_memo — when a
-# source fingerprint changes the tag, the PREVIOUS copy's catalog entries
-# and on-disk data are dropped instead of leaking one full table copy (and
-# one dead catalog name) per in-place regeneration (r10 self-review).
+# session-written table copies' analog of session.session_memo's eviction —
+# when a source fingerprint changes the tag, the PREVIOUS copy's catalog
+# entries and on-disk data are dropped instead of leaking one full table
+# copy (and one dead catalog name) per in-place regeneration (r10
+# self-review).
 _ARTIFACT_REG: dict[tuple, tuple] = {}
 
 
@@ -585,7 +586,7 @@ def zonemap_manifest(
 
         # drop a previous fingerprint's clustered copy (dir + cache entry)
         # before building the new one — the zonemap analog of
-        # _swap_artifacts / session.evict_stale_memo
+        # _swap_artifacts / session.session_memo's eviction
         for k in [k for k in _ZONEMAP_CACHE if k != key and k[:2] == key[:2]]:
             old_dir, _m = _ZONEMAP_CACHE.pop(k)
             _shutil.rmtree(os.path.dirname(old_dir), ignore_errors=True)

@@ -25,7 +25,7 @@ import os
 
 from itertools import count as _itercount
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _FP_MISSING = _itercount()
@@ -163,36 +163,53 @@ def source_fingerprint(sf_dir: str, fname: str) -> tuple:
     return (fname, st["size"], st["mtime_ns"])
 
 
-def evict_stale_memo(memo: dict, key: tuple, n_prefix: int) -> None:
-    """Drop AND unpersist memo entries sharing *key*'s first *n_prefix*
-    components but not its fingerprint tail. Fingerprint-aware keys alone
-    do NOT close the staleness hole for PERSISTED entries: Spark's
-    CacheManager substitutes any semantically-equal plan with the existing
-    InMemoryRelation, so a rebuilt DataFrame (same path, same expressions)
-    would silently serve the STALE cached data unless the old entry is
-    uncached first (observed: in-place corpus regen returned the old
-    row count until the stale persist was dropped)."""
-    for k in [k for k in memo if k != key and k[:n_prefix] == key[:n_prefix]]:
-        v = memo.pop(k)
+# One memo for everything a session derives from a source file: schemas,
+# persisted intermediates, model artifacts (centroids, codebooks, bitmaps)
+# and temp dirs. Key: (applicationId, sf_dir, builder, params, source
+# fingerprint); session_memo is the only code that builds one.
+_MEMO: dict[tuple, object] = {}
+
+
+def session_memo(spark: SparkSession, sf_dir: str, source: str, build, *params):
+    """``build(spark, sf_dir, *params)``, computed once per session, dataset,
+    builder, params and content of *source* (a file under *sf_dir*).
+
+    The builder sees only what its key holds, so an entry built for other
+    parameters is never served; 'sf0.1' and 'sf0.1/' are one dataset. On a
+    miss, the entries of the same slot built from an older *source* are
+    evicted, and an evicted DataFrame (or tuple of them) is unpersisted:
+    Spark's CacheManager substitutes any semantically-equal plan with the
+    existing InMemoryRelation, so a rebuild over a file regenerated in place
+    would otherwise serve the stale cached rows. Other values are dropped.
+    """
+    sf = sf_dir.rstrip("/")
+    slot = (
+        spark.sparkContext.applicationId,
+        sf,
+        f"{build.__module__}.{build.__qualname__}",
+        params,
+    )
+    key = slot + (source_fingerprint(sf, source),)
+    if key in _MEMO:
+        return _MEMO[key]
+    for k in [k for k in _MEMO if k[:4] == slot]:
+        v = _MEMO.pop(k)
         for df in v if isinstance(v, tuple) else (v,):
-            try:
+            if isinstance(df, DataFrame):
                 df.unpersist()
-            except Exception:
-                pass
+    value = _MEMO[key] = build(spark, sf, *params)
+    return value
 
 
-# (applicationId, sf_dir, name, source_fingerprint) -> inferred StructType.
-# Schema METADATA only — the catalog every production engine consults
-# instead of re-reading parquet footers per query (r15 opt, guide §1/§6):
-# a bare ``spark.read.parquet`` runs a footer-inference job on EVERY call
-# (measured 0.16-0.37 s warm per table vs 0.027 s with the schema
-# supplied), and the repo's queries call load_table 1-3× per invocation.
-# Fingerprint-keyed like every corpus-derived memo (r10 rule) so a dataset
-# regenerated in place re-infers instead of serving a stale schema; the
-# applicationId component keeps sessions with different reader confs
-# (e.g. a driver session where ``nanosAsLong`` could not be applied) from
-# sharing inference results.
-_SCHEMA_MEMO: dict[tuple, object] = {}
+def _parquet_schema(spark: SparkSession, sf_dir: str, name: str):
+    """Inferred schema of one table. Memoized because a bare
+    ``spark.read.parquet`` runs a footer-inference job on EVERY call
+    (measured 0.16-0.37 s warm per table vs 0.027 s with the schema
+    supplied), and the repo's queries call load_table 1-3x per invocation.
+    The applicationId in the memo key keeps sessions with different reader
+    confs (e.g. a driver session where ``nanosAsLong`` could not be
+    applied) from sharing inference results."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):
@@ -203,21 +220,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     (``div``) to microseconds — matching DuckDB's truncating nanos→micros
     read; float division would round and drift by 1µs.
     """
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        name,
-        source_fingerprint(sf_dir, f"{name}.parquet"),
-    )
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        # drop stale entries for the same table (different fingerprint)
-        for k in [k for k in _SCHEMA_MEMO if k != key and k[:3] == key[:3]]:
-            del _SCHEMA_MEMO[k]
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _SCHEMA_MEMO[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+    schema = session_memo(spark, sf_dir, f"{name}.parquet", _parquet_schema, name)
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
     for f in df.schema.fields:
         if f.name == "ts" and f.dataType.simpleString() == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))

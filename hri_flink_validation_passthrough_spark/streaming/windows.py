@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from .. import iofs
 from ..operators.text import HLL_ORACLE, QSK_BIN_CENTS, QSK_ORACLE, QSK_QS
 from ..plans import QuerySpec, register
-from ..session import prepare
+from ..session import prepare, session_memo
 from ..materialize import cut
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -383,16 +383,16 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SENTINEL_OFFSET_H = 10
 _WM = "1 hour"
 
-_ssjoin_dirs: dict[str, str] = {}
-
 
 def _outer_join_input_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize events + 2 far-future sentinel rows (user_id -1, one per
     join side) into a temp dir the file stream source replays."""
+    return session_memo(spark, sf_dir, "events.parquet", _write_ssjoin_input)
+
+
+def _write_ssjoin_input(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
-    if sf_dir in _ssjoin_dirs:
-        return _ssjoin_dirs[sf_dir]
     from ..session import load_table
 
     e = load_table(spark, sf_dir, "events").select(
@@ -424,7 +424,6 @@ def _outer_join_input_dir(spark: SparkSession, sf_dir: str) -> str:
     )
     tmp = tempfile.mkdtemp(prefix="hri_ssjoin_")
     e.unionByName(sent).write.mode("overwrite").parquet(tmp)
-    _ssjoin_dirs[sf_dir] = tmp
     return tmp
 
 
@@ -1214,15 +1213,14 @@ QSKW_WINDOW = "1 day"
 QSKW_WM = "1 hour"
 _QSKW_SENTINEL_OFFSET_D = 3
 
-_qskw_dirs: dict[str, str] = {}
-
 
 def _qsk_window_input_dir(spark: SparkSession, sf_dir: str) -> str:
+    return session_memo(spark, sf_dir, "events.parquet", _write_qskw_input)
+
+
+def _write_qskw_input(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
-    key = sf_dir.rstrip("/")
-    if key in _qskw_dirs:
-        return _qskw_dirs[key]
     from ..session import load_table
 
     e = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
@@ -1235,7 +1233,6 @@ def _qsk_window_input_dir(spark: SparkSession, sf_dir: str) -> str:
     )
     tmp = tempfile.mkdtemp(prefix="hri_qskw_")
     e.unionByName(sent).write.mode("overwrite").parquet(tmp)
-    _qskw_dirs[key] = tmp
     return tmp
 
 

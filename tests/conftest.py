@@ -53,6 +53,16 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def drop_session_memo(*builders) -> None:
+    """Forget the session memo's entries built by *builders* — a fresh
+    session's view of those artifacts, other memoized entries untouched."""
+    from hri_flink_validation_passthrough_spark import session
+
+    names = {f"{b.__module__}.{b.__qualname__}" for b in builders}
+    for k in [k for k in session._MEMO if k[2] in names]:
+        del session._MEMO[k]
+
+
 @pytest.fixture(scope="session")
 def spark():
     from hri_flink_validation_passthrough_spark.session import build_session

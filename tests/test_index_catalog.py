@@ -13,15 +13,14 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, drop_session_memo
 
 
 def _clear_session_memos():
     from hri_flink_validation_passthrough_spark.operators import similarity as S
 
     S._ivf_index_dir_memo.clear()
-    S._trained_cent_memo.clear()
-    S._first_n_cent_memo.clear()
+    drop_session_memo(S._train_cells, S._collect_first_n)
 
 
 def test_fresh_session_resolves_trained_index_from_metadata_alone(
@@ -314,6 +313,42 @@ def test_dedup_memo_staleness_same_session_regen(spark, tmp_path):
         "shingle memo served the stale pre-regeneration corpus "
         f"({n1} == {n2})"
     )
+
+
+def test_window_input_dirs_track_same_session_regen(spark, tmp_path):
+    """The streaming harnesses replay events from a session-memoized temp
+    dir (events + far-future sentinels). Regenerating events.parquet in
+    place mid-session must rebuild that dir, not replay the stale one."""
+    import duckdb
+
+    from hri_flink_validation_passthrough_spark.streaming import windows as W
+
+    corpus = tmp_path / "corpus"
+    os.makedirs(corpus)
+    src = str(corpus / "events.parquet")
+    shutil.copy(os.path.join(SF_ORACLE, "events.parquet"), src)
+    con = duckdb.connect()
+
+    def rows(path: str) -> int:
+        return con.execute(
+            f"SELECT count(*) FROM read_parquet('{path}/*.parquet')"
+        ).fetchone()[0]
+
+    dirs = [W._outer_join_input_dir, W._qsk_window_input_dir]
+    before = [rows(d(spark, str(corpus))) for d in dirs]
+
+    # regenerate IN PLACE with half the events — same path, new content
+    con.execute(
+        f"CREATE TABLE t AS SELECT * FROM read_parquet('{src}')"
+        " WHERE event_id % 2 = 0"
+    )
+    con.execute(f"COPY t TO '{src}' (FORMAT PARQUET)")
+    n_events = con.execute("SELECT count(*) FROM t").fetchone()[0]
+
+    after = [rows(d(spark, str(corpus))) for d in dirs]
+    # each dir holds the events plus its sentinel rows (2 and 1)
+    assert after == [n_events + 2, n_events + 1], (before, after)
+    con.close()
 
 
 def test_bucketing_artifacts_track_regen_and_cleanup(spark, tmp_path):

@@ -104,77 +104,6 @@ def test_unknown_batch_and_interleaving(spark):
     assert len(out) == 5
 
 
-def _canon_routed(rows):
-    out = []
-    for r in rows:
-        v = bytes(r.value) if r.value is not None else None
-        if r.dest == "notification" and v is not None:
-            v = json.dumps(json.loads(v), sort_keys=True)
-        hs = (
-            None
-            if r.headers is None
-            else [
-                (h.key, None if h.value is None else bytes(h.value))
-                for h in r.headers
-            ]
-        )
-        out.append((r.dest, r.batch_id, None if r.key is None else bytes(r.key), v, hs))
-    return sorted(out, key=repr)
-
-
-def test_interval_plan_matches_encoded_plan(spark, monkeypatch):
-    """r15 interval-decision boundary: the metadata-only replay + JVM
-    broadcast-interval routing must emit EXACTLY the payload-through-Python
-    (encoded) plan's rows on randomized scenarios — full row-level compare
-    incl. headers and notification bodies, not just _summarize counts."""
-    import random
-
-    from tests.test_relational_differential import (
-        CTRL_SCHEMA,
-        DELAY_MS,
-        REC_SCHEMA,
-        _gen_scenario,
-    )
-
-    for seed in range(3):
-        rec_rows, ctrl_rows = _gen_scenario(random.Random(0x15B0 + seed))
-        records = spark.createDataFrame(rec_rows, REC_SCHEMA)
-        controls = spark.createDataFrame(ctrl_rows, CTRL_SCHEMA)
-        monkeypatch.setenv("HRI_PASSTHROUGH_BOUNDARY", "interval")
-        a = run_pipeline_batch(records, controls, completion_delay_ms=DELAY_MS).collect()
-        monkeypatch.setenv("HRI_PASSTHROUGH_BOUNDARY", "encoded")
-        b = run_pipeline_batch(records, controls, completion_delay_ms=DELAY_MS).collect()
-        assert _canon_routed(a) == _canon_routed(b), f"seed {seed} diverged"
-
-
-def test_interval_plan_ambiguous_key_falls_back(spark, monkeypatch):
-    """Two data rows sharing (time_ms, seq) make interval boundaries
-    inexpressible; the decide pass must emit the fallback marker and
-    run_pipeline_batch must transparently build the encoded plan — outputs
-    identical to forcing 'encoded' directly."""
-    rows = [
-        (b"k0", b"v0", [("batchId", b"B")], 100, 7),
-        (b"k1", b"v1", [("batchId", b"B")], 100, 7),  # full tie
-        (b"k2", b"v2", [("batchId", b"B")], 200, 8),
-    ]
-    from tests.test_relational_differential import CTRL_SCHEMA, REC_SCHEMA
-
-    records = spark.createDataFrame(rows, REC_SCHEMA)
-    ctrl = spark.createDataFrame(
-        [
-            ("B", "B", "ingest.t.x.in", "x", -1, "started", None, 0, 0),
-            ("B", "B", "ingest.t.x.in", "x", -1, "sendCompleted", 3, 10_000, 1),
-        ],
-        CTRL_SCHEMA,
-    )
-    monkeypatch.setenv("HRI_PASSTHROUGH_BOUNDARY", "interval")
-    a = run_pipeline_batch(records, ctrl, completion_delay_ms=1000).collect()
-    monkeypatch.setenv("HRI_PASSTHROUGH_BOUNDARY", "encoded")
-    b = run_pipeline_batch(records, ctrl, completion_delay_ms=1000).collect()
-    assert _canon_routed(a) == _canon_routed(b)
-    assert sum(1 for r in a if r.dest == "out") == 3
-
-
 def test_apply_rows_handles_null_header_value():
     """r11 self-review: a Kafka header with a NULL value is legal (the
     envelope schema declares it nullable and the batch path converts it to

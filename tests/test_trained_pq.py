@@ -27,7 +27,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, drop_session_memo
 
 K = 8
 DIM = 64  # PQ_M * PQ_DSUB
@@ -169,9 +169,9 @@ def test_durable_ivfpq_decodes_from_sidecar_alone(spark, tmp_path, monkeypatch):
 
     def _fresh():
         S._ivf_index_dir_memo.clear()
-        S._pq_codebook_memo.clear()
-        S._pq_encoded_memo.clear()
-        S._pq_recon_memo.clear()
+        drop_session_memo(
+            S._pq_train_codebook, S._pq_encode_build, S._pq_recon_build
+        )
 
     _fresh()
     first = {
