@@ -131,22 +131,6 @@ def notification_json(payload: dict) -> bytes:
     return json.dumps(p, ensure_ascii=False).encode("utf-8")
 
 
-def outputs_to_rows(outs: Outputs, batch_id: str | None) -> list[dict]:
-    """Flatten Outputs into destination-tagged Kafka-shaped row dicts
-    (ROUTED_SCHEMA order) — shared by the batch replay and the streaming
-    stateful processor."""
-    return [
-        {"dest": r.dest, "batch_id": batch_id, "key": r.key, "value": r.value,
-         "headers": r.headers}
-        for r in outs.routed
-    ] + [
-        {"dest": "notification", "batch_id": batch_id,
-         "key": (batch_id or "").encode("utf-8"),
-         "value": notification_json(n), "headers": []}
-        for n in outs.notifications
-    ]
-
-
 class BatchStateMachine:
     """Event-at-a-time core. Callers own state persistence and clocks."""
 

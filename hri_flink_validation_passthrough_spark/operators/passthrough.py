@@ -2,8 +2,17 @@
 DataFrames (SURVEY.md §7 phase 1), plus oracle-checked scenario queries that
 replay the ``events`` table through the REAL state machine.
 
-Plan shape: normalize both planes → union → ``groupBy(batch_id)`` →
-``applyInPandas`` replay (one shuffle on batchId, Arrow-batched). Scale note:
+This module owns the replay seam both engines share. ``encoded_envelope``
+unions the two planes and encodes ``headers`` and ``notification`` as their
+``to_json`` strings JVM-side; ``replay_group`` orders one group of those
+rows (``_sorted_rows``) and replays it through the state machine, in bulk
+for the passthrough validator without a lookup and row by row otherwise;
+``decode_routed`` turns the routed rows' headers back into HEADER_TYPE.
+``run_pipeline_batch`` calls it once per batch id, and the streaming state
+function (streaming/topology.py) once per batch id and trigger.
+
+Plan shape: encoded envelope → ``groupBy(batch_id)`` → ``applyInPandas``
+replay (one shuffle on batchId, Arrow-batched) → decode. Scale note:
 per-batch lifecycle needs single-key sequencing, so a hot batch is an
 inherent serialization point — same as the reference's keyBy(batchId). The
 streaming path bounds per-trigger work with ``maxOffsetsPerTrigger``; record
@@ -13,6 +22,8 @@ per-key state.
 
 from __future__ import annotations
 
+import base64
+import json
 import math
 
 import pandas as pd
@@ -21,7 +32,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..model import SEND_COMPLETED, STARTED, TERMINATED, UNKNOWN_BATCH_FAILURE
+from ..model import (
+    COMPLETED,
+    HEADER_TYPE,
+    SEND_COMPLETED,
+    STARTED,
+    TERMINATED,
+    UNKNOWN_BATCH_FAILURE,
+)
 from ..plans import QuerySpec, register
 from ..session import load_table, prepare
 from ..sources.envelope import (
@@ -36,7 +54,6 @@ from .batch_state import (
     Outputs,
     failure_body,
     notification_json,
-    outputs_to_rows,
     passthrough_validator,
 )
 
@@ -44,37 +61,14 @@ QUERIES: dict[str, QuerySpec] = {}
 
 
 # ---------------------------------------------------------------------------
-# pandas-side replay (runs inside applyInPandas, one call per batchId)
+# The replay seam: both engines (run_pipeline_batch below, the streaming
+# state function in streaming/topology.py) cross one encoded boundary and
+# call one replay per group
 # ---------------------------------------------------------------------------
-def _none_if_nan(v):
-    if v is None:
-        return None
-    if isinstance(v, float) and math.isnan(v):
-        return None
-    return v
-
-
-def _headers_to_py(h) -> list:
-    if h is None or (isinstance(h, float) and math.isnan(h)):
-        return []
-    out = []
-    for item in h:
-        if isinstance(item, dict):
-            k, v = item.get("key"), item.get("value")
-        else:  # Row-like / tuple
-            k, v = item[0], item[1]
-        out.append({"key": k, "value": bytes(v) if v is not None else None})
-    return out
-
-
-_notification_json = notification_json  # shared with the streaming processor
-
-
 _OUT_COLS = ["dest", "batch_id", "key", "value", "headers"]
 
-# ROUTED_SCHEMA with ``headers`` as its ``to_json`` string form — the
-# fast-path boundary schema (decoded back to HEADER_TYPE right after the
-# replay; see run_pipeline_batch).
+# ROUTED_SCHEMA with ``headers`` as its ``to_json`` string form: what the
+# replay emits, decoded back to HEADER_TYPE by ``decode_routed``.
 _ROUTED_ENC_SCHEMA = T.StructType(
     [
         f
@@ -85,24 +79,115 @@ _ROUTED_ENC_SCHEMA = T.StructType(
 )
 
 
-def _replay_rowwise(pdf: pd.DataFrame, machine: BatchStateMachine, batch_id):
-    """Reference implementation: event-at-a-time through the pure core."""
-    st = BatchState(batch_id=batch_id or "")
-    outs = Outputs()
+def encoded_envelope(records: DataFrame, notifications: DataFrame) -> DataFrame:
+    """Both planes as one envelope whose ``headers`` and ``notification``
+    columns are their ``to_json`` strings. Nested ARRAY<STRUCT<..binary>> and
+    STRUCT columns build per-row Python object trees at every Arrow crossing
+    (the dominant boundary cost of the replay, OPTIMIZATION_r15.md); flat
+    strings do not. Routing passes headers through untouched, and the
+    replay parses a notification only on the few control rows."""
+    env = control_to_envelope(notifications).unionByName(data_to_envelope(records))
+    return env.select(
+        "batch_id", "kind", "time_ms", "seq", "key", "value",
+        F.to_json("headers").alias("headers"),
+        F.to_json("notification").alias("notification"),
+    )
+
+
+def decode_routed(routed: DataFrame) -> DataFrame:
+    """The replay's output (``_ROUTED_ENC_SCHEMA``) as ROUTED_SCHEMA rows: a
+    lossless roundtrip of the input headers, binary values (base64), null
+    values, empty and null lists included."""
+    return routed.select(
+        "dest", "batch_id", "key", "value",
+        F.from_json("headers", HEADER_TYPE).alias("headers"),
+    )
+
+
+def _sorted_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The replay ordering rule: by time (untimed rows first), controls
+    before data at equal time, then seq."""
+    return pdf.assign(is_data=pdf["kind"] != "control").sort_values(
+        ["time_ms", "is_data", "seq"], na_position="first"
+    )
+
+
+def _row_time(t) -> int | None:
+    if t is None or (isinstance(t, float) and math.isnan(t)):
+        return None
+    return int(t)
+
+
+def _notification(raw) -> dict:
+    return json.loads(raw) if isinstance(raw, str) else {}
+
+
+def _headers(raw) -> list:
+    """A header string as the validator's ``[{key, value}]`` list (base64
+    values decoded to bytes; a null list is empty)."""
+    if not isinstance(raw, str):
+        return []
+    return [
+        {
+            "key": h.get("key"),
+            "value": None if h.get("value") is None else base64.b64decode(h["value"]),
+        }
+        for h in json.loads(raw)
+    ]
+
+
+def _routed_frame(frames: list, notifs: list[dict], batch_id) -> pd.DataFrame:
+    """Routed payload frames plus one row per emitted notification."""
+    if notifs:
+        frames = frames + [
+            pd.DataFrame(
+                {
+                    "dest": "notification",
+                    "batch_id": batch_id,
+                    "key": [(batch_id or "").encode("utf-8")] * len(notifs),
+                    "value": [notification_json(n) for n in notifs],
+                    "headers": "[]",
+                }
+            )
+        ]
+    frames = [f for f in frames if len(f)]
+    if not frames:
+        return pd.DataFrame(columns=_OUT_COLS)
+    return pd.concat(frames, ignore_index=True)[_OUT_COLS]
+
+
+def _replay_rowwise(
+    pdf: pd.DataFrame,
+    machine: BatchStateMachine,
+    batch_id,
+    st: BatchState | None = None,
+    now_ms: int | None = None,
+    end_input: bool = True,
+) -> pd.DataFrame:
+    """Event-at-a-time through the pure core, on either clock (see
+    :func:`_route_blocks`): the path of custom validators and lookups, and
+    the reference the bulk path is pinned to. A data row's headers are
+    decoded only for the validator; its routed row carries the input header
+    string unchanged."""
+    if st is None:
+        st = BatchState(batch_id=batch_id or "")
+    routed: list[tuple] = []
+    notifs: list[dict] = []
     for row in pdf.itertuples(index=False):
-        now = _none_if_nan(row.time_ms)
-        now = int(now) if now is not None else None
+        now = now_ms if now_ms is not None else _row_time(row.time_ms)
         if row.kind == "control":
-            notif = {k: _none_if_nan(v) for k, v in dict(row.notification).items()}
-            outs.extend(machine.on_control(st, notif, now))
+            out = machine.on_control(st, _notification(row.notification), now)
         else:
             key = bytes(row.key) if row.key is not None else None
             value = bytes(row.value) if row.value is not None else None
-            outs.extend(
-                machine.on_data(st, key, value, _headers_to_py(row.headers), now)
+            out = machine.on_data(st, key, value, _headers(row.headers), now)
+            routed.extend(
+                (r.dest, batch_id, r.key, r.value, row.headers) for r in out.routed
             )
-    outs.extend(machine.end_of_input(st))
-    return pd.DataFrame(outputs_to_rows(outs, batch_id), columns=_OUT_COLS)
+        notifs.extend(out.notifications)
+    if end_input:
+        notifs.extend(machine.end_of_input(st).notifications)
+    return _routed_frame([pd.DataFrame(routed, columns=_OUT_COLS)], notifs, batch_id)
 
 
 def _route_blocks(
@@ -112,18 +197,17 @@ def _route_blocks(
     st: BatchState | None = None,
     now_ms: int | None = None,
     end_input: bool = True,
-    encoded: bool = False,
 ) -> tuple[list, list]:
     """Passthrough fast path CORE: control rows still go one-by-one through
     the state machine, but runs of data rows between controls are routed in
     BULK (pandas slices, no per-row Python). Returns ``(parts, notifs)``
     where ``parts`` is ``[(block_slice, dest, body_override), ...]`` in
     replay order and ``notifs`` the emitted notification dicts, which
-    :func:`_replay_vectorized` formats as payload rows. Valid ONLY for the
-    passthrough validator with no external lookup — the per-row path covers
+    :func:`replay_group` formats as payload rows. Valid ONLY for the
+    passthrough validator with no external lookup — the row-wise path covers
     everything else. The differential property test
     (tests/test_replay_equivalence.py) pins this to the row-wise reference
-    on randomized scenarios.
+    on randomized scenarios, on both clocks.
 
     Two time modes:
     - batch replay (``now_ms=None``): logical time = each row's ``time_ms``,
@@ -144,18 +228,7 @@ def _route_blocks(
       deadline governs the tail;
     - otherwise       → every row routes to .out; the only state change is
       processed += n and at most one sendCompleted-overage failure.
-
-    ``encoded=True`` (r15, guide §4 boundary slimming): the ``headers`` and
-    ``notification`` columns arrive as their ``to_json`` string forms
-    instead of Arrow nested types. Data-row headers are pure passthrough
-    here, so flat strings cross the boundary instead of per-row Python
-    object trees (the dominant Arrow-conversion cost of the batch replay);
-    control rows — a handful per batch — parse their notification with
-    ``json.loads``. Only ``run_pipeline_batch``'s fast path sets this; the
-    streaming processor and the row-wise core keep real structs.
     """
-    from ..model import COMPLETED, SEND_COMPLETED, TERMINATED
-
     if st is None:
         st = BatchState(batch_id=batch_id or "")
     parts: list[tuple[pd.DataFrame, str, bytes | None]] = []  # slice, dest, body
@@ -164,8 +237,7 @@ def _route_blocks(
     def _block_now(block: pd.DataFrame, idx: int) -> int | None:
         if now_ms is not None:
             return now_ms
-        t = _none_if_nan(block["time_ms"].iloc[idx])
-        return int(t) if t is not None else None
+        return _row_time(block["time_ms"].iloc[idx])
 
     def flush_block(block: pd.DataFrame) -> None:
         n = len(block)
@@ -238,23 +310,10 @@ def _route_blocks(
     for c in control_pos:
         flush_block(pdf.iloc[pos:c])
         row = pdf.iloc[c]
-        if now_ms is not None:
-            now = now_ms
-        else:
-            t = _none_if_nan(row["time_ms"])
-            now = int(t) if t is not None else None
-        if encoded:
-            import json as _json
-
-            raw = row["notification"]
-            notif = _json.loads(raw) if isinstance(raw, str) else {}
-        else:
-            notif = {
-                k: _none_if_nan(v) for k, v in dict(row["notification"]).items()
-            }
-        out = Outputs()
-        out.extend(machine.on_control(st, notif, now))
-        notifs.extend(out.notifications)
+        now = now_ms if now_ms is not None else _row_time(row["time_ms"])
+        notifs.extend(
+            machine.on_control(st, _notification(row["notification"]), now).notifications
+        )
         pos = c + 1
     flush_block(pdf.iloc[pos:])
     if end_input:
@@ -263,74 +322,38 @@ def _route_blocks(
     return parts, notifs
 
 
-def _replay_vectorized(
+def replay_group(
     pdf: pd.DataFrame,
     machine: BatchStateMachine,
     batch_id,
     st: BatchState | None = None,
     now_ms: int | None = None,
     end_input: bool = True,
-    encoded: bool = False,
-):
-    """Payload formatter over :func:`_route_blocks`: emits ROUTED-shaped
-    pandas rows carrying each block's key/value/headers (the batch fast
-    path's in-Python form, and the streaming processor's only form)."""
-    parts, notifs = _route_blocks(
-        pdf, machine, batch_id, st=st, now_ms=now_ms,
-        end_input=end_input, encoded=encoded,
-    )
-
-    frames = []
-    for block, dest, body in parts:
-        frames.append(
-            pd.DataFrame(
-                {
-                    "dest": dest,
-                    "batch_id": batch_id,
-                    "key": block["key"].values,
-                    "value": (
-                        block["value"].values if body is None else [body] * len(block)
-                    ),
-                    "headers": block["headers"].values,
-                }
-            )
+) -> pd.DataFrame:
+    """Replay one group of encoded envelope rows (``encoded_envelope``)
+    through ``machine``; returns ``_ROUTED_ENC_SCHEMA``-shaped rows. The one
+    replay both engines call: the batch replay once per batch id, the
+    stream once per (batch id, trigger) with its state ``st`` and the
+    trigger's processing time ``now_ms``. Sorts by the ordering rule, then
+    routes runs of data rows in bulk when the validator is the passthrough
+    one and there is no lookup, and event-at-a-time otherwise."""
+    pdf = _sorted_rows(pdf)
+    if machine.validator is not passthrough_validator or machine.lookup is not None:
+        return _replay_rowwise(pdf, machine, batch_id, st, now_ms, end_input)
+    parts, notifs = _route_blocks(pdf, machine, batch_id, st, now_ms, end_input)
+    frames = [
+        pd.DataFrame(
+            {
+                "dest": dest,
+                "batch_id": batch_id,
+                "key": block["key"].values,
+                "value": block["value"].values if body is None else [body] * len(block),
+                "headers": block["headers"].values,
+            }
         )
-    if notifs:
-        frames.append(
-            pd.DataFrame(
-                {
-                    "dest": "notification",
-                    "batch_id": batch_id,
-                    "key": [(batch_id or "").encode("utf-8")] * len(notifs),
-                    "value": [_notification_json(n) for n in notifs],
-                    "headers": (["[]"] if encoded else [[]]) * len(notifs),
-                }
-            )
-        )
-    if not frames:
-        return pd.DataFrame(columns=_OUT_COLS)
-    return pd.concat(frames, ignore_index=True)[_OUT_COLS]
-
-
-def make_replay(
-    delay_ms: int, validator=passthrough_validator, lookup=None, encoded: bool = False
-):
-    """Build the per-group replay fn; closure is cloudpickled to executors.
-    ``encoded`` (fast path only) — see ``_replay_vectorized``."""
-    fast = validator is passthrough_validator and lookup is None
-    if encoded and not fast:
-        raise ValueError("encoded envelope is only valid for the fast path")
-
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        machine = BatchStateMachine(delay_ms, validator, lookup)
-        pdf = pdf.sort_values(["time_ms", "kind_rank", "seq"], na_position="first")
-        raw_bid = pdf["batch_id"].iloc[0]
-        batch_id = raw_bid if isinstance(raw_bid, str) else None
-        if fast:
-            return _replay_vectorized(pdf, machine, batch_id, encoded=encoded)
-        return _replay_rowwise(pdf, machine, batch_id)
-
-    return replay
+        for block, dest, body in parts
+    ]
+    return _routed_frame(frames, notifs, batch_id)
 
 
 def run_pipeline_batch(
@@ -343,44 +366,15 @@ def run_pipeline_batch(
     """The whole topology as one pure function over DataFrames (the
     source/sink-agnostic seam of SURVEY.md §3.2). Returns destination-tagged
     Kafka-shaped rows (ROUTED_SCHEMA); callers fan out by ``dest``."""
-    env = control_to_envelope(notifications).unionByName(
-        data_to_envelope(records), allowMissingColumns=False
-    )
-    env = env.withColumn(
-        "kind_rank", F.when(F.col("kind") == "control", 0).otherwise(1)
-    )
-    fast = validator is passthrough_validator and lookup is None
-    if not fast:
-        return env.groupBy("batch_id").applyInPandas(
-            make_replay(completion_delay_ms, validator, lookup), ROUTED_SCHEMA
-        )
-    # Encoded fast path (r15, guide §4): the passthrough validator never
-    # inspects headers and notifications only matter on the handful of
-    # control rows, yet the nested ARRAY<STRUCT<..binary>> / notification
-    # STRUCT columns dominated the Arrow boundary cost — each crossing
-    # builds per-row Python object trees both ways (measured ~0.6 s of the
-    # sf0.1 replay; flat-width identity A/B in OPTIMIZATION_r15.md). Encode
-    # both as their ``to_json`` strings JVM-side, ship flat strings through
-    # the replay (headers are pure passthrough there), and decode back with
-    # ``from_json`` after — a lossless roundtrip incl. binary header values
-    # (base64) and null/empty shapes, pinned by tests.
-    from ..model import HEADER_TYPE
 
-    enc = env.select(
-        "batch_id", "kind", "time_ms", "seq", "kind_rank", "key", "value",
-        F.to_json("headers").alias("headers"),
-        F.to_json("notification").alias("notification"),
-    )
-    routed_enc = enc.groupBy("batch_id").applyInPandas(
-        make_replay(completion_delay_ms, validator, lookup, encoded=True),
-        _ROUTED_ENC_SCHEMA,
-    )
-    return routed_enc.select(
-        "dest",
-        "batch_id",
-        "key",
-        "value",
-        F.from_json("headers", HEADER_TYPE).alias("headers"),
+    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
+        machine = BatchStateMachine(completion_delay_ms, validator, lookup)
+        raw_bid = pdf["batch_id"].iloc[0]
+        return replay_group(pdf, machine, raw_bid if isinstance(raw_bid, str) else None)
+
+    env = encoded_envelope(records, notifications)
+    return decode_routed(
+        env.groupBy("batch_id").applyInPandas(replay, _ROUTED_ENC_SCHEMA)
     )
 
 

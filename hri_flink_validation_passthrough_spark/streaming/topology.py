@@ -8,9 +8,11 @@ notification.
 
 One stateful implementation over the pure core (operators/batch_state.py):
 ``lifecycle_with_group_state`` under ``applyInPandasWithState`` (GroupState +
-ProcessingTimeTimeout). Timeout semantics: Spark clears a key's timeout
-whenever the function runs for that key, so the deadline is re-armed from
-state on every invocation. A batch id that is still unknown after its
+ProcessingTimeTimeout), over the same encoded envelope and the same per-group
+replay as the batch engine (operators/passthrough.py: ``encoded_envelope``,
+``replay_group``, ``decode_routed``). Timeout semantics: Spark clears a key's
+timeout whenever the function runs for that key, so the deadline is re-armed
+from state on every invocation. A batch id that is still unknown after its
 trigger keeps no state row: its records route to invalid without touching a
 counter, and a missing row rebuilds the identical fresh ``BatchState``.
 
@@ -42,13 +44,16 @@ from ..model import DEFAULT_BATCH_COMPLETION_DELAY_MS
 from ..operators.batch_state import (
     BatchState,
     BatchStateMachine,
-    Outputs,
-    outputs_to_rows,
     passthrough_validator,
 )
-from ..sources.envelope import ROUTED_SCHEMA, control_to_envelope, data_to_envelope
+from ..operators.passthrough import (
+    _ROUTED_ENC_SCHEMA,
+    _routed_frame,
+    decode_routed,
+    encoded_envelope,
+    replay_group,
+)
 
-_OUT_COLS = ["dest", "batch_id", "key", "value", "headers"]
 _STATE_SCHEMA = "state_json STRING"
 # Whole-trigger ordering (r11) buffers one (key, trigger) group as a single
 # pandas frame; per-trigger volume is expected to be bounded by the source's
@@ -59,82 +64,16 @@ _STATE_SCHEMA = "state_json STRING"
 TRIGGER_GROUP_WARN_ROWS = 5_000_000
 
 
-def _sorted_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-    """The replay ordering rule (controls before data at equal time, then
-    seq) — pandas twin of run_pipeline_batch's kind_rank column; a change
-    to the tiebreak must land in BOTH or batch/stream oracle agreement
-    breaks (the differential suite pins them together)."""
-    kind_rank = (pdf["kind"] == "control").map({True: 0, False: 1})
-    return pdf.assign(kind_rank=kind_rank).sort_values(
-        ["time_ms", "kind_rank", "seq"], na_position="first"
-    )
-
-
-def _apply_rows(machine, st, pdf: pd.DataFrame, now: int, outs: Outputs) -> None:
-    from ..operators.passthrough import _headers_to_py
-
-    for row in _sorted_rows(pdf).itertuples(index=False):
-        if row.kind == "control":
-            notif = {
-                k: (None if pd.isna(v) else v)
-                for k, v in dict(row.notification).items()
-            }
-            outs.extend(machine.on_control(st, notif, now))
-        else:
-            key_b = bytes(row.key) if row.key is not None else None
-            val_b = bytes(row.value) if row.value is not None else None
-            # the batch path's converter: a null header VALUE is legal in
-            # Kafka and must become None, not a TypeError that kills the
-            # query (r11 self-review — the inline bytes(h["value"]) copy
-            # crashed on it)
-            outs.extend(
-                machine.on_data(st, key_b, val_b, _headers_to_py(row.headers), now)
-            )
-
-
-def _headers_to_json(h) -> str | None:
-    """Encode a routed row's header list (``[{key, value-bytes}]`` dicts) as
-    the SAME JSON form Spark's ``to_json``/``from_json`` use for
-    ``HEADER_TYPE`` (binary values as base64) — the encoded-boundary twin of
-    the rows :func:`outputs_to_rows` emits with real lists."""
-    if h is None:
-        return None
-    import base64
-
-    out = []
-    for item in h:
-        k, v = item["key"], item["value"]
-        out.append(
-            {"key": k}
-            if v is None
-            else {"key": k, "value": base64.b64encode(bytes(v)).decode("ascii")}
-        )
-    return json.dumps(out)
-
-
 def lifecycle_with_group_state(
     completion_delay_ms: int = DEFAULT_BATCH_COMPLETION_DELAY_MS,
     validator=passthrough_validator,
     lookup=None,
-    encoded: bool = False,
 ):
-    """Returns the (key, pdf_iter, state) function for applyInPandasWithState.
-    ``encoded`` (fast path only — see build_routed_stream): headers and
-    notification arrive/leave as their ``to_json`` string forms."""
-
-    fast = validator is passthrough_validator and lookup is None
-    if encoded and not fast:
-        raise ValueError("encoded envelope is only valid for the fast path")
-
-    def _rows_frame(rows: list[dict]) -> pd.DataFrame:
-        pdf = pd.DataFrame(rows, columns=_OUT_COLS)
-        if encoded:
-            pdf["headers"] = pdf["headers"].map(_headers_to_json)
-        return pdf
+    """Returns the (key, pdf_iter, state) function for applyInPandasWithState
+    over the encoded envelope: a timer pass, or the trigger's rows through
+    the shared replay (operators/passthrough.py::replay_group)."""
 
     def fn(key, pdf_iter, state) -> Iterator[pd.DataFrame]:
-        from ..operators.passthrough import _replay_vectorized
-
         machine = BatchStateMachine(completion_delay_ms, validator, lookup)
         batch_id = key[0] if key else None
         stored = state.getOption  # property in the GroupState API
@@ -147,13 +86,12 @@ def lifecycle_with_group_state(
         if state.hasTimedOut:
             outs = machine.on_timer(st, st.deadline_ms or 0)
             state.update((json.dumps(st.to_dict()),))
-            rows = outputs_to_rows(outs, batch_id)
-            if rows:
-                yield _rows_frame(rows)
+            out_pdf = _routed_frame([], outs.notifications, batch_id)
+            if len(out_pdf):
+                yield out_pdf
             return
 
         now = state.getCurrentProcessingTimeMs()
-        frames: list[pd.DataFrame] = []
         # Concatenate the trigger's Arrow chunks BEFORE the sort: sorting
         # per chunk let a control row in a later chunk apply after data
         # rows with larger time_ms from an earlier chunk — a chunk-size-
@@ -181,23 +119,13 @@ def lifecycle_with_group_state(
                 "bound per-trigger volume",
                 batch_id, len(whole), TRIGGER_GROUP_WARN_ROWS,
             )
-        if whole is None:
-            pass
-        elif fast:
-            # bulk routing (same vectorized core as the batch replay, with
-            # the trigger's processing time as the constant clock)
-            out_pdf = _replay_vectorized(
-                _sorted_rows(whole), machine, batch_id,
-                st=st, now_ms=now, end_input=False, encoded=encoded,
+        out_pdf = None
+        if whole is not None:
+            # the trigger's processing time is the constant clock; the
+            # timer pass above owns deadlines that come due between triggers
+            out_pdf = replay_group(
+                whole, machine, batch_id, st=st, now_ms=now, end_input=False
             )
-            if len(out_pdf):
-                frames.append(out_pdf)
-        else:
-            outs = Outputs()
-            _apply_rows(machine, st, whole, now, outs)
-            rows = outputs_to_rows(outs, batch_id)
-            if rows:
-                frames.append(pd.DataFrame(rows, columns=_OUT_COLS))
 
         if st.known:
             state.update((json.dumps(st.to_dict()),))
@@ -210,7 +138,8 @@ def lifecycle_with_group_state(
             # to invalid without touching a counter, so the row would equal
             # a fresh BatchState and only grow the store
             state.remove()
-        yield from frames
+        if out_pdf is not None and len(out_pdf):
+            yield out_pdf
 
     return fn
 
@@ -276,49 +205,16 @@ def build_routed_stream(
             f"build_routed_stream: per_trigger_bound={per_trigger_bound!r} "
             "must be 'source-option' or a positive int"
         )
-    env = control_to_envelope(notifications).unionByName(data_to_envelope(records))
-    fast = validator is passthrough_validator and lookup is None
-    if fast:
-        # Encoded boundary for the streaming fast path (r15, guide §4 —
-        # same trade as run_pipeline_batch's encoded plan): the passthrough
-        # validator never inspects headers and notifications only matter on
-        # control rows, so the nested ARRAY<STRUCT<..binary>> headers and
-        # the notification STRUCT cross the stateful Arrow boundary as
-        # their ``to_json`` strings (encoded BELOW the keyed exchange, so
-        # the batchId shuffle also carries flat strings) and headers are
-        # ``from_json``-decoded right after the stateful operator — routed
-        # rows are bit-identical. Custom validators/lookups keep structs.
-        from ..model import HEADER_TYPE
-        from ..operators.passthrough import _ROUTED_ENC_SCHEMA
-
-        enc = env.select(
-            "batch_id", "kind", "time_ms", "seq", "key", "value",
-            F.to_json("headers").alias("headers"),
-            F.to_json("notification").alias("notification"),
-        )
-        routed_enc = enc.groupBy("batch_id").applyInPandasWithState(
-            lifecycle_with_group_state(
-                completion_delay_ms, validator, lookup, encoded=True
-            ),
-            outputStructType=_ROUTED_ENC_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="ProcessingTimeTimeout",
-        )
-        return routed_enc.select(
-            "dest",
-            "batch_id",
-            "key",
-            "value",
-            F.from_json("headers", HEADER_TYPE).alias("headers"),
-        )
-    return env.groupBy("batch_id").applyInPandasWithState(
+    routed = encoded_envelope(records, notifications).groupBy(
+        "batch_id"
+    ).applyInPandasWithState(
         lifecycle_with_group_state(completion_delay_ms, validator, lookup),
-        outputStructType=ROUTED_SCHEMA,
+        outputStructType=_ROUTED_ENC_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf="ProcessingTimeTimeout",
     )
+    return decode_routed(routed)
 
 
 def start_memory_query(

@@ -390,9 +390,18 @@ def _outer_join_input_dir(spark: SparkSession, sf_dir: str) -> str:
     return session_memo(spark, sf_dir, "events.parquet", _write_ssjoin_input)
 
 
-def _write_ssjoin_input(spark: SparkSession, sf_dir: str) -> str:
+def _app_scoped_dir(prefix: str) -> str:
+    """A fresh dir under the SparkContext's SparkFiles root, which Spark
+    deletes on ``SparkContext.stop()``: the dir lives exactly as long as
+    the applicationId in the memo key that holds its path."""
     import tempfile
 
+    from pyspark import SparkFiles
+
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
+
+
+def _write_ssjoin_input(spark: SparkSession, sf_dir: str) -> str:
     from ..session import load_table
 
     e = load_table(spark, sf_dir, "events").select(
@@ -422,7 +431,7 @@ def _write_ssjoin_input(spark: SparkSession, sf_dir: str) -> str:
         "user_id",
         "event_type",
     )
-    tmp = tempfile.mkdtemp(prefix="hri_ssjoin_")
+    tmp = _app_scoped_dir("hri_ssjoin_")
     e.unionByName(sent).write.mode("overwrite").parquet(tmp)
     return tmp
 
@@ -1219,8 +1228,6 @@ def _qsk_window_input_dir(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _write_qskw_input(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
     from ..session import load_table
 
     e = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
@@ -1231,7 +1238,7 @@ def _write_qskw_input(spark: SparkSession, sf_dir: str) -> str:
         F.lit("sentinel").alias("event_type"),
         F.lit(0.01).alias("value"),
     )
-    tmp = tempfile.mkdtemp(prefix="hri_qskw_")
+    tmp = _app_scoped_dir("hri_qskw_")
     e.unionByName(sent).write.mode("overwrite").parquet(tmp)
     return tmp
 

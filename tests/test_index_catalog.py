@@ -351,6 +351,21 @@ def test_window_input_dirs_track_same_session_regen(spark, tmp_path):
     con.close()
 
 
+def test_window_input_dirs_live_under_the_spark_files_root(spark):
+    """The harness input dirs are created under the SparkFiles root, which
+    Spark deletes on ``SparkContext.stop()``, so no session leaves them
+    behind in the system temp dir."""
+    from pyspark import SparkFiles
+
+    from hri_flink_validation_passthrough_spark.streaming import windows as W
+
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    for input_dir in (W._outer_join_input_dir, W._qsk_window_input_dir):
+        path = os.path.realpath(input_dir(spark, SF_ORACLE))
+        assert os.path.commonpath([root, path]) == root, (root, path)
+        assert os.listdir(path)
+
+
 def test_bucketing_artifacts_track_regen_and_cleanup(spark, tmp_path):
     """r10 review follow-up: session-written table copies (partitioned
     events here) must track an in-place source regen via the fingerprint

@@ -106,38 +106,133 @@ def test_unknown_batch_and_interleaving(spark):
 
 def test_apply_rows_handles_null_header_value():
     """r11 self-review: a Kafka header with a NULL value is legal (the
-    envelope schema declares it nullable and the batch path converts it to
-    None); the streaming row-wise applier crashed with TypeError on
-    bytes(None). Drive _apply_rows directly with such a row."""
+    envelope schema declares it nullable); the streaming row-wise applier
+    once crashed with TypeError on bytes(None). Drive the one row-wise loop
+    on the stream's clock with such a row: the validator sees the value as
+    None and the routed row keeps the header string unchanged."""
     import pandas as pd
 
     from hri_flink_validation_passthrough_spark.model import STARTED
     from hri_flink_validation_passthrough_spark.operators.batch_state import (
         BatchState,
         BatchStateMachine,
-        Outputs,
-        passthrough_validator,
     )
-    from hri_flink_validation_passthrough_spark.streaming.topology import (
-        _apply_rows,
+    from hri_flink_validation_passthrough_spark.operators.passthrough import (
+        replay_group,
     )
 
-    machine = BatchStateMachine(1000, passthrough_validator, None)
+    seen = []
+
+    def record_headers(key, value, headers):
+        seen.append(headers)
+        return True, None
+
+    machine = BatchStateMachine(1000, record_headers, None)
     st = BatchState(batch_id="b1")
-    outs = Outputs()
     notif = {
         "id": "b1", "name": "b1", "topic": "ingest.t.x.in", "dataType": "x",
         "invalidThreshold": -1, "status": STARTED,
-        "expectedRecordCount": None,
     }
+    headers = json.dumps([{"key": "batchId"}])  # to_json drops the null value
     pdf = pd.DataFrame(
         [
             {"kind": "control", "key": None, "value": None, "headers": None,
-             "notification": notif, "time_ms": 1, "seq": 0},
-            {"kind": "data", "key": b"k", "value": b"v",
-             "headers": [{"key": "batchId", "value": None}],
+             "notification": json.dumps(notif), "time_ms": 1, "seq": 0},
+            {"kind": "data", "key": b"k", "value": b"v", "headers": headers,
              "notification": None, "time_ms": 2, "seq": 1},
         ]
     )
-    _apply_rows(machine, st, pdf, now=5, outs=outs)
+    out = replay_group(pdf, machine, "b1", st=st, now_ms=5, end_input=False)
     assert st.processed == 1  # the record routed despite the null header
+    assert seen == [[{"key": "batchId", "value": None}]]
+    assert list(out["dest"]) == ["out"] and list(out["headers"]) == [headers]
+
+
+# Header shapes the string boundary must carry exactly (null value, non-UTF-8
+# bytes, duplicate keys, an empty list, a null list); the last two carry no
+# batchId, so they route as unknown-batch records.
+EDGE_HEADERS = [
+    [("batchId", b"B"), ("nullv", None)],
+    [("batchId", b"B"), ("bin", b"\xff\x00\x80")],
+    [("batchId", b"B"), ("dup", b"1"), ("dup", b"2")],
+    [],
+    None,
+]
+
+
+def routed_headers(row):
+    """A routed row's headers as ``[(key, bytes | None)]``, or None."""
+    if row.headers is None:
+        return None
+    return [(h.key, None if h.value is None else bytes(h.value))
+            for h in row.headers]
+
+
+def test_header_edge_cases_survive_both_replay_paths(spark):
+    """The bulk path (passthrough validator) and the row-wise path (a custom
+    validator) both cross the string boundary; routed headers must equal
+    the input headers exactly on each."""
+    rows = [
+        (str(i).encode(), b"v", h, "t", 1, i)
+        for i, h in enumerate(EDGE_HEADERS)
+    ]
+    records = (
+        spark.createDataFrame(rows, HRI_RECORD_SCHEMA)
+        .withColumn("time_ms", F.lit(100) + F.col("offset"))
+        .withColumn("seq", F.col("offset"))
+    )
+    ctrl = _control_df(
+        spark,
+        [({"id": "B", "status": "started", "invalidThreshold": -1}, 0, 0)],
+    )
+
+    def reject_odd_keys(key, value, headers):
+        return int(key.decode()) % 2 == 0, "odd"
+
+    for validator, dests in [
+        (None, ["out", "out", "out", "invalid", "invalid"]),
+        (reject_odd_keys, ["out", "invalid", "out", "invalid", "invalid"]),
+    ]:
+        kw = {} if validator is None else {"validator": validator}
+        got = {
+            int(bytes(r.key)): r
+            for r in run_pipeline_batch(records, ctrl, **kw).collect()
+            if r.dest != "notification"
+        }
+        assert [got[i].dest for i in range(5)] == dests
+        assert [routed_headers(got[i]) for i in range(5)] == EDGE_HEADERS
+        for i in (3, 4):
+            assert json.loads(bytes(got[i].value)) == {
+                "failure": "Bad Message - Unknown batchId"
+            }
+
+
+def test_lookup_resolves_batches_without_control_rows(spark):
+    """Management mode: no control rows at all; the lookup's hit routes to
+    .out and completes, its miss routes to .invalid as an unknown batch."""
+    from hri_flink_validation_passthrough_spark.sources.lookup import (
+        MapBatchLookup,
+    )
+
+    lookup = MapBatchLookup(
+        [{"id": "batch-42", "status": "sendCompleted", "expectedRecordCount": 3,
+          "invalidThreshold": -1}]
+    )
+    records = _records_df(spark, 3).unionByName(
+        _records_df(spark, 2, batch=b"ghost")
+    )
+    rows = run_pipeline_batch(
+        records, _control_df(spark, []), completion_delay_ms=5000, lookup=lookup
+    ).collect()
+    by_dest = {}
+    for r in rows:
+        by_dest.setdefault((r.dest, r.batch_id), []).append(r)
+    assert len(by_dest[("out", "batch-42")]) == 3
+    assert [json.loads(bytes(r.value)) for r in by_dest[("invalid", "ghost")]] == [
+        {"failure": "Bad Message - Unknown batchId"}
+    ] * 2
+    [note] = by_dest[("notification", "batch-42")]
+    assert json.loads(bytes(note.value))["status"] == "completed"
+    assert set(by_dest) == {
+        ("out", "batch-42"), ("invalid", "ghost"), ("notification", "batch-42")
+    }

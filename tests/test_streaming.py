@@ -348,8 +348,8 @@ def test_passthrough_route_empty_corpus_returns_empty_summary(spark, tmp_path):
 def _cold_start_env(spark, tmp_path, ctrl_rows, rec_rows, per_trigger_bound=1000):
     """Start the topology AFTER staging all control/data files: the first
     microbatch ingests everything, so the per-trigger whole-group sort by
-    (time_ms, kind_rank, seq) — not file-arrival races — defines the
-    processing order. This is how 'mid-trigger' scenarios are staged
+    the replay ordering rule (time, controls first, seq) — not file-arrival
+    races — defines the processing order. This is how 'mid-trigger' scenarios are staged
     deterministically (r15 adversarial streaming pins)."""
     data_dir = str(tmp_path / "data")
     ctrl_dir = str(tmp_path / "ctrl")

@@ -21,6 +21,7 @@ from hri_flink_validation_passthrough_spark.streaming.topology import (
     build_routed_stream,
     start_memory_query,
 )
+from tests.test_pipeline_spark import EDGE_HEADERS, routed_headers
 
 CTRL_SCHEMA = T.StructType(
     list(NOTIFICATION_SCHEMA.fields)
@@ -30,6 +31,21 @@ REC_SCHEMA = T.StructType(
     list(HRI_RECORD_SCHEMA.fields)
     + [T.StructField("time_ms", T.LongType()), T.StructField("seq", T.LongType())]
 )
+
+
+def _run_until(spark, routed, ckpt, n_rows, timeout_s=30):
+    name = f"val_{uuid.uuid4().hex[:8]}"
+    q = start_memory_query(routed, name, ckpt)
+    try:
+        t0 = time.time()
+        while time.time() - t0 < timeout_s:
+            rows = spark.sql(f"SELECT * FROM {name}").collect()
+            if len(rows) >= n_rows:
+                return rows
+            time.sleep(0.4)
+        pytest.fail(f"timeout; rows={len(rows)}")
+    finally:
+        q.stop()
 
 
 def test_custom_validator_and_threshold_in_streaming(spark, tmp_path):
@@ -49,9 +65,12 @@ def test_custom_validator_and_threshold_in_streaming(spark, tmp_path):
         [tuple(started[f.name] for f in NOTIFICATION_SCHEMA.fields) + (0, 0)],
         CTRL_SCHEMA,
     ).write.parquet(ctrl_dir)
+    # keys 0-9 carry the plain batchId header, keys 10-14 the header edge
+    # cases (13 and 14 carry no batchId: unknown batch)
+    headers = [[("batchId", b"B")]] * 10 + EDGE_HEADERS
     recs = [
-        (str(i).encode(), b"v", [("batchId", b"B")], "t", 1, i, 100 + i, i)
-        for i in range(10)  # 5 odd keys > threshold 3 → batch fails
+        (str(i).encode(), b"v", h, "t", 1, i, 100 + i, i)
+        for i, h in enumerate(headers)  # 6 odd keys of B > threshold 3
     ]
     spark.createDataFrame(recs, REC_SCHEMA).write.parquet(data_dir)
 
@@ -60,29 +79,64 @@ def test_custom_validator_and_threshold_in_streaming(spark, tmp_path):
         spark.readStream.schema(CTRL_SCHEMA).parquet(ctrl_dir),
         completion_delay_ms=60_000,
         validator=reject_odd_keys,
-        per_trigger_bound=10,  # the 10 staged records
+        per_trigger_bound=15,  # the 15 staged records
     )
-    name = f"val_{uuid.uuid4().hex[:8]}"
-    q = start_memory_query(routed, name, ckpt)
-    try:
-        t0 = time.time()
-        while time.time() - t0 < 30:
-            rows = spark.sql(f"SELECT * FROM {name}").collect()
-            if len(rows) >= 11:
-                break
-            time.sleep(0.4)
-        else:
-            pytest.fail(f"timeout; rows={len(rows)}")
-    finally:
-        q.stop()
+    rows = _run_until(spark, routed, ckpt, 16)
 
     out = [r for r in rows if r.dest == "out"]
     inv = [r for r in rows if r.dest == "invalid"]
     notifs = [json.loads(bytes(r.value)) for r in rows if r.dest == "notification"]
-    assert sorted(bytes(r.key).decode() for r in out) == ["0", "2", "4", "6", "8"]
-    assert len(inv) == 5
-    assert json.loads(bytes(inv[0].value))["failure"].endswith("rejected")
+    assert sorted(int(bytes(r.key)) for r in out) == [0, 2, 4, 6, 8, 10, 12]
+    assert len(inv) == 8
+    failures = {int(bytes(r.key)): json.loads(bytes(r.value))["failure"] for r in inv}
+    assert failures[1].endswith("rejected")
+    assert failures[13] == failures[14] == "Bad Message - Unknown batchId"
     assert [n["status"] for n in notifs] == ["failed"]  # threshold 3 < 4th invalid
+    by_key = {int(bytes(r.key)): routed_headers(r) for r in out + inv}
+    assert [by_key[i] for i in range(15)] == headers
+
+
+def test_lookup_resolves_batches_in_streaming(spark, tmp_path):
+    """Management mode through the stream: no control rows at all; the
+    lookup's hit routes to .out and completes on the timer, its miss routes
+    to .invalid as an unknown batch."""
+    from hri_flink_validation_passthrough_spark.sources.lookup import (
+        MapBatchLookup,
+    )
+
+    data_dir, ctrl_dir, ckpt = (
+        str(tmp_path / "d"), str(tmp_path / "c"), str(tmp_path / "k"),
+    )
+    spark.createDataFrame([], CTRL_SCHEMA).write.parquet(ctrl_dir)
+    recs = [
+        (str(i).encode(), b"v", [("batchId", b"H" if i < 3 else b"M")],
+         "t", 1, i, 100 + i, i)
+        for i in range(5)
+    ]
+    spark.createDataFrame(recs, REC_SCHEMA).write.parquet(data_dir)
+    lookup = MapBatchLookup(
+        [{"id": "H", "status": "sendCompleted", "expectedRecordCount": 3,
+          "invalidThreshold": -1}]
+    )
+    routed = build_routed_stream(
+        spark.readStream.schema(REC_SCHEMA).parquet(data_dir),
+        spark.readStream.schema(CTRL_SCHEMA).parquet(ctrl_dir),
+        completion_delay_ms=500,
+        lookup=lookup,
+        per_trigger_bound=5,
+    )
+    rows = _run_until(spark, routed, ckpt, 6)
+
+    got = sorted((r.dest, r.batch_id, int(bytes(r.key))) for r in rows
+                 if r.dest != "notification")
+    assert got == [("invalid", "M", 3), ("invalid", "M", 4),
+                   ("out", "H", 0), ("out", "H", 1), ("out", "H", 2)]
+    assert {json.loads(bytes(r.value))["failure"] for r in rows
+            if r.dest == "invalid"} == {"Bad Message - Unknown batchId"}
+    notes = [json.loads(bytes(r.value)) for r in rows if r.dest == "notification"]
+    assert [(n["id"], n["status"], n["recordCount"]) for n in notes] == [
+        ("H", "completed", 3)
+    ]
 
 
 def test_unbounded_replay_rejected_at_build(spark, tmp_path):
@@ -146,8 +200,8 @@ def test_oversized_trigger_group_logs_warning(monkeypatch, caplog):
     from hri_flink_validation_passthrough_spark.streaming import topology
 
     monkeypatch.setattr(
-        passthrough, "_replay_vectorized",
-        lambda *a, **k: pd.DataFrame(columns=topology._OUT_COLS),
+        topology, "replay_group",
+        lambda *a, **k: pd.DataFrame(columns=passthrough._OUT_COLS),
     )
 
     class FakeState:
