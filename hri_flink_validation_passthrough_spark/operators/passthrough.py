@@ -26,6 +26,7 @@ import base64
 import json
 import math
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -104,12 +105,25 @@ def decode_routed(routed: DataFrame) -> DataFrame:
     )
 
 
+def _nulls_first(col: pd.Series) -> np.ndarray:
+    """A nullable long column as a sort key whose nulls sort first."""
+    if col.dtype.kind in "iu" and not col.hasnans:
+        return col.to_numpy()
+    return col.to_numpy(dtype="float64", na_value=-np.inf)
+
+
 def _sorted_rows(pdf: pd.DataFrame) -> pd.DataFrame:
     """The replay ordering rule: by time (untimed rows first), controls
-    before data at equal time, then seq."""
-    return pdf.assign(is_data=pdf["kind"] != "control").sort_values(
-        ["time_ms", "is_data", "seq"], na_position="first"
+    before data at equal time, then seq (nulls first); stable. ``np.lexsort``
+    takes its last key as the primary one."""
+    order = np.lexsort(
+        (
+            _nulls_first(pdf["seq"]),
+            (pdf["kind"] != "control").to_numpy(),
+            _nulls_first(pdf["time_ms"]),
+        )
     )
+    return pdf.take(order)
 
 
 def _row_time(t) -> int | None:

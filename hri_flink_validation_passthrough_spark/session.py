@@ -17,6 +17,26 @@ makes the worker's per-task ``importlib.invalidate_caches()`` skip unchanged
 archives (see ``_skip_unchanged_zip_rereads`` in ``__init__``). With a
 pip-only pyspark (no ``pyspark.zip`` on the worker path) only the spark-core
 jar's importers were paying, so the gain is smaller there.
+
+Streaming checkpoints on a ``local[...]`` master are written through Spark's
+``FileSystemBasedCheckpointFileManager`` (``LOCAL_CHECKPOINT_MANAGER``), not
+the default FileContext-based one. pip-installed PySpark has no native Hadoop
+library, so Hadoop forks a ``readlink`` or ``chmod`` process for every
+link-status or permission call: ~10 forks per checkpoint file under the
+FileContext manager, ~110 per routed-stream trigger (11 files: 4 state
+deltas, their 4 checksum companions, offsets, commits, the source log). The
+FileSystem manager renames with ``FileSystem.rename`` (an atomic POSIX
+``rename(2)`` on the local FS) and asks for no link status, which leaves the
+2 ``chmod``s of each file's create. Hadoop ``.crc`` files and Spark's
+checkpoint checksum files are still written and verified. A manager class
+the caller set is kept, and cluster masters keep the FileContext manager:
+there the checkpoint lives on a shared FS whose atomic no-overwrite rename
+Spark relies on. One local-FS difference: the metadata log (offsets,
+commits) writes with ``overwriteIfPossible=false``, which this manager does
+as "check that the destination does not exist, then rename" rather than one
+failing rename. Two applications racing on one checkpoint dir are still
+caught, except inside that window; within one application Spark already
+refuses a second active run of the same query.
 """
 
 from __future__ import annotations
@@ -56,6 +76,13 @@ RUNTIME_CONF: dict[str, str] = {
     # oracle comparisons; we never rely on silent overflow.
     "spark.sql.ansi.enabled": "false",
 }
+
+
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def _local_cpus() -> int:
@@ -106,6 +133,15 @@ def prepare(spark: SparkSession) -> SparkSession:
             spark.conf.set(
                 "spark.sql.adaptive.coalescePartitions.initialPartitionNum", "8"
             )
+    except Exception:
+        pass
+    # Local masters checkpoint through FileSystem.rename: no per-file
+    # readlink/chmod forks (see the module docstring). Caller's choice wins.
+    try:
+        master = spark.sparkContext.master
+        local = master == "local" or master.startswith("local[")
+        if local and not spark.conf.get(CHECKPOINT_MANAGER_KEY, None):
+            spark.conf.set(CHECKPOINT_MANAGER_KEY, LOCAL_CHECKPOINT_MANAGER)
     except Exception:
         pass
     return spark

@@ -28,6 +28,11 @@ reference's ``keyBy``; ``maxOffsetsPerTrigger`` bounds per-trigger work. A
 single hot batch serializes on one task, same as in Flink. State partitions =
 cores (``session.prepare``; the harness replays cap them at 8), fixed at the
 first checkpoint: one stateful wave per trigger, kept across restarts.
+Checkpoint files (state deltas and their checksums, offsets, commits, the
+source log) go through Spark's FileSystem-based manager on local masters
+(``session.prepare``): one ``rename(2)`` each, no readlink forks. Cluster
+masters keep the FileContext manager and its atomic no-overwrite rename on
+the shared checkpoint FS.
 """
 
 from __future__ import annotations

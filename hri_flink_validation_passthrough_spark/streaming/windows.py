@@ -520,7 +520,6 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     "all agree on the happy path.",
 )
 def stream_passthrough_route(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     import time
 
     from ..operators.passthrough import _derive_control, _summarize
@@ -532,7 +531,8 @@ def stream_passthrough_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     n_events = e.count()
     n_batches = e.select("event_type").distinct().count()
-    tmp = tempfile.mkdtemp(prefix="hri_stream_route_")
+    # under the SparkFiles root: the checkpoint left below goes with the app
+    tmp = _app_scoped_dir("hri_stream_route_")
     from .topology import TRIGGER_GROUP_WARN_ROWS
 
     # Per-trigger bound (r12 verdict ask #3): at driver SFs the whole
@@ -601,7 +601,8 @@ def stream_passthrough_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the returned frame reads the in-memory sink, never these files —
         # drop the events-sized replay copies so repeated bench reps don't
         # accumulate one each (same class as the ADVICE r10 maintenance-
-        # work-dir leak). The checkpoint dir deliberately stays: the state
+        # work-dir leak). The checkpoint dir deliberately stays until
+        # SparkContext.stop() deletes the SparkFiles root: the state
         # store's async maintenance thread can touch it briefly after
         # stop() returns (observed failedToCommitStateFileError once when
         # the whole tmp tree was removed), and it is KB-sized.

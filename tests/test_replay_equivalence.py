@@ -154,3 +154,31 @@ def test_fast_path_equals_rowwise_stream_clock(seed):
         assert _rows(a) == _rows(b), f"seed {seed} diverged at rows {lo}:{hi}"
         assert st_a.to_dict() == st_b.to_dict(), f"seed {seed} state diverged"
 
+
+def test_ordering_rule_matches_the_three_key_sort():
+    """``_sorted_rows`` (one lexsort) orders exactly as a stable 3-key
+    ``sort_values`` by (time nulls first, controls first, seq nulls first),
+    on groups with null times, null seqs and duplicate keys."""
+    rng = random.Random(7)
+    for case in range(300):
+        n = rng.randint(0, 50)
+        nullable = case % 2 == 0
+        pdf = pd.DataFrame(
+            {
+                "kind": [rng.choice(["control", "data", "data"]) for _ in range(n)],
+                "time_ms": [
+                    None if nullable and rng.random() < 0.2
+                    else rng.choice([0, 1, 5, DELAY, 1_700_000_000_000])
+                    for _ in range(n)
+                ],
+                "seq": [
+                    None if nullable and rng.random() < 0.1 else rng.randint(-1, 4)
+                    for _ in range(n)
+                ],
+                "row": range(n),
+            }
+        )
+        want = pdf.assign(is_data=pdf["kind"] != "control").sort_values(
+            ["time_ms", "is_data", "seq"], na_position="first", kind="stable"
+        )
+        assert list(_sorted_rows(pdf)["row"]) == list(want["row"]), case

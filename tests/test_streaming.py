@@ -579,6 +579,11 @@ def test_routed_stream_state_partitions_match_cores(spark, tmp_path):
         q.stop()
 
 
+class _FakeConf(dict):
+    def set(self, k, v):
+        self[k] = v
+
+
 def test_prepare_sizes_shuffle_partitions_to_cores():
     """prepare() sets shuffle partitions (a stream's state partitions) to
     the session's cores, with no floor: a 4-core session gets 4, not 8.
@@ -588,15 +593,107 @@ def test_prepare_sizes_shuffle_partitions_to_cores():
 
     from hri_flink_validation_passthrough_spark.session import prepare
 
-    class _Conf(dict):
-        def set(self, k, v):
-            self[k] = v
-
     initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     for cores, batch in ((4, "8"), (8, None), (16, None)):
         fake = SimpleNamespace(
-            conf=_Conf(), sparkContext=SimpleNamespace(defaultParallelism=cores)
+            conf=_FakeConf(), sparkContext=SimpleNamespace(defaultParallelism=cores)
         )
         prepare(fake)
         assert fake.conf["spark.sql.shuffle.partitions"] == str(cores)
         assert fake.conf.get(initial) == batch
+
+
+def test_prepare_picks_filesystem_checkpoint_manager_on_local_masters():
+    """A local master checkpoints through Spark's FileSystem-based manager
+    (no readlink/chmod forks per rename); cluster masters keep Spark's
+    default; a class the caller set is kept; a second prepare() is a no-op."""
+    from types import SimpleNamespace
+
+    from hri_flink_validation_passthrough_spark.session import (
+        CHECKPOINT_MANAGER_KEY,
+        LOCAL_CHECKPOINT_MANAGER,
+        prepare,
+    )
+
+    def fake(master, conf=()):
+        return SimpleNamespace(
+            conf=_FakeConf(conf),
+            sparkContext=SimpleNamespace(defaultParallelism=4, master=master),
+        )
+
+    assert LOCAL_CHECKPOINT_MANAGER.endswith(".FileSystemBasedCheckpointFileManager")
+    for master in ("local[4]", "local[*]", "local"):
+        s = prepare(fake(master))
+        assert s.conf[CHECKPOINT_MANAGER_KEY] == LOCAL_CHECKPOINT_MANAGER
+        assert prepare(s).conf[CHECKPOINT_MANAGER_KEY] == LOCAL_CHECKPOINT_MANAGER
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:443"):
+        assert CHECKPOINT_MANAGER_KEY not in prepare(fake(master)).conf
+    mine = "com.example.MyCheckpointFileManager"
+    s = prepare(fake("local[4]", {CHECKPOINT_MANAGER_KEY: mine}))
+    assert s.conf[CHECKPOINT_MANAGER_KEY] == mine
+
+
+def test_streaming_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    """The fixture session's streams resolve the FileSystem-based manager
+    (the class StreamExecution gets from CheckpointFileManager.create)."""
+    jvm = spark._jvm
+    cfm = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    m = cfm.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert m.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
+def test_routed_stream_state_keeps_both_checksum_files(spark, tmp_path):
+    """Under the FileSystem-based manager every state delta still gets its
+    Hadoop ``.N.delta.crc`` and Spark's ``N.delta.crc`` checksum file: the
+    manager swap drops no integrity check."""
+    import glob
+    import os
+
+    q, rows = _cold_start_env(
+        spark, tmp_path, [_notif_row("started", t=0, seq=0)],
+        [_rec_row(i) for i in range(5)],
+    )
+    try:
+        t0 = time.time()
+        while time.time() - t0 < 30 and len(_dest(rows(), "out")) < 5:
+            time.sleep(0.3)
+        assert len(_dest(rows(), "out")) == 5
+    finally:
+        q.stop()
+    names = {
+        name
+        for part in glob.glob(str(tmp_path / "ckpt" / "state" / "0" / "*"))
+        for name in os.listdir(part)
+    }
+    assert {"1.delta", ".1.delta.crc", "1.delta.crc"} <= names, sorted(names)
+
+
+def test_stream_route_scratch_dir_lives_under_the_spark_files_root(
+    spark, tmp_path
+):
+    """stream_passthrough_route stages its replay inputs and checkpoint in
+    a dir under the SparkFiles root, which Spark deletes on
+    ``SparkContext.stop()``: no run leaves one behind in the system temp
+    dir."""
+    import glob
+    import os
+    import tempfile
+
+    import pyarrow.parquet as pq
+    from pyspark import SparkFiles
+
+    from hri_flink_validation_passthrough_spark.streaming import windows
+    from tests.conftest import SF_SMALL
+
+    src = pq.read_table(os.path.join(SF_SMALL, "events.parquet"))
+    pq.write_table(src.schema.empty_table(), str(tmp_path / "events.parquet"))
+    pattern = "hri_stream_route_*"
+    root = SparkFiles.getRootDirectory()
+    before_tmp = set(glob.glob(os.path.join(tempfile.gettempdir(), pattern)))
+    before_root = set(glob.glob(os.path.join(root, pattern)))
+    windows.QUERIES["stream_passthrough_route"].fn(spark, str(tmp_path)).count()
+    assert set(glob.glob(os.path.join(tempfile.gettempdir(), pattern))) == before_tmp
+    assert len(set(glob.glob(os.path.join(root, pattern))) - before_root) == 1

@@ -240,6 +240,47 @@ def test_restart_keeps_checkpointed_state_partitions(spark, tmp_path):
     _assert_routed_once(rows, 15)
 
 
+@pytest.mark.slow  # 14-30 s: two incarnations of the routed stream
+def test_restart_moves_a_filecontext_checkpoint_to_the_filesystem_manager(
+    spark, tmp_path
+):
+    """A checkpoint written by Spark's default FileContext-based manager
+    (what every deployment before the local FileSystem-based manager
+    checkpointed with) restarts under the FileSystem-based one and routes
+    with no loss, no duplicates and one full-count completion."""
+    from hri_flink_validation_passthrough_spark.session import (
+        CHECKPOINT_MANAGER_KEY,
+        LOCAL_CHECKPOINT_MANAGER,
+    )
+
+    write_ctrl, write_recs, start_query, wait_for = _restartable_route(
+        spark, tmp_path
+    )
+    try:
+        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
+        write_ctrl([_notif_row("started", t=0, seq=0)])
+        write_recs([_rec_row(i) for i in range(8)])
+        q = start_query()
+        wait_for(lambda r: len([x for x in r if x.dest == "out"]) >= 8,
+                 msg="first 8 records committed")
+        q.stop()
+    finally:
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, LOCAL_CHECKPOINT_MANAGER)
+
+    write_recs([_rec_row(i) for i in range(8, 15)])
+    write_ctrl([_notif_row("sendCompleted", expected=15, t=300, seq=1)])
+    q2 = start_query()
+    try:
+        rows = wait_for(
+            lambda r: len([x for x in r if x.dest == "out"]) >= 15
+            and [x for x in r if x.dest == "notification"],
+            msg="all 15 records + terminal notification after restart",
+        )
+    finally:
+        q2.stop()
+    _assert_routed_once(rows, 15)
+
+
 def test_cdc_merger_replayed_epoch_is_idempotent(spark, tmp_path):
     """A microbatch replayed under the same epoch_id must not re-apply: the
     additive n_updates column would double (replace columns hide the bug)."""
