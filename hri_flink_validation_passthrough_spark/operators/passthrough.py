@@ -402,42 +402,30 @@ def _derive_control(
     exclude: list[str] | None = None,
 ) -> DataFrame:
     """One started (before first record) + one sendCompleted (after last
-    record) per batch, expected = true count (+ optional per-batch delta)."""
-    g = (
-        events.groupBy(F.col(batch_col).cast("string").alias("id"))
-        .agg(
-            (F.min(F.unix_millis("ts")) - 10_000).alias("start_ms"),
-            (F.max(F.unix_millis("ts")) + 10_000).alias("end_ms"),
-            F.count(F.lit(1)).cast("int").alias("cnt"),
-        )
-    )
-    if exclude:
-        g = g.filter(~F.col("id").isin(exclude))
-    delta = F.lit(0)
-    for k, v in (expected_delta or {}).items():
-        delta = F.when(F.col("id") == k, F.lit(v)).otherwise(delta)
-    base = g.select(
-        "id",
-        F.col("id").alias("name"),
+    record) per batch, expected = true count (+ optional per-batch delta):
+    ``_derive_control_agg``'s per-batch row expanded to its two controls."""
+    base = _derive_control_agg(events, batch_col, expected_delta, exclude).select(
+        F.col("batch_id").alias("id"),
+        F.col("batch_id").alias("name"),
         F.lit("ingest.t.events.in").alias("topic"),
         F.lit("events").alias("dataType"),
         F.lit(-1).alias("invalidThreshold"),
-        "start_ms",
-        "end_ms",
-        (F.col("cnt") + delta).cast("int").alias("expectedRecordCount"),
+        "started_t",
+        "sc_t",
+        "expected",
     )
     started = base.select(
         "id", "name", "topic", "dataType", "invalidThreshold",
         F.lit(STARTED).alias("status"),
         F.lit(None).cast("int").alias("expectedRecordCount"),
-        F.col("start_ms").alias("time_ms"),
+        F.col("started_t").alias("time_ms"),
         F.lit(0).cast("long").alias("seq"),
     )
     send_completed = base.select(
         "id", "name", "topic", "dataType", "invalidThreshold",
         F.lit(SEND_COMPLETED).alias("status"),
-        "expectedRecordCount",
-        F.col("end_ms").alias("time_ms"),
+        F.col("expected").alias("expectedRecordCount"),
+        F.col("sc_t").alias("time_ms"),
         F.lit(1).cast("long").alias("seq"),
     )
     return started.unionByName(send_completed)
@@ -473,6 +461,28 @@ def _derive_control_agg(
         "sc_t",
         (F.col("cnt") + delta).cast("int").alias("expected"),
         F.lit(None).cast("long").alias("term_t"),
+    )
+
+
+def _view_terminated(events: DataFrame) -> DataFrame:
+    """The terminate scenario's control row: the 'view' batch is terminated
+    at its 100th record's timestamp."""
+    w = Window.orderBy("ts", "event_id")  # scenario construction only
+    return (
+        events.filter(F.col("event_type") == "view")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 100)
+        .select(
+            F.lit("view").alias("id"),
+            F.lit("view").alias("name"),
+            F.lit("ingest.t.events.in").alias("topic"),
+            F.lit("events").alias("dataType"),
+            F.lit(-1).alias("invalidThreshold"),
+            F.lit(TERMINATED).alias("status"),
+            F.lit(None).cast("int").alias("expectedRecordCount"),
+            F.unix_millis("ts").alias("time_ms"),
+            F.lit(0).cast("long").alias("seq"),
+        )
     )
 
 
@@ -591,24 +601,6 @@ def passthrough_overcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 def passthrough_terminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     e = load_table(spark, sf_dir, "events")
-    w = Window.orderBy("ts", "event_id")  # scenario construction only
-    cutoff = (
-        e.filter(F.col("event_type") == "view")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 100)
-        .select(F.unix_millis("ts").alias("time_ms"))
-    )
-    term = cutoff.select(
-        F.lit("view").alias("id"),
-        F.lit("view").alias("name"),
-        F.lit("ingest.t.events.in").alias("topic"),
-        F.lit("events").alias("dataType"),
-        F.lit(-1).alias("invalidThreshold"),
-        F.lit(TERMINATED).alias("status"),
-        F.lit(None).cast("int").alias("expectedRecordCount"),
-        "time_ms",
-        F.lit(0).cast("long").alias("seq"),
-    )
-    ctrl = _derive_control(e).unionByName(term)
+    ctrl = _derive_control(e).unionByName(_view_terminated(e))
     routed = run_pipeline_batch(events_as_records(e), ctrl)
     return _summarize(routed).select("batch_id", "n_out", "final_status")

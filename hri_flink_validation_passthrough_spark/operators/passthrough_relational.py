@@ -34,7 +34,12 @@ from ..model import COMPLETED, FAILED, SEND_COMPLETED, STARTED, TERMINATED, UNKN
 from ..plans import QuerySpec, register
 from ..session import load_table, prepare
 from ..sources.envelope import events_as_records
-from .passthrough import _derive_control, _derive_control_agg, _summarize
+from .passthrough import (
+    _derive_control,
+    _derive_control_agg,
+    _summarize,
+    _view_terminated,
+)
 from ..materialize import materialize
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -325,25 +330,7 @@ def passthrough_terminate_relational(spark: SparkSession, sf_dir: str) -> DataFr
     machine's passthrough_terminate)."""
     prepare(spark)
     e = load_table(spark, sf_dir, "events")
-    w = Window.orderBy("ts", "event_id")  # scenario construction only
-    cutoff = (
-        e.filter(F.col("event_type") == "view")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 100)
-        .select(F.unix_millis("ts").alias("time_ms"))
-    )
-    term = cutoff.select(
-        F.lit("view").alias("id"),
-        F.lit("view").alias("name"),
-        F.lit("ingest.t.events.in").alias("topic"),
-        F.lit("events").alias("dataType"),
-        F.lit(-1).alias("invalidThreshold"),
-        F.lit(TERMINATED).alias("status"),
-        F.lit(None).cast("int").alias("expectedRecordCount"),
-        "time_ms",
-        F.lit(0).cast("long").alias("seq"),
-    )
-    ctrl = _derive_control(e).unionByName(term)
+    ctrl = _derive_control(e).unionByName(_view_terminated(e))
     from ..sources.envelope import batch_id_from_headers
 
     recs = events_as_records(e).withColumn("batch_id", batch_id_from_headers())

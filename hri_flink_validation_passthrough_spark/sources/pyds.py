@@ -45,7 +45,6 @@ from pyspark.sql.datasource import (
 
 from ..plans import QuerySpec, register
 from ..session import prepare
-from ..materialize import cut
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -215,57 +214,18 @@ def custom_source_batch_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     "form — the stream must converge to the batch answer.",
 )
 def custom_source_stream_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-    import uuid
+    from ..streaming.windows import _run_to_table
 
     prepare(spark)
     _register_ds(spark)
     stream = spark.readStream.format("hri_envelope").option("n", str(PYDS_N)).load()
-    agg = _envelope_summary(stream, with_distinct=False)
-    name = f"pyds_{uuid.uuid4().hex[:8]}"
-    from ..streaming.windows import _pinned_state
-
-    # default continuous-microbatch trigger + poll: availableNow consumes
-    # only the FIRST simple-stream-reader batch (read() defines availability
-    # one step at a time), observed stopping at 1000/5000 records
-    with _pinned_state(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-    try:
-        t0 = time.time()
-        got = 0
-        while time.time() - t0 < 300:
-            got = spark.sql(
-                f"SELECT coalesce(sum(n_records), 0) AS n FROM {name}"
-            ).collect()[0]["n"]
-            if got >= PYDS_N:
-                break
-            time.sleep(0.2)
-        else:
-            # One final re-poll: the last records may land during the last
-            # sleep, and the while condition exits on TIME, not on count —
-            # without this a completed run could be reported as a stall
-            # (r7 review). Don't return a partial sink table on true
-            # expiry — that turns a stall into an unattributable hash
-            # mismatch (ADVICE r6).
-            got = spark.sql(
-                f"SELECT coalesce(sum(n_records), 0) AS n FROM {name}"
-            ).collect()[0][0]
-            if got < PYDS_N:
-                raise TimeoutError(
-                    f"custom_source_stream_envelope: poll expired after "
-                    f"300 s with {got}/{PYDS_N} records ingested — stall, "
-                    f"not a semantics result"
-                )
-        # checkpoint, then DROP the sink view (r12 self-review — the
-        # memory sink otherwise pins its rows in the driver catalog for
-        # the session lifetime, one table per invocation)
-        out = spark.table(name).transform(cut())
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        q.stop()
+    # default micro-batch trigger until every record is in: availableNow
+    # consumes only the FIRST simple-stream-reader batch (read() defines
+    # availability one step at a time), observed stopping at 1000/5000
+    return _run_to_table(
+        _envelope_summary(stream, with_distinct=False),
+        "pyds",
+        until=lambda sink: sink.selectExpr(
+            f"coalesce(sum(n_records), 0) >= {PYDS_N}"
+        ).first()[0],
+    )

@@ -29,8 +29,9 @@ sums (``floor(value*100 + 0.5)`` per row, summed exactly in int64), min/max
 timestamps, and sort-merged top-k lists — so WHEN timers fire and how rows
 batch cannot change the output, only when it appears. The finite replay
 arrives in microbatch 0 (file source, no maxFilesPerTrigger cap), the idle
-timers fire in a later no-data batch, and the harness polls the sink until
-every key has flushed — same protocol as ``stream_passthrough_route``.
+timers fire in a later no-data batch, and the harness runner
+(``windows._run_to_table`` with ``until``) waits until every key has
+flushed.
 
 At 100 TB: keys are the unit of state; both operators keep O(1)/O(K) state
 per key and emit once per idle period, so state size tracks LIVE key
@@ -44,9 +45,6 @@ from __future__ import annotations
 
 import json
 import math
-import tempfile
-import time
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -55,7 +53,7 @@ from pyspark.sql import functions as F
 
 from ..plans import QuerySpec, register
 from ..session import prepare
-from ..materialize import cut
+from .windows import _events_stream, _run_to_table
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -246,11 +244,9 @@ def build_topk_eviction_stream(
 
 
 # ---------------------------------------------------------------------------
-# Registered queries (finite replay + poll-until-flushed harness)
+# Registered queries (finite replay, run until every key has flushed)
 # ---------------------------------------------------------------------------
 def _events_keyed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .windows import _events_stream
-
     e = _events_stream(spark, sf_dir)
     return e.select(
         (F.col("user_id") % N_BUCKETS).alias("bucket"),
@@ -260,65 +256,6 @@ def _events_keyed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         (F.unix_micros(F.col("ts"))).alias("ts_us"),
     )
-
-
-def _run_until_rows(
-    spark: SparkSession, stream: DataFrame, expected_rows: int, prefix: str
-) -> DataFrame:
-    """Start the stream on the default (continuous-microbatch) trigger —
-    availableNow would stop before the idle timers ever fire — and poll the
-    memory sink until every key has flushed."""
-    from .windows import _pinned_state
-
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"hri_{prefix}_")
-    with _pinned_state(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-    try:
-        t0 = time.time()
-        got = 0
-        while time.time() - t0 < 300:
-            if q.exception() is not None:
-                # a dead query can never fill the sink — surface ITS error
-                # now instead of a 300 s stall that hides it (r14: a
-                # worker-side crash class was only visible as the timeout)
-                raise q.exception()
-            got = spark.table(name).count()
-            if got >= expected_rows:
-                break
-            time.sleep(0.3)
-        else:
-            # One final re-poll (the last rows may land during the last
-            # sleep — the while exits on TIME, not count; r7 review). A
-            # true stall must NOT degrade into a wrong-answer hash mismatch
-            # indistinguishable from a semantics bug (ADVICE r6): raise
-            # with got/expected so the driver-row failure is attributable.
-            got = spark.table(name).count()
-            if got < expected_rows:
-                raise TimeoutError(
-                    f"{prefix}: streaming poll expired after 300 s with "
-                    f"{got}/{expected_rows} sink rows — stall, not a "
-                    f"semantics result"
-                )
-        # localCheckpoint: detach the result from the (stopped) memory sink,
-        # then DROP the sink view and remove the checkpoint dir (r12
-        # self-review, same class as the streaming maintainers' r11 work-dir
-        # leak: each invocation otherwise pins a result-sized catalog entry
-        # and leaves a checkpoint tree in /tmp for the session lifetime)
-        out = spark.table(name).transform(cut())
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        q.stop()
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -349,7 +286,7 @@ def stream_state_ttl_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import load_table
 
     # expected flush count from the BATCH table, not the constant: a scale
-    # factor whose user ids miss a residue class must not hang the poll
+    # factor whose user ids miss a residue class must not hang the wait
     n_keys = (
         load_table(spark, sf_dir, "events")
         .select((F.col("user_id") % N_BUCKETS).alias("b"))
@@ -359,11 +296,11 @@ def stream_state_ttl_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = _events_keyed_stream(spark, sf_dir).select(
         "bucket", "user_id", "value", "ts_us"
     )
-    out = _run_until_rows(
-        spark,
+    out = _run_to_table(
         build_ttl_metrics_stream(keyed),
-        n_keys,
         "ttlmet",
+        output_mode="append",
+        until=lambda sink: sink.count() >= n_keys,
     )
     return out.select(
         "bucket",
@@ -407,7 +344,7 @@ def stream_windowed_topk_eviction(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..session import load_table
 
     # expected flush rows = sum over keys of min(n_rows, K): a key with
-    # fewer than K events flushes fewer rows and must not hang the poll
+    # fewer than K events flushes fewer rows and must not hang the wait
     n_expected = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -418,11 +355,11 @@ def stream_windowed_topk_eviction(spark: SparkSession, sf_dir: str) -> DataFrame
     keyed = _events_keyed_stream(spark, sf_dir).select(
         "event_type", "event_id", "value", "ts_us"
     )
-    out = _run_until_rows(
-        spark,
+    out = _run_to_table(
         build_topk_eviction_stream(keyed),
-        int(n_expected),
         "topkev",
+        output_mode="append",
+        until=lambda sink: sink.count() >= n_expected,
     )
     return out.select(
         "event_type",
@@ -526,10 +463,9 @@ def stream_user_activity_mapstate(spark: SparkSession, sf_dir: str) -> DataFrame
         .count()
     )
     keyed = _events_keyed_stream(spark, sf_dir).select("bucket", "user_id")
-    out = _run_until_rows(
-        spark,
+    return _run_to_table(
         build_user_activity_stream(keyed),
-        n_keys,
         "uamap",
+        output_mode="append",
+        until=lambda sink: sink.count() >= n_keys,
     )
-    return out.transform(cut())

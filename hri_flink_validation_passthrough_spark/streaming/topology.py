@@ -223,7 +223,11 @@ def build_routed_stream(
 
 
 def start_memory_query(
-    routed: DataFrame, name: str, checkpoint: str, available_now: bool = False
+    routed: DataFrame,
+    name: str,
+    checkpoint: str,
+    available_now: bool = False,
+    output_mode: str = "append",
 ):
     """Test/debug sink: collect the routed stream into an in-memory table.
 
@@ -234,7 +238,7 @@ def start_memory_query(
     writer = (
         routed.writeStream.format("memory")
         .queryName(name)
-        .outputMode("append")
+        .outputMode(output_mode)
         .option("checkpointLocation", checkpoint)
     )
     if available_now:

@@ -1,19 +1,34 @@
 """Streaming window operators (SURVEY.md §2B 'streaming windows'): tumbling,
 sliding, and session windows executed as REAL Structured Streaming queries.
 
-Each query boots a ``readStream`` over the parquet table, runs the windowed
-aggregation with ``Trigger.AvailableNow`` into a memory sink, and returns the
-sink table — so the driver's oracle compare exercises the actual streaming
-engine (state store, window assignment, output modes), not a batch rewrite.
+Each query boots a ``readStream`` over the parquet table and runs it to
+completion through one finite-stream runner, so the driver's oracle compare
+exercises the actual streaming engine (state store, window assignment,
+output modes), not a batch rewrite. ``_run_to_table`` collects the stream
+into a memory sink and returns the detached sink table; it completes in one
+of two ways:
 
-``complete`` output mode is used so closed AND in-flight windows emit without
-needing the watermark to advance past the last event (AvailableNow replays a
-finite table; in production these run in append mode with
+- without ``until``: ``Trigger.AvailableNow`` replays everything staged and
+  the query terminates on its own;
+- with ``until(sink_df) -> bool``: the default micro-batch trigger runs
+  until the predicate holds on the sink. This is the mode for streams whose
+  output arrives in later no-data batches (processing-time timers) or whose
+  source yields one step at a time. The wait raises the query's own error
+  as soon as it dies and ``TimeoutError`` after ``FINITE_STREAM_TIMEOUT_S``.
+
+``_run_foreach`` is its ``foreachBatch`` twin (AvailableNow, caller-owned
+checkpoint so a crashed run can resume). These two are the only code in the
+harness that starts, waits on and stops a finite stream.
+
+``complete`` output mode is used where closed AND in-flight windows must
+emit without the watermark advancing past the last event (AvailableNow
+replays a finite table; in production these run in append mode with
 ``withWatermark``)."""
 
 from __future__ import annotations
 
 import contextlib
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -85,32 +100,70 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
+# No finite harness stream waits longer than this for its ``until``.
+FINITE_STREAM_TIMEOUT_S = 300
+_POLL_S = 0.3
+
+
 def _run_to_table(
-    agg: DataFrame, prefix: str, output_mode: str = "complete"
+    stream: DataFrame,
+    prefix: str,
+    output_mode: str = "complete",
+    until=None,
+    result=None,
 ) -> DataFrame:
-    spark = agg.sparkSession
+    """Run a finite stream into a memory sink and return ``result(sink)``
+    (the sink itself by default), cut from the sink so the view can go.
+
+    Each memory sink pins its rows in the driver catalog for the session
+    lifetime, so the sink view is dropped and the query stopped in
+    ``finally``, on error too. The checkpoint lives under the SparkFiles
+    root, which Spark deletes on ``SparkContext.stop()``; deleting it here
+    raced the state store's async maintenance thread
+    (``failedToCommitStateFileError``)."""
+    from .topology import start_memory_query
+
+    spark = stream.sparkSession
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    ckpt = f"{_app_scoped_dir(f'hri_{prefix}_')}/ckpt"
     with _pinned_state(spark):
+        q = start_memory_query(
+            stream, name, ckpt, available_now=until is None, output_mode=output_mode
+        )
+    try:
+        if until is None:
+            q.awaitTermination()
+        else:
+            deadline = time.monotonic() + FINITE_STREAM_TIMEOUT_S
+            while not until(spark.table(name)):
+                if time.monotonic() > deadline:
+                    raise TimeoutError(
+                        f"{prefix}: stream stalled for {FINITE_STREAM_TIMEOUT_S} s "
+                        f"with {spark.table(name).count()} sink rows"
+                    )
+                # returns early, raising the query's own error, if it dies
+                q.awaitTermination(_POLL_S)
+        sink = spark.table(name)
+        return (result(sink) if result else sink).transform(cut())
+    finally:
+        spark.catalog.dropTempView(name)
+        q.stop()
+
+
+def _run_foreach(stream: DataFrame, fn, checkpoint: str) -> None:
+    """Run a finite stream through ``foreachBatch(fn)`` with AvailableNow.
+    The caller owns *checkpoint*: a rerun on the same path resumes."""
+    with _pinned_state(stream.sparkSession):
         q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
+            stream.writeStream.foreachBatch(fn)
+            .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    # localCheckpoint + DROP the sink view (r12 self-review): each memory
-    # sink pins its result rows in the driver catalog for the session
-    # lifetime — 16 call sites × repeated bench reps accumulated one
-    # result-sized table per invocation. The stream has fully terminated
-    # (availableNow), so checkpointing here copies the finished result to
-    # ContextCleaner-managed blocks and frees the catalog entry; it also
-    # detaches consumers from the MemoryPlan leaf (which is not
-    # re-resolvable after the view is gone — the reason the old ratelim
-    # site checkpointed locally).
-    out = spark.table(name).transform(cut())
-    spark.catalog.dropTempView(name)
-    return out
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
 
 
 @register(
@@ -520,20 +573,17 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     "all agree on the happy path.",
 )
 def stream_passthrough_route(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
     from ..operators.passthrough import _derive_control, _summarize
     from ..session import load_table
     from ..sources.envelope import events_as_records
-    from .topology import build_routed_stream, start_memory_query
+    from .topology import TRIGGER_GROUP_WARN_ROWS, build_routed_stream
 
     prepare(spark)
     e = load_table(spark, sf_dir, "events")
     n_events = e.count()
     n_batches = e.select("event_type").distinct().count()
-    # under the SparkFiles root: the checkpoint left below goes with the app
+    # under the SparkFiles root: the staged replay copies go with the app
     tmp = _app_scoped_dir("hri_stream_route_")
-    from .topology import TRIGGER_GROUP_WARN_ROWS
 
     # Per-trigger bound (r12 verdict ask #3): at driver SFs the whole
     # staged corpus is far under the whole-trigger bar, so it replays in
@@ -569,47 +619,20 @@ def stream_passthrough_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = build_routed_stream(
         records, notifs, completion_delay_ms=1500, per_trigger_bound=bound
     )
-    name = f"route_{uuid.uuid4().hex[:8]}"
-    with _pinned_state(spark):
-        q = start_memory_query(routed, name, f"{tmp}/ckpt")
-    try:
-        # run until every record routed AND every batch's completion timer
-        # has fired (the 'completed' notification is emitted by a later
-        # no-data microbatch once the processing-time deadline passes)
-        t0 = time.time()
-        while time.time() - t0 < 300:
-            done = spark.sql(
-                f"""SELECT
-                      sum(CASE WHEN dest = 'out' THEN 1 ELSE 0 END) AS n_out,
-                      sum(CASE WHEN dest = 'notification'
-                               AND CAST(value AS STRING) LIKE '%completed%'
-                               THEN 1 ELSE 0 END) AS n_done
-                    FROM {name}"""
-            ).collect()[0]
-            if (done.n_out or 0) >= n_events and (done.n_done or 0) >= n_batches:
-                break
-            time.sleep(0.3)
-        # summarize (batch-cardinality result), checkpoint, and DROP the
-        # sink view — the routed sink holds one row per event and
-        # otherwise stays pinned in the driver catalog per invocation
-        # (r12 self-review, the same lifecycle as _run_to_table's)
-        out = _summarize(spark.table(name)).transform(cut())
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        q.stop()
-        # the returned frame reads the in-memory sink, never these files —
-        # drop the events-sized replay copies so repeated bench reps don't
-        # accumulate one each (same class as the ADVICE r10 maintenance-
-        # work-dir leak). The checkpoint dir deliberately stays until
-        # SparkContext.stop() deletes the SparkFiles root: the state
-        # store's async maintenance thread can touch it briefly after
-        # stop() returns (observed failedToCommitStateFileError once when
-        # the whole tmp tree was removed), and it is KB-sized.
-        import shutil as _shutil
-
-        _shutil.rmtree(f"{tmp}/records", ignore_errors=True)
-        _shutil.rmtree(f"{tmp}/ctrl", ignore_errors=True)
+    # done once every record routed AND every batch's completion timer has
+    # fired (the 'completed' notification is emitted by a later no-data
+    # microbatch once the processing-time deadline passes)
+    done = (
+        f"count_if(dest = 'out') >= {n_events} AND count_if(dest = 'notification'"
+        f" AND CAST(value AS STRING) LIKE '%completed%') >= {n_batches}"
+    )
+    return _run_to_table(
+        routed,
+        "route",
+        output_mode="append",
+        until=lambda sink: sink.selectExpr(done).first()[0],
+        result=_summarize,
+    )
 
 
 def make_cdc_merger(
@@ -760,14 +783,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     state: dict[str, object] = {"cur": None, "ver": 0}
     _merge = make_cdc_merger(spark, base, state, run_id=f"{base}/ckpt")
 
-    with _pinned_state(spark):
-        q = (
-            e.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_foreach(e, _merge, f"{base}/ckpt")
 
     final = spark.read.parquet(str(state["cur"]))
     out = final.select(
@@ -1340,7 +1356,6 @@ _SDI_DELTA_FILES = 4  # delta split into 4 files -> 4 microbatches
 def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
-    import uuid as _uuid
 
     from ..operators.dedup import (
         _DELTA_DEN,
@@ -1400,17 +1415,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         verified.write.mode("overwrite").parquet(f"{base}/out/e{int(epoch_id)}")
 
     try:
-        with _pinned_state(spark):
-            q = (
-                src.writeStream.foreachBatch(_check)
-                .option(
-                    "checkpointLocation",
-                    f"{base}/ckpt_{_uuid.uuid4().hex[:8]}",
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        _run_foreach(src, _check, f"{base}/ckpt_{uuid.uuid4().hex[:8]}")
     finally:
         corpus_idx.unpersist()
 
@@ -1494,13 +1499,12 @@ def make_epoch_appender(spark: SparkSession, epoch_root: str, cents):
     chaos test drives the SAME commit protocol the production query runs
     (tests/test_round10_ops.py)."""
     import os
-    import uuid as _uuid
 
     from ..operators.similarity import _assign_by_broadcast, _publish_index
 
     def _append(batch_df: DataFrame, epoch_id: int) -> None:
         edir = os.path.join(epoch_root, f"e{int(epoch_id)}")
-        tmp = f"{edir}.build-{_uuid.uuid4().hex[:8]}"
+        tmp = f"{edir}.build-{uuid.uuid4().hex[:8]}"
         (
             _assign_by_broadcast(spark, batch_df, cents)
             .repartition("cell")
@@ -1518,7 +1522,6 @@ def make_epoch_appender(spark: SparkSession, epoch_root: str, cents):
 def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
-    import uuid as _uuid
 
     from ..operators.similarity import (
         _DELTA_EPOCH_DIR,
@@ -1574,16 +1577,7 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch_root = os.path.join(path, _DELTA_EPOCH_DIR)
     _append = make_epoch_appender(spark, epoch_root, cents)
 
-    with _pinned_state(spark):
-        q = (
-            src.writeStream.foreachBatch(_append)
-            .option(
-                "checkpointLocation", f"{work}/ckpt_{_uuid.uuid4().hex[:8]}"
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_foreach(src, _append, f"{work}/ckpt_{uuid.uuid4().hex[:8]}")
 
     # drift bookkeeping rides every maintenance run (r9 verdict #3): the
     # sidecar records delta_fraction + cell_skew so retrain-at-compaction
@@ -1661,7 +1655,6 @@ def make_codes_epoch_appender(
     make_epoch_appender: the crash-resume chaos test must drive the
     production commit protocol itself."""
     import os
-    import uuid as _uuid
 
     from ..operators.similarity import (
         _assign_by_broadcast,
@@ -1671,7 +1664,7 @@ def make_codes_epoch_appender(
 
     def _append(batch_df: DataFrame, epoch_id: int) -> None:
         edir = os.path.join(epoch_root, f"e{int(epoch_id)}")
-        tmp = f"{edir}.build-{_uuid.uuid4().hex[:8]}"
+        tmp = f"{edir}.build-{uuid.uuid4().hex[:8]}"
         codes = _pq_encode_by_broadcast(spark, batch_df, cb)
         rows = codes.join(
             _assign_by_broadcast(spark, batch_df, cents).select(
@@ -1708,7 +1701,6 @@ def stream_ivfpq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest-time-invariant."""
     import os
     import tempfile
-    import uuid as _uuid
 
     from pyspark.sql import functions as _F
 
@@ -1783,16 +1775,7 @@ def stream_ivfpq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch_root = os.path.join(path, _DELTA_EPOCH_DIR)
     _append = make_codes_epoch_appender(spark, epoch_root, cents, cb)
 
-    with _pinned_state(spark):
-        q = (
-            src.writeStream.foreachBatch(_append)
-            .option(
-                "checkpointLocation", f"{work}/ckpt_{_uuid.uuid4().hex[:8]}"
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_foreach(src, _append, f"{work}/ckpt_{uuid.uuid4().hex[:8]}")
 
     from ..operators.maintenance import update_drift_stats
 

@@ -674,8 +674,8 @@ def test_routed_stream_state_keeps_both_checksum_files(spark, tmp_path):
 def test_stream_route_scratch_dir_lives_under_the_spark_files_root(
     spark, tmp_path
 ):
-    """stream_passthrough_route stages its replay inputs and checkpoint in
-    a dir under the SparkFiles root, which Spark deletes on
+    """stream_passthrough_route stages its replay inputs, and the runner its
+    checkpoint, in dirs under the SparkFiles root, which Spark deletes on
     ``SparkContext.stop()``: no run leaves one behind in the system temp
     dir."""
     import glob
@@ -690,10 +690,139 @@ def test_stream_route_scratch_dir_lives_under_the_spark_files_root(
 
     src = pq.read_table(os.path.join(SF_SMALL, "events.parquet"))
     pq.write_table(src.schema.empty_table(), str(tmp_path / "events.parquet"))
-    pattern = "hri_stream_route_*"
+    patterns = ("hri_stream_route_*", "hri_route_*")
     root = SparkFiles.getRootDirectory()
-    before_tmp = set(glob.glob(os.path.join(tempfile.gettempdir(), pattern)))
-    before_root = set(glob.glob(os.path.join(root, pattern)))
+
+    def dirs(base):
+        return {pat: set(glob.glob(os.path.join(base, pat))) for pat in patterns}
+
+    before_tmp, before_root = dirs(tempfile.gettempdir()), dirs(root)
     windows.QUERIES["stream_passthrough_route"].fn(spark, str(tmp_path)).count()
-    assert set(glob.glob(os.path.join(tempfile.gettempdir(), pattern))) == before_tmp
-    assert len(set(glob.glob(os.path.join(root, pattern))) - before_root) == 1
+    assert dirs(tempfile.gettempdir()) == before_tmp
+    after_root = dirs(root)
+    assert {p: len(after_root[p] - before_root[p]) for p in patterns} == {
+        p: 1 for p in patterns
+    }
+
+
+# ---------------------------------------------------------------------------
+# The finite-stream runner (windows._run_to_table / _run_foreach)
+# ---------------------------------------------------------------------------
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _five_row_stream(spark, tmp_path):
+    path = str(tmp_path / "src")
+    spark.range(5).write.parquet(path)
+    return spark.readStream.schema("id long").parquet(path)
+
+
+def test_runner_returns_the_sink_and_leaves_no_view(spark, tmp_path):
+    """Both completion modes return the detached sink table and drop the
+    sink view."""
+    from hri_flink_validation_passthrough_spark.streaming.windows import (
+        _run_to_table,
+    )
+
+    stream = _five_row_stream(spark, tmp_path)
+    views = _temp_views(spark)
+    done = _run_to_table(stream, "okavail", output_mode="append")
+    polled = _run_to_table(
+        stream,
+        "okuntil",
+        output_mode="append",
+        until=lambda sink: sink.count() >= 5,
+        result=lambda sink: sink.selectExpr("sum(id) AS s"),
+    )
+    assert sorted(r.id for r in done.collect()) == [0, 1, 2, 3, 4]
+    assert polled.collect()[0].s == 10
+    assert _temp_views(spark) == views
+
+
+def test_runner_surfaces_a_dead_query_error_fast(spark, tmp_path):
+    """A query that dies can never satisfy ``until``: its own error must
+    surface at once, not after the 300 s stall limit."""
+    from pyspark.errors import StreamingQueryException
+
+    from hri_flink_validation_passthrough_spark.streaming.windows import (
+        _run_to_table,
+    )
+
+    def explode(batches):
+        for _ in batches:
+            raise ValueError("runner-dead-query-probe")
+        yield from ()
+
+    stream = _five_row_stream(spark, tmp_path).mapInPandas(explode, "id long")
+    views = _temp_views(spark)
+    t0 = time.time()
+    with pytest.raises(StreamingQueryException, match="runner-dead-query-probe"):
+        _run_to_table(
+            stream,
+            "deadq",
+            output_mode="append",
+            until=lambda sink: sink.count() >= 5,
+        )
+    assert time.time() - t0 < 30
+    assert _temp_views(spark) == views
+
+
+def test_runner_raises_timeout_naming_prefix_and_rows(spark, tmp_path, monkeypatch):
+    """A stream whose ``until`` never holds raises ``TimeoutError`` with the
+    prefix and the sink row count, instead of returning a partial sink."""
+    import re
+
+    from hri_flink_validation_passthrough_spark.streaming import windows
+
+    monkeypatch.setattr(windows, "FINITE_STREAM_TIMEOUT_S", 3)
+    seen = [0]
+
+    def never(sink):
+        seen[0] = sink.count()
+        return seen[0] > 5
+
+    views = _temp_views(spark)
+    t0 = time.time()
+    with pytest.raises(TimeoutError) as err:
+        windows._run_to_table(
+            _five_row_stream(spark, tmp_path),
+            "stallq",
+            output_mode="append",
+            until=never,
+        )
+    assert time.time() - t0 < 30
+    m = re.search(r"^stallq: .* with (\d+) sink rows$", str(err.value))
+    assert m, str(err.value)
+    assert seen[0] <= int(m.group(1)) <= 5
+    assert _temp_views(spark) == views
+
+
+def test_write_stream_lives_only_in_the_runner():
+    """The harness modules start streams only through the runner: every
+    ``.writeStream`` and ``start_memory_query`` in them lies inside
+    ``_run_to_table`` or ``_run_foreach``."""
+    import ast
+    import os
+
+    import hri_flink_validation_passthrough_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    runner = {"_run_to_table", "_run_foreach"}
+    stray = []
+    for rel in ("streaming/windows.py", "streaming/state_ttl.py", "sources/pyds.py"):
+        tree = ast.parse(open(os.path.join(root, rel)).read())
+
+        def visit(node, owner):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                owner = owner or (node.name if node.name in runner else None)
+            hit = (
+                isinstance(node, ast.Attribute) and node.attr == "writeStream"
+            ) or (isinstance(node, ast.Name) and node.id == "start_memory_query")
+            if hit and owner is None:
+                stray.append(f"{rel}:{node.lineno}")
+            for child in ast.iter_child_nodes(node):
+                visit(child, owner)
+
+        visit(tree, None)
+    assert stray == []

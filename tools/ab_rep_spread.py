@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Same-code rep-spread adjudication for ANY registered query — the
-generalized form of ab_prefix_join.py (r8 ask #1, r9 ask #5): when a driver
+generalized form of ab_prefix_join.py (since deleted; r8 ask #1, r9 ask #5): when a driver
 bench number moves on UNTOUCHED code, there is no candidate policy to race;
 the fallback protocol bounds the same-code spread instead. Several fresh
 JVMs (parquet footer caches / code caches / persisted memos never carry
