@@ -469,25 +469,11 @@ def ivf_drift_report(spark: SparkSession, path: str) -> dict:
     }
 
 
-def _rewrite_sidecar(path: str, meta: dict) -> None:
-    """Atomic sidecar update: temp file + rename, readers never see a torn
-    JSON. (On an object-store catalog ``iofs.replace`` narrows but cannot
-    close the window — the reader treats a missing sidecar as rebuild, so
-    the worst case is a spurious rebuild, never a torn read.)"""
-    import json
-
-    from .similarity import _INDEX_META
-
-    tmp = iofs.join(path, f".{_INDEX_META}.tmp")
-    iofs.write_text(tmp, json.dumps(meta))
-    iofs.replace(tmp, iofs.join(path, _INDEX_META))
-
-
 def update_drift_stats(spark: SparkSession, path: str) -> dict:
     """Recompute and record the drift fields in the index sidecar — the
     per-upsert bookkeeping step (batch upsert and the streaming maintainer
     both call this shape at the end of their append)."""
-    from .similarity import read_index_meta
+    from .similarity import _rewrite_sidecar, read_index_meta
 
     meta = read_index_meta(path)
     rep = ivf_drift_report(spark, path)
@@ -522,16 +508,14 @@ def retrain_if_skewed(
     a rebalanced sidecar — rebalancing is paired with re-deriving the
     oracle (here it is exercised on scratch/test indexes; the registered
     queries never trigger it)."""
-    import json
-    import time as timemod
-    import uuid as uuidmod
+    import time
 
     from .similarity import (
-        _INDEX_META,
         _assign_by_literal,
+        _first_rows,
         _lloyd_iterate,
-        _n_cell_files,
-        _publish_index,
+        _rewrite_sidecar,
+        _write_cell_index,
         read_index_meta,
     )
     from .similarity import TRAINED_ITERS as _DEFAULT_ITERS
@@ -571,44 +555,17 @@ def retrain_if_skewed(
             "rebuilding, not retrain_if_skewed"
         )
     v = _ivf_index_frame(spark, path).select("vec_id", "e").transform(cut())
-    n_rows = v.count()
-    init = [
-        [float(x) for x in r["e"]]
-        for r in v.filter(F.col("vec_id") < nlist).orderBy("vec_id").collect()
-    ]
-    cents = _lloyd_iterate(v, init, it)
-    tmp = f"{path}.build-{uuidmod.uuid4().hex[:8]}"
-    (
-        _assign_by_literal(v, cents)
-        .repartition("cell")
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
-    # row preservation checked on the TMP tree, before the old index is
-    # destroyed (r11 self-review: a post-publish check guards nothing —
-    # the only good copy is already gone). Also catches null-cell rows
-    # landing in a default partition that cell=* readers never scan.
-    n_tmp = spark.read.parquet(tmp).count()
-    if n_tmp != n_rows:
-        iofs.delete(tmp)
-        raise RuntimeError(
-            f"rebalance must not drop rows: {n_rows} -> {n_tmp} ({path})"
-        )
-    new_meta = dict(meta)
-    new_meta.update(
-        {
-            "n_files": _n_cell_files(tmp),
-            "built_unix": timemod.time(),
-            "centroids": cents,
-            "centroid_kind": "lloyd_trained_rebalanced",
-            "iters": it,
-            # post-rebalance every row is re-trained data: the delta clock
-            # restarts
-            "split": None,
-        }
-    )
+    cents = _lloyd_iterate(v, _first_rows(v, nlist), it)
+    new_meta = {
+        **meta,
+        "built_unix": time.time(),
+        "centroids": cents,
+        "centroid_kind": "lloyd_trained_rebalanced",
+        "iters": it,
+        # post-rebalance every row is re-trained data: the delta clock
+        # restarts
+        "split": None,
+    }
     new_meta.pop("base_files", None)
     # the PRE-rebalance drift stats are keyed to cell ids whose contents
     # this rebalance just moved: publishing them would feed
@@ -616,12 +573,12 @@ def retrain_if_skewed(
     # post-publish refresh below lands. Drop them — readers fall back to
     # the fixed probe policy until fresh stats are recorded.
     new_meta.pop("drift", None)
-    iofs.write_text(iofs.join(tmp, _INDEX_META), json.dumps(new_meta))
-    _publish_index(path, tmp)
-    after = ivf_drift_report(spark, path)
-    final = read_index_meta(path)
-    final["drift"] = after
-    _rewrite_sidecar(path, final)
+    # row preservation is checked on the temp tree, before the old index
+    # is replaced (r11 self-review: a post-publish check guards nothing)
+    _write_cell_index(
+        spark, path, [_assign_by_literal(v, cents)], new_meta, n_rows=v.count()
+    )
+    after = update_drift_stats(spark, path)
     return {"retrained": True, "before": rep, "after": after}
 
 
@@ -635,13 +592,8 @@ def fold_delta_epochs(spark: SparkSession, path: str) -> dict:
     files per epoch — at 100 TB this runs on the compaction schedule right
     before retrain_if_skewed, which reuses the same publish seam).
     Returns file counts before/after."""
-    import json
-    import uuid as uuidmod
-
     from .similarity import (
-        _INDEX_META,
-        _n_cell_files,
-        _publish_index,
+        _write_cell_index,
         committed_delta_epochs,
         read_index_meta,
     )
@@ -672,26 +624,6 @@ def fold_delta_epochs(spark: SparkSession, path: str) -> dict:
         cols=cols,
         epochs=epochs,  # the listed set IS the folded set — never re-list
     )
-    n_rows = df.count()
-    tmp = f"{path}.build-{uuidmod.uuid4().hex[:8]}"
-    (
-        df.repartition("cell")
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
-    # row preservation checked on the TMP tree BEFORE the publish destroys
-    # the only complete copy (r11 self-review: the old post-publish check
-    # fired after rollback was impossible)
-    n_tmp = spark.read.parquet(tmp).count()
-    if n_tmp != n_rows:
-        iofs.delete(tmp)
-        raise RuntimeError(
-            f"epoch fold must not drop rows: {n_rows} -> {n_tmp} ({path})"
-        )
-    meta = dict(meta)
-    meta["n_files"] = _n_cell_files(tmp)
     meta.pop("base_files", None)
     # the folded base now HOLDS the deltas: a subsequent maintenance run
     # must not replay them (it would duplicate every delta vector in the
@@ -703,8 +635,9 @@ def fold_delta_epochs(spark: SparkSession, path: str) -> dict:
     # with an append-only corpus would replace the flag with a
     # folded-through vec_id/epoch watermark on the same meta field.
     meta["delta_folded"] = True
-    iofs.write_text(iofs.join(tmp, _INDEX_META), json.dumps(meta))
-    _publish_index(path, tmp)
+    # row preservation is checked on the temp tree BEFORE the publish
+    # replaces the only complete copy (r11 self-review)
+    _write_cell_index(spark, path, [df], meta, n_rows=df.count())
     return {
         "folded_epochs": len(epochs),
         "files_before": n_before,

@@ -18,7 +18,10 @@ so ordering is reproducible across engines.
 
 from __future__ import annotations
 
+import json
 import os
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -248,14 +251,19 @@ DNLIST = 64
 # sandbox) and each index directory carries a versioned ``_catalog_meta.json``
 # sidecar (_-prefixed: invisible to parquet scans) holding everything the
 # read path needs to resolve the index WITHOUT recomputing from the corpus:
-# the coarse centroids, nlist, a content fingerprint of the source corpus,
-# and build provenance. Two hardening rules (both r8 ADVICE):
-#  * STALENESS: the fingerprint (size + mtime_ns of the source parquet) is
+# the frozen quantizers (centroids, codebook), nlist, a content fingerprint
+# of the source corpus, and build provenance. Every index write goes
+# through one seam:
+#  * RESOLVE-OR-BUILD: ``_durable_index`` is the only place an index is
+#    resolved. The fingerprint (size + mtime_ns of the source parquet) is
 #    re-checked on every resolve — a regenerated dataset at the same path
-#    invalidates the index instead of silently serving stale cells.
-#  * ATOMIC PUBLISH: builds land in a ``.build-<uuid>`` temp directory and
-#    are renamed into place only when complete (sidecar written last),
-#    so concurrent readers never observe a half-built index.
+#    invalidates the index instead of silently serving stale cells — and
+#    the builder's training/encode/collect work runs only when stale.
+#  * ONE WRITER: ``_write_cell_index`` is the only code that writes the
+#    cell layout (builds, upserts, rebalance, fold, stream epochs). It
+#    builds in a ``.build-<uuid>`` temp directory, writes its marker (the
+#    sidecar, or a stream epoch's ``_EPOCH``) last and publishes with one
+#    atomic rename, so concurrent readers never observe a half-built index.
 INDEX_ROOT_ENV = "SPARK_GRAFT_INDEX_ROOT"
 INDEX_FORMAT_VERSION = 1
 # NOT "_metadata*": Spark's file index special-cases that name as a parquet
@@ -297,8 +305,6 @@ def _corpus_fingerprint(sf_dir: str) -> dict:
 
 def read_index_meta(base: str) -> dict | None:
     """The sidecar, or None when absent/unreadable (treated as: rebuild)."""
-    import json
-
     try:
         return json.loads(iofs.read_text(iofs.join(base, _INDEX_META)))
     except (OSError, ValueError):
@@ -359,10 +365,8 @@ def _publish_index(base: str, tmp: str) -> None:
     ``hdfs://`` one (atomic dir rename). On a bare object store rename is
     copy-then-delete; the single-writer maintenance contract covers the
     race there (iofs module docstring)."""
-    import uuid as uuidmod
-
     if iofs.exists(base):
-        trash = f"{base}.old-{uuidmod.uuid4().hex[:8]}"
+        trash = f"{base}.old-{uuid.uuid4().hex[:8]}"
         if iofs.rename(base, trash):
             iofs.delete(trash)
     if not iofs.rename(tmp, base):
@@ -396,67 +400,108 @@ def _n_cell_files(tree: str) -> int:
     return len(_cell_file_rels(tree))
 
 
-def _write_cell_index(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    build_fn,
-    nlist: int = DNLIST,
-    centroids: list | None = None,
-    extra_meta: dict | None = None,
-    root: str | None = None,
+def _durable_index(
+    spark: SparkSession, sf_dir: str, name: str, build, root: str | None = None
 ) -> str:
-    """Write-once cell-partitioned index directory (shared by the IVF,
-    IVF-PQ, and trained-quantizer durable indexes). *root* overrides the
-    catalog root (the object-store arm passes a scheme:// URI; default =
-    ``index_root()``).
-
-    Ingest-time write path: *build_fn()*'s rows land as parquet PARTITIONED
-    BY cell — hive-style ``cell=K/`` directories, so cell membership is
-    directory structure, not row data, and Catalyst prunes unprobed cells at
-    PLANNING time (PartitionFilters, zero I/O — the directory analogue of
-    zonemap_prune's footer-stats file skipping). Built into a temp dir and
-    atomically renamed into the catalog; rebuilt only when the sidecar is
-    missing OR the corpus fingerprint no longer matches. At 100 TB this is
-    the bucketed-by-cell index table a trillion-vector corpus ships
-    alongside the data; cells are also sorted by vec_id within files so a
-    future zone-map over vec_id composes."""
-    import json
-    import time as timemod
-    import uuid as uuidmod
-
+    """Resolve-or-build the durable index *name* over *sf_dir* — the only
+    resolve in the catalog. A memoized or published directory whose
+    sidecar is current is returned as-is; only a missing or stale index
+    calls *build()*, which returns ``(phases, fields)``: the row frames
+    written by ``_write_cell_index`` (one for a one-shot build, base then
+    delta for an upsert) and the builder's sidecar fields. So no training,
+    encode or centroid collect ever runs for a current index (a fresh
+    session resolves from the sidecar alone). *root* overrides the catalog
+    root (the object-store arm passes a scheme:// URI)."""
     key = sf_dir.rstrip("/")
-    memo_key = (key, name)
-    cached = _ivf_index_dir_memo.get(memo_key)
+    cached = _ivf_index_dir_memo.get((key, name))
     if cached is not None and _index_is_current(cached, key, name):
         return cached
     base = _index_base_path(key, name, root=root)
     if not _index_is_current(base, key, name):
-        tmp = f"{base}.build-{uuidmod.uuid4().hex[:8]}"
-        (
-            build_fn()
-            .repartition("cell")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(tmp)
-        )
+        phases, fields = build()
         meta = {
             "format_version": INDEX_FORMAT_VERSION,
             "name": name,
             "sf_dir": key,
-            "nlist": nlist,
             "fingerprint": _corpus_fingerprint(key),
-            "n_files": _n_cell_files(tmp),
-            "built_unix": timemod.time(),
-            "centroids": centroids,
+            "built_unix": time.time(),
+            **fields,
         }
-        if extra_meta:
-            meta.update(extra_meta)
-        iofs.write_text(iofs.join(tmp, _INDEX_META), json.dumps(meta))
-        _publish_index(base, tmp)
-    _ivf_index_dir_memo[memo_key] = base
+        _write_cell_index(spark, base, phases, meta)
+    _ivf_index_dir_memo[(key, name)] = base
     return base
+
+
+def _write_cell_index(
+    spark: SparkSession,
+    dest: str,
+    phases: list[DataFrame],
+    marker: dict | str,
+    n_rows: int | None = None,
+) -> None:
+    """Write *phases* as one cell-partitioned tree and publish it at *dest*
+    — the only writer of the cell layout: index builds, upserts, the
+    rebalance, the epoch fold and every stream epoch.
+
+    Rows land as parquet PARTITIONED BY cell — hive-style ``cell=K/``
+    directories, so cell membership is directory structure, not row data,
+    and Catalyst prunes unprobed cells at PLANNING time (PartitionFilters,
+    zero I/O); cells are sorted by vec_id within files so a future
+    zone-map over vec_id composes. The first phase overwrites the
+    ``.build-<uuid>`` temp dir and later phases append new part-files into
+    its cells; with more than one phase the sidecar records the first
+    phase's files as ``base_files`` (rebased onto *dest*) so tests can pin
+    that an upsert never rewrites them. With *n_rows* the temp tree's row
+    count is checked before anything is published (a rewrite must not
+    drop rows, and a null-cell row would land where cell=* readers never
+    look). The marker is written last — a dict is the index sidecar
+    (``n_files`` added), a str the contents of a stream epoch's
+    ``_EPOCH`` — then ``_publish_index`` swaps the tree into place. A
+    multi-phase (upsert) publish ends with the drift bookkeeping
+    (``maintenance.update_drift_stats``), so the retrain-at-compaction
+    policy is a metadata read."""
+    upsert = len(phases) > 1
+    tmp = f"{dest}.build-{uuid.uuid4().hex[:8]}"
+    for i, df in enumerate(phases):
+        (
+            df.repartition("cell")
+            .sortWithinPartitions("vec_id")
+            .write.mode("append" if i else "overwrite")
+            .partitionBy("cell")
+            .parquet(tmp)
+        )
+        if i == 0 and upsert:
+            base_files = sorted(iofs.join(dest, r) for r in _cell_file_rels(tmp))
+    if n_rows is not None:
+        n_tmp = spark.read.parquet(tmp).count()
+        if n_tmp != n_rows:
+            iofs.delete(tmp)
+            raise RuntimeError(
+                f"index rewrite must not drop rows: {n_rows} -> {n_tmp} ({dest})"
+            )
+    if isinstance(marker, str):
+        iofs.write_text(iofs.join(tmp, "_EPOCH"), marker)
+    else:
+        meta = {**marker, "n_files": _n_cell_files(tmp)}
+        if upsert:
+            meta["base_files"] = base_files
+        iofs.write_text(iofs.join(tmp, _INDEX_META), json.dumps(meta))
+    _publish_index(dest, tmp)
+    if upsert:
+        from .maintenance import update_drift_stats
+
+        update_drift_stats(spark, dest)
+
+
+def _rewrite_sidecar(path: str, meta: dict) -> None:
+    """Atomic in-place sidecar update (drift bookkeeping): temp file +
+    rename, readers never see a torn JSON. (On an object-store catalog
+    ``iofs.replace`` narrows but cannot close the window — the reader
+    treats a missing sidecar as rebuild, so the worst case is a spurious
+    rebuild, never a torn read.)"""
+    tmp = iofs.join(path, f".{_INDEX_META}.tmp")
+    iofs.write_text(tmp, json.dumps(meta))
+    iofs.replace(tmp, iofs.join(path, _INDEX_META))
 
 
 def ivf_durable_index(spark: SparkSession, sf_dir: str, nlist: int = DNLIST) -> str:
@@ -464,16 +509,38 @@ def ivf_durable_index(spark: SparkSession, sf_dir: str, nlist: int = DNLIST) -> 
     vector->cell assignment (vec_id, e, cell), cell-partitioned. The
     sidecar records the frozen first-``nlist`` centroids so a fresh session
     can resolve probes from metadata alone."""
-    cents = _first_n_centroids(spark, sf_dir, nlist)
-    return _write_cell_index(
-        spark,
-        sf_dir,
-        f"ivf_n{nlist}",
-        lambda: _ivf_assign_probes(spark, sf_dir, nlist=nlist)[0],
-        nlist=nlist,
-        centroids=cents,
-        extra_meta={"centroid_kind": "first_n"},
-    )
+    return _first_n_index(spark, sf_dir, f"ivf_n{nlist}", nlist)
+
+
+def _first_n_index(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    nlist: int,
+    root: str | None = None,
+    delta: bool = False,
+) -> str:
+    """The frozen first-*nlist* grid index, under the catalog *root*. With
+    *delta* it is written as a base phase plus an appended delta phase
+    (the upsert, ivf_upsert_index)."""
+
+    def build():
+        assign, _ = _ivf_assign_probes(spark, sf_dir, nlist=nlist)
+        fields = {
+            "nlist": nlist,
+            "centroids": _first_n_centroids(spark, sf_dir, nlist),
+            "centroid_kind": "first_n",
+        }
+        if not delta:
+            return [assign], fields
+        split = int(_max_vec_id(assign) * UPSERT_BASE_FRACTION)
+        phases = [
+            assign.filter(F.col("vec_id") < split),
+            assign.filter(F.col("vec_id") >= split),
+        ]
+        return phases, {**fields, "split": split}
+
+    return _durable_index(spark, sf_dir, name, build, root=root)
 
 
 @register(
@@ -511,15 +578,11 @@ def ann_ivf_durable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_ivf_objectstore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
-    cents = _first_n_centroids(spark, sf_dir, DNLIST)
-    path = _write_cell_index(
+    path = _first_n_index(
         spark,
         sf_dir,
         f"ivf_objstore_n{DNLIST}",
-        lambda: _ivf_assign_probes(spark, sf_dir, nlist=DNLIST)[0],
-        nlist=DNLIST,
-        centroids=cents,
-        extra_meta={"centroid_kind": "first_n"},
+        DNLIST,
         root=objectstore_index_root(),
     )
     return _ivf_index_read_topk(spark, sf_dir, path)
@@ -616,59 +679,7 @@ def ivf_upsert_index(spark: SparkSession, sf_dir: str, nlist: int = DNLIST) -> s
     catalog publish (atomic rename) happens only after the delta phase, so
     readers never see a base-only index, and the recorded base file set is
     rebased onto the published path."""
-    import json
-    import time as timemod
-    import uuid as uuidmod
-
-    key = sf_dir.rstrip("/")
-    name = f"ivf_upsert_n{nlist}"
-    memo_key = (key, name)
-    cached = _ivf_index_dir_memo.get(memo_key)
-    if cached is not None and _index_is_current(cached, key, name):
-        return cached
-    base = _index_base_path(key, name)
-    if not _index_is_current(base, key, name):
-        tmp = f"{base}.build-{uuidmod.uuid4().hex[:8]}"
-        assign, _ = _ivf_assign_probes(spark, sf_dir, nlist=nlist)
-        split = int(_max_vec_id(assign) * UPSERT_BASE_FRACTION)
-
-        def _phase(df, mode):
-            (
-                df.repartition("cell")
-                .sortWithinPartitions("vec_id")
-                .write.mode(mode)
-                .partitionBy("cell")
-                .parquet(tmp)
-            )
-
-        _phase(assign.filter(F.col("vec_id") < split), "overwrite")
-        base_files = sorted(
-            iofs.join(base, rel) for rel in _cell_file_rels(tmp)
-        )
-        _phase(assign.filter(F.col("vec_id") >= split), "append")
-        meta = {
-            "format_version": INDEX_FORMAT_VERSION,
-            "name": name,
-            "sf_dir": key,
-            "nlist": nlist,
-            "fingerprint": _corpus_fingerprint(key),
-            "n_files": _n_cell_files(tmp),
-            "built_unix": timemod.time(),
-            "centroids": _first_n_centroids(spark, sf_dir, nlist),
-            "centroid_kind": "first_n",
-            "split": split,
-            "base_files": base_files,
-        }
-        iofs.write_text(iofs.join(tmp, _INDEX_META), json.dumps(meta))
-        _publish_index(base, tmp)
-        # drift bookkeeping rides every upsert (r9 verdict #3): the sidecar
-        # records delta_fraction + cell_skew so the retrain-at-compaction
-        # policy (operators/maintenance.retrain_if_skewed) is a metadata read
-        from .maintenance import update_drift_stats
-
-        update_drift_stats(spark, base)
-    _ivf_index_dir_memo[memo_key] = base
-    return base
+    return _first_n_index(spark, sf_dir, f"ivf_upsert_n{nlist}", nlist, delta=True)
 
 
 # --- Trained coarse quantizer (r8 verdict ask #2): the durable IVF index
@@ -692,12 +703,16 @@ def _first_n_centroids(
 
 
 def _collect_first_n(spark: SparkSession, sf_dir: str, k: int) -> list[list[float]]:
+    return _first_rows(_emb(spark, sf_dir), k)
+
+
+def _first_rows(v: DataFrame, k: int) -> list[list[float]]:
+    """The vectors of the (vec_id, e) frame *v* with vec_id < *k*, in id
+    order — the deterministic Lloyd init of every trainer (one collect of
+    k tiny rows)."""
     return [
         [float(x) for x in r["e"]]
-        for r in _emb(spark, sf_dir)
-        .filter(F.col("vec_id") < k)
-        .orderBy("vec_id")
-        .collect()
+        for r in v.filter(F.col("vec_id") < k).orderBy("vec_id").collect()
     ]
 
 
@@ -720,9 +735,7 @@ def _train_cells(
     spark: SparkSession, sf_dir: str, k: int, iters: int
 ) -> list[list[float]]:
     return _lloyd_iterate(
-        _emb(spark, sf_dir),
-        [list(c) for c in _first_n_centroids(spark, sf_dir, k)],
-        iters,
+        _emb(spark, sf_dir), _first_n_centroids(spark, sf_dir, k), iters
     )
 
 
@@ -731,70 +744,67 @@ def _lloyd_iterate(
 ) -> list[list[float]]:
     """*iters* Lloyd iterations over the (vec_id, e) frame *v* from the given
     initial centroids — the loop body shared by lloyd_trained_centroids
-    (full corpus) and ivf_trained_upsert_index (base slice). Mutates and
-    returns *cents*."""
-    import math
-
-    k = len(cents)
-    if k == 0:
-        # empty corpus: no init grid, nothing to train — F.lit([]) below
-        # would be an untyped empty literal (r14 empty-corpus sweep)
-        return cents
-    for _it in range(iters):
-        sims = F.transform(
-            F.lit(cents),
-            lambda c: F.round(cosine_similarity(F.col("e"), c), 6),
-        )
-        assigned = v.withColumn("sims", sims).select(
-            "e",
-            (F.array_position(F.col("sims"), F.array_max("sims")) - 1)
-            .cast("int")
-            .alias("cluster"),
-        )
-        means = (
-            assigned.select("cluster", F.posexplode("e").alias("dim", "x"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg("x").alias("c"))
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cluster.setdefault(int(r["cluster"]), {})[int(r["dim"])] = float(
-                r["c"]
-            )
-        for cid in range(k):
-            if cid in by_cluster:
-                dims = by_cluster[cid]
-                cents[cid] = [
-                    py_floor_nudge(dims[d], 9)
-                    for d in range(len(cents[cid]))
-                ]
-            # else: empty cluster keeps its previous centroid
+    (full corpus), the base-slice builders and the rebalance. Returns new
+    centroids; *cents* is not modified. An empty corpus has no init grid
+    and trains nothing (r14 empty-corpus sweep)."""
+    for _it in range(iters if cents else 0):
+        means = _lloyd_m_step(_assign_by_literal(v, cents), ["cell"], "e")
+        cents = [means.get((cid,), c) for cid, c in enumerate(cents)]
     return cents
+
+
+def _lloyd_m_step(
+    assigned: DataFrame, keys: list[str], vec: str
+) -> dict[tuple[int, ...], list[float]]:
+    """The Lloyd M-step shared by every trainer: the per-*keys* mean of the
+    array column *vec*, dimension by dimension (one posexplode groupBy whose
+    shuffle carries only the k x dim partials), collected and snapped to
+    the 1e-9 grid via floor(x*1e9 + 0.500001) — {key tuple: centroid}. A
+    cluster no row was assigned to is absent, so callers keep its previous
+    centroid (``means.get(key, previous)``)."""
+    by: dict[tuple[int, ...], dict[int, float]] = {}
+    for r in (
+        assigned.select(*keys, F.posexplode(vec).alias("dim", "x"))
+        .groupBy(*keys, "dim")
+        .agg(F.avg("x").alias("c"))
+        .collect()
+    ):
+        by.setdefault(tuple(int(r[k]) for k in keys), {})[int(r["dim"])] = float(
+            r["c"]
+        )
+    return {
+        key: [py_floor_nudge(dims[d], 9) for d in range(len(dims))]
+        for key, dims in by.items()
+    }
+
+
+def _cosine_e_step(v: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """*v* plus ``sims`` (round(cos, 6) against each centroid of the LITERAL
+    k x dim array) and ``cell``, its argmax — transform + array_position
+    inside whole-stage codegen, ZERO shuffle; the first occurrence of the
+    max is the lowest cid, the same tiebreak as the window form and the
+    oracle's row_number. The one cosine E-step of every literal-array
+    trainer and assigner."""
+    sims = F.transform(
+        F.lit(cents), lambda c: F.round(cosine_similarity(F.col("e"), c), 6)
+    )
+    return v.withColumn("sims", sims).withColumn(
+        "cell",
+        (F.array_position(F.col("sims"), F.array_max("sims")) - 1).cast("int"),
+    )
 
 
 def _assign_by_literal(v: DataFrame, cents: list[list[float]]) -> DataFrame:
     """(vec_id, e, cell): nearest-centroid assignment against the LITERAL
-    k x dim centroid array — transform + array_position argmax inside
-    whole-stage codegen, ZERO shuffle (vs the crossJoin+window of
-    _ivf_assign_probes; first occurrence of the max = lowest cid, the same
-    tiebreak as the window form and the oracle's row_number)."""
+    centroid array (_cosine_e_step) — the one-time-build form (vs the
+    crossJoin+window of _ivf_assign_probes and _assign_by_broadcast)."""
     if not cents:
         # empty corpus: no grid to assign against (r14 empty-corpus sweep
         # — F.lit([]) would be an untyped empty literal)
         return v.sparkSession.createDataFrame(
             [], "vec_id long, e array<double>, cell int"
         )
-    sims = F.transform(
-        F.lit(cents), lambda c: F.round(cosine_similarity(F.col("e"), c), 6)
-    )
-    return v.withColumn("sims", sims).select(
-        "vec_id",
-        "e",
-        (F.array_position(F.col("sims"), F.array_max("sims")) - 1)
-        .cast("int")
-        .alias("cell"),
-    )
+    return _cosine_e_step(v, cents).select("vec_id", "e", "cell")
 
 
 def _assign_by_broadcast(
@@ -989,31 +999,19 @@ def ivf_trained_index(
     path (and any fresh session) resolves probes from metadata alone.
     ann_ivf_upsert_topk keeps the FROZEN first-n grid, preserving its
     rebuild-equivalence proof; a trained upsert freezes THESE centroids at
-    base-build the same way.
+    base-build the same way. Like every index, a current one resolves
+    from the sidecar alone, without training (_durable_index)."""
 
-    The catalog is consulted BEFORE training: when a current published
-    index exists, a fresh session resolves it from the sidecar alone and
-    never re-runs the E-step scans (pinned in tests/test_index_catalog.py
-    — training functions are poisoned and the read still succeeds)."""
-    key = sf_dir.rstrip("/")
-    name = f"ivf_trained_n{nlist}_i{iters}"
-    cached = _ivf_index_dir_memo.get((key, name))
-    if cached is not None and _index_is_current(cached, key, name):
-        return cached
-    published = _index_base_path(key, name)
-    if _index_is_current(published, key, name):
-        _ivf_index_dir_memo[(key, name)] = published
-        return published
-    cents = lloyd_trained_centroids(spark, sf_dir, nlist, iters)
-    return _write_cell_index(
-        spark,
-        sf_dir,
-        f"ivf_trained_n{nlist}_i{iters}",
-        lambda: _assign_by_literal(_emb(spark, sf_dir), cents),
-        nlist=nlist,
-        centroids=cents,
-        extra_meta={"centroid_kind": "lloyd_trained", "iters": iters},
-    )
+    def build():
+        cents = lloyd_trained_centroids(spark, sf_dir, nlist, iters)
+        return [_assign_by_literal(_emb(spark, sf_dir), cents)], {
+            "nlist": nlist,
+            "centroids": cents,
+            "centroid_kind": "lloyd_trained",
+            "iters": iters,
+        }
+
+    return _durable_index(spark, sf_dir, f"ivf_trained_n{nlist}_i{iters}", build)
 
 
 def ivf_trained_upsert_index(
@@ -1035,74 +1033,77 @@ def ivf_trained_upsert_index(
     full re-trained rebuild, because training on the grown corpus moves
     the centroids and reassigns everything; that re-train + rebuild is the
     periodic REBALANCE operation, not the daily append."""
-    import json
-    import time as timemod
-    import uuid as uuidmod
+    return _base_slice_index(
+        spark, sf_dir, f"ivf_trained_upsert_n{nlist}_i{iters}", nlist, iters
+    )
 
-    key = sf_dir.rstrip("/")
-    name = f"ivf_trained_upsert_n{nlist}_i{iters}"
-    memo_key = (key, name)
-    cached = _ivf_index_dir_memo.get(memo_key)
-    if cached is not None and _index_is_current(cached, key, name):
-        return cached
-    base = _index_base_path(key, name)
-    if not _index_is_current(base, key, name):
-        tmp = f"{base}.build-{uuidmod.uuid4().hex[:8]}"
-        v = _emb(spark, sf_dir)
-        split = int(_max_vec_id(v) * UPSERT_BASE_FRACTION)
-        # train on the BASE slice only — the delta doesn't exist yet at
-        # base-build time (same shared loop body as lloyd_trained_centroids,
-        # which trains on the full corpus)
-        base_v = v.filter(F.col("vec_id") < split)
-        cents = _lloyd_iterate(
-            base_v,
-            [list(c) for c in _first_n_centroids(spark, sf_dir, nlist)],
-            iters,
+
+def _base_slice_quantizers(
+    spark: SparkSession, sf_dir: str, nlist: int, iters: int, pq: bool
+):
+    """(split, base_v, delta_v, cents, cb) of the upsert and stream-maintained
+    builders: the deterministic split (vec_id below/above 75% of max), the
+    base and delta slices of the corpus, the coarse centroids Lloyd-trained
+    on the BASE slice only from the first-*nlist* init (the delta doesn't
+    exist yet at base-build time), and, with *pq*, the per-subspace PQ
+    codebook trained on the same slice (else None). These are the frozen
+    artifacts the sidecar records."""
+    v = _emb(spark, sf_dir)
+    split = int(_max_vec_id(v) * UPSERT_BASE_FRACTION)
+    base_v = v.filter(F.col("vec_id") < split)
+    cents = _lloyd_iterate(base_v, _first_n_centroids(spark, sf_dir, nlist), iters)
+    cb = None
+    if pq:
+        cb = _pq_lloyd(
+            _pq_subvectors_of(base_v),
+            _pq_frozen_codebook(spark, sf_dir),
+            PQ_TRAIN_ITERS,
         )
+    return split, base_v, v.filter(F.col("vec_id") >= split), cents, cb
 
-        def _phase(df, mode):
-            (
-                _assign_by_literal(df, cents)
-                .repartition("cell")
-                .sortWithinPartitions("vec_id")
-                .write.mode(mode)
-                .partitionBy("cell")
-                .parquet(tmp)
-            )
 
-        _phase(base_v, "overwrite")
-        base_files = sorted(
-            iofs.join(base, rel) for rel in _cell_file_rels(tmp)
+def _base_slice_index(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    nlist: int,
+    iters: int,
+    delta: bool = True,
+    pq: bool = False,
+) -> str:
+    """The four base-slice-trained indexes: {batch upsert, stream base} x
+    {raw vectors, PQ codes}. Rows are (vec_id, e, cell), or with *pq*
+    (vec_id, code_0..code_{M-1}, cell) against the frozen codebook. With
+    *delta* the delta slice is appended against the same frozen artifacts
+    (the batch upsert); without it the delta arrives later as a stream of
+    epochs (streaming.windows)."""
+
+    def build():
+        split, base_v, delta_v, cents, cb = _base_slice_quantizers(
+            spark, sf_dir, nlist, iters, pq
         )
-        # delta phase: in production this runs days later in a fresh
-        # session — the centroids come from the sidecar-shaped artifact
-        # (the local `cents` IS that artifact; the round-trip test appends
-        # from a re-read of the sidecar to prove it)
-        _phase(v.filter(F.col("vec_id") >= split), "append")
-        meta = {
-            "format_version": INDEX_FORMAT_VERSION,
-            "name": name,
-            "sf_dir": key,
+        fields = {
             "nlist": nlist,
-            "fingerprint": _corpus_fingerprint(key),
-            "n_files": _n_cell_files(tmp),
-            "built_unix": timemod.time(),
             "centroids": cents,
             "centroid_kind": "lloyd_trained_base_slice",
             "iters": iters,
             "split": split,
-            "base_files": base_files,
         }
-        iofs.write_text(iofs.join(tmp, _INDEX_META), json.dumps(meta))
-        _publish_index(base, tmp)
-        # drift bookkeeping rides every upsert (r9 verdict #3): the sidecar
-        # records delta_fraction + cell_skew so the retrain-at-compaction
-        # policy (operators/maintenance.retrain_if_skewed) is a metadata read
-        from .maintenance import update_drift_stats
+        if pq:
+            fields.update(
+                codebook=cb, codebook_kind="lloyd_trained_base_slice", pq=_PQ_META
+            )
+        # the delta phase: in production it runs days later in a fresh
+        # session against the sidecar's artifacts (the local `cents`/`cb`
+        # ARE those artifacts; the round-trip tests append from a re-read
+        # of the sidecar to prove it)
+        phases = [
+            _codes_rows(df, cents, cb) if pq else _assign_by_literal(df, cents)
+            for df in ([base_v, delta_v] if delta else [base_v])
+        ]
+        return phases, fields
 
-        update_drift_stats(spark, base)
-    _ivf_index_dir_memo[memo_key] = base
-    return base
+    return _durable_index(spark, sf_dir, name, build)
 
 
 def stream_maintained_ivf_index(
@@ -1118,9 +1119,8 @@ def stream_maintained_ivf_index(
     append: the delta arrives as a live stream, and
     streaming.windows.stream_ann_index_maintenance appends each microbatch
     cell-wise into committed per-epoch directories under this index
-    (sidecar-resolved centroids, _EPOCH markers). Currency is checked
-    before any training work, so a session that finds the published base
-    only replays/serves deltas."""
+    (sidecar-resolved centroids, _EPOCH markers). A session that finds
+    the published base current only replays/serves deltas."""
     # Single-writer contract (the standard streaming-sink ownership rule):
     # one maintainer per index at a time. Concurrent maintainers racing the
     # same _delta_epochs dirs could interleave different file->epoch
@@ -1129,35 +1129,13 @@ def stream_maintained_ivf_index(
     # another's. Production enforces this via checkpoint ownership, exactly
     # like any foreachBatch sink; retrain/fold maintenance ops assume the
     # same exclusivity.
-    key = sf_dir.rstrip("/")
-    name = f"ivf_stream_maint_n{nlist}_i{iters}"
-    cached = _ivf_index_dir_memo.get((key, name))
-    if cached is not None and _index_is_current(cached, key, name):
-        return cached
-    published = _index_base_path(key, name)
-    if _index_is_current(published, key, name):
-        _ivf_index_dir_memo[(key, name)] = published
-        return published
-    v = _emb(spark, sf_dir)
-    split = int(_max_vec_id(v) * UPSERT_BASE_FRACTION)
-    base_v = v.filter(F.col("vec_id") < split)
-    cents = _lloyd_iterate(
-        base_v,
-        [list(c) for c in _first_n_centroids(spark, sf_dir, nlist)],
-        iters,
-    )
-    return _write_cell_index(
+    return _base_slice_index(
         spark,
         sf_dir,
-        name,
-        lambda: _assign_by_literal(base_v, cents),
-        nlist=nlist,
-        centroids=cents,
-        extra_meta={
-            "centroid_kind": "lloyd_trained_base_slice",
-            "iters": iters,
-            "split": split,
-        },
+        f"ivf_stream_maint_n{nlist}_i{iters}",
+        nlist,
+        iters,
+        delta=False,
     )
 
 
@@ -1837,6 +1815,8 @@ PQ_SHORTLIST = 50  # ADC shortlist size fed to the exact rerank
 # codebook is trained. Two iterations match TRAINED_ITERS and keep the
 # chained-CTE oracle tractable.
 PQ_TRAIN_ITERS = 2
+# the PQ layout every codes index records in its sidecar
+_PQ_META = {"m": PQ_M, "dsub": PQ_DSUB, "k": PQ_K, "train_iters": PQ_TRAIN_ITERS}
 
 
 def _pq_frozen_codebook(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
@@ -1844,15 +1824,9 @@ def _pq_frozen_codebook(spark: SparkSession, sf_dir: str) -> list[list[list[floa
     the first PQ_K vectors — the deterministic Lloyd INIT (and the
     pre-training baseline the recall guard in tests/test_trained_pq.py
     compares against). Driver-side collect of PQ_K tiny rows."""
-    rows = (
-        _emb(spark, sf_dir)
-        .filter(F.col("vec_id") < PQ_K)
-        .orderBy("vec_id")
-        .collect()
-    )
+    rows = _first_rows(_emb(spark, sf_dir), PQ_K)
     return [
-        [list(r["e"][m * PQ_DSUB : (m + 1) * PQ_DSUB]) for r in rows]
-        for m in range(PQ_M)
+        [e[m * PQ_DSUB : (m + 1) * PQ_DSUB] for e in rows] for m in range(PQ_M)
     ]
 
 
@@ -1905,9 +1879,7 @@ def _pq_lloyd(
 ) -> list[list[list[float]]]:
     """The per-subspace Lloyd loop body over a (vec_id, m, s) frame —
     shared by the full-corpus trained codebook and the base-slice-trained
-    upsert codebook. Mutates and returns *cb*."""
-    import math
-
+    codebooks. Returns a new codebook; *cb* is not modified."""
     if not cb or not cb[0]:
         # empty corpus: the frozen init collected zero vectors, so there is
         # no codebook to train (r14 empty-corpus sweep)
@@ -1925,27 +1897,13 @@ def _pq_lloyd(
         )
         rounded = F.transform(dists, lambda x: F.round(x, 6))
         code = (F.array_position(rounded, F.array_min(rounded)) - 1).cast("int")
-        means = (
-            sub.select("m", code.alias("code"), "s")
-            .select("m", "code", F.posexplode("s").alias("dim", "x"))
-            .groupBy("m", "code", "dim")
-            .agg(F.avg("x").alias("c"))
-            .collect()
+        means = _lloyd_m_step(
+            sub.select("m", code.alias("code"), "s"), ["m", "code"], "s"
         )
-        by: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means:
-            by.setdefault((int(r["m"]), int(r["code"])), {})[int(r["dim"])] = (
-                float(r["c"])
-            )
-        for m in range(PQ_M):
-            for cid in range(PQ_K):
-                dims = by.get((m, cid))
-                if dims is not None:
-                    cb[m][cid] = [
-                        py_floor_nudge(dims[d], 9)
-                        for d in range(PQ_DSUB)
-                    ]
-                # else: empty cluster keeps its previous centroid
+        cb = [
+            [means.get((m, cid), c) for cid, c in enumerate(cbm)]
+            for m, cbm in enumerate(cb)
+        ]
     return cb
 
 
@@ -2512,41 +2470,25 @@ def ivfpq_durable_index(spark: SparkSession, sf_dir: str, nlist: int = DNLIST) -
     codes are the whole point of PQ's memory layer). The Lloyd-trained
     codebook lands in the _catalog_meta.json sidecar (the per-subspace
     analog of the trained coarse centroids), so any fresh session decodes
-    codes from index metadata alone — currency is checked BEFORE any build
-    input (training, encode, assignment) is computed, the same early
-    return as ivf_trained_index; tests/test_trained_pq.py poisons the
-    training/encode functions and the read still succeeds. The index name
-    carries the training config: a codebook change can never silently
-    decode an index built under a different codebook."""
-    key = sf_dir.rstrip("/")
-    name = f"ivfpq_n{nlist}_t{PQ_TRAIN_ITERS}"
-    cached = _ivf_index_dir_memo.get((key, name))
-    if cached is not None and _index_is_current(cached, key, name):
-        return cached
-    published = _index_base_path(key, name)
-    if _index_is_current(published, key, name):
-        _ivf_index_dir_memo[(key, name)] = published
-        return published
-    assign, _ = _ivf_assign_probes(spark, sf_dir, nlist=nlist)
-    enc = _pq_encoded(spark, sf_dir)
-    codes = enc.select("vec_id", *[f"code_{m}" for m in range(PQ_M)])
-    return _write_cell_index(
-        spark,
-        sf_dir,
-        f"ivfpq_n{nlist}_t{PQ_TRAIN_ITERS}",
-        lambda: codes.join(assign.select("vec_id", "cell"), "vec_id"),
-        nlist=nlist,
-        extra_meta={
+    codes from index metadata alone (no training, encode or assignment
+    runs for a current index; tests/test_trained_pq.py poisons them). The
+    index name carries the training config: a codebook change can never
+    silently decode an index built under a different codebook."""
+
+    def build():
+        assign, _ = _ivf_assign_probes(spark, sf_dir, nlist=nlist)
+        codes = _pq_encoded(spark, sf_dir).select(
+            "vec_id", *[f"code_{m}" for m in range(PQ_M)]
+        )
+        return [codes.join(assign.select("vec_id", "cell"), "vec_id")], {
+            "nlist": nlist,
+            "centroids": None,  # the read path probes the corpus's grid
             "codebook": _pq_codebook(spark, sf_dir),
             "codebook_kind": "lloyd_trained",
-            "pq": {
-                "m": PQ_M,
-                "dsub": PQ_DSUB,
-                "k": PQ_K,
-                "train_iters": PQ_TRAIN_ITERS,
-            },
-        },
-    )
+            "pq": _PQ_META,
+        }
+
+    return _durable_index(spark, sf_dir, f"ivfpq_n{nlist}_t{PQ_TRAIN_ITERS}", build)
 
 
 def _pq_encode_by_broadcast(
@@ -2608,84 +2550,36 @@ def ivfpq_trained_upsert_index(
     in the corpus for the shortlist rerank only. Not registered as a
     driver query (registry at rotation capacity — COVERAGE.md r10 policy);
     exercised by the pytest suite like ivf_trained_upsert_index."""
-    import json
-    import time as timemod
-    import uuid as uuidmod
+    return _base_slice_index(
+        spark,
+        sf_dir,
+        f"ivfpq_trained_upsert_n{nlist}_i{iters}_t{PQ_TRAIN_ITERS}",
+        nlist,
+        iters,
+        pq=True,
+    )
 
-    key = sf_dir.rstrip("/")
-    name = f"ivfpq_trained_upsert_n{nlist}_i{iters}_t{PQ_TRAIN_ITERS}"
-    memo_key = (key, name)
-    cached = _ivf_index_dir_memo.get(memo_key)
-    if cached is not None and _index_is_current(cached, key, name):
-        return cached
-    base = _index_base_path(key, name)
-    if not _index_is_current(base, key, name):
-        tmp = f"{base}.build-{uuidmod.uuid4().hex[:8]}"
-        v = _emb(spark, sf_dir)
-        split = int(_max_vec_id(v) * UPSERT_BASE_FRACTION)
-        base_v = v.filter(F.col("vec_id") < split)
-        cents = _lloyd_iterate(
-            base_v,
-            [list(c) for c in _first_n_centroids(spark, sf_dir, nlist)],
-            iters,
+
+def _codes_rows(
+    df: DataFrame, cents: list[list[float]], cb: list[list[list[float]]]
+) -> DataFrame:
+    """(vec_id, code_0..code_{M-1}, cell): the codes-only index rows of the
+    (vec_id, e) frame *df*, encoded against the frozen codebook *cb* and
+    assigned against the frozen centroids *cents* (literal forms — one-time
+    builds)."""
+    if not cb or not cb[0]:
+        # empty corpus: no codebook to encode against — the encode
+        # expression cannot be constructed (r14 empty-corpus sweep)
+        return df.sparkSession.createDataFrame(
+            [],
+            "vec_id long, "
+            + ", ".join(f"code_{m} int" for m in range(PQ_M))
+            + ", cell int",
         )
-        cb = _pq_lloyd(
-            _pq_subvectors_of(base_v),
-            _pq_frozen_codebook(spark, sf_dir),
-            PQ_TRAIN_ITERS,
-        )
-
-        def _rows(df: DataFrame) -> DataFrame:
-            codes = _pq_encode_with(df, cb).select(
-                "vec_id", *[f"code_{m}" for m in range(PQ_M)]
-            )
-            asg = _assign_by_literal(df, cents).select("vec_id", "cell")
-            return codes.join(asg, "vec_id")
-
-        def _phase(df, mode):
-            (
-                _rows(df)
-                .repartition("cell")
-                .sortWithinPartitions("vec_id")
-                .write.mode(mode)
-                .partitionBy("cell")
-                .parquet(tmp)
-            )
-
-        _phase(base_v, "overwrite")
-        base_files = sorted(
-            iofs.join(base, rel) for rel in _cell_file_rels(tmp)
-        )
-        _phase(v.filter(F.col("vec_id") >= split), "append")
-        meta = {
-            "format_version": INDEX_FORMAT_VERSION,
-            "name": name,
-            "sf_dir": key,
-            "nlist": nlist,
-            "fingerprint": _corpus_fingerprint(key),
-            "n_files": _n_cell_files(tmp),
-            "built_unix": timemod.time(),
-            "centroids": cents,
-            "centroid_kind": "lloyd_trained_base_slice",
-            "codebook": cb,
-            "codebook_kind": "lloyd_trained_base_slice",
-            "pq": {
-                "m": PQ_M,
-                "dsub": PQ_DSUB,
-                "k": PQ_K,
-                "train_iters": PQ_TRAIN_ITERS,
-            },
-            "iters": iters,
-            "split": split,
-            "base_files": base_files,
-        }
-        iofs.write_text(iofs.join(tmp, _INDEX_META), json.dumps(meta))
-        _publish_index(base, tmp)
-        from .maintenance import update_drift_stats
-
-        update_drift_stats(spark, base)
-    _ivf_index_dir_memo[memo_key] = base
-    return base
+    codes = _pq_encode_with(df, cb).select(
+        "vec_id", *[f"code_{m}" for m in range(PQ_M)]
+    )
+    return codes.join(_assign_by_literal(df, cents).select("vec_id", "cell"), "vec_id")
 
 
 def stream_maintained_ivfpq_index(
@@ -2702,65 +2596,14 @@ def stream_maintained_ivfpq_index(
     arrives as a live stream and streaming.windows.stream_ivfpq_maintenance
     appends each microbatch's codes cell-wise into committed epoch dirs.
     Test-surface only (registry at rotation capacity)."""
-    key = sf_dir.rstrip("/")
-    name = f"ivfpq_stream_maint_n{nlist}_i{iters}_t{PQ_TRAIN_ITERS}"
-    cached = _ivf_index_dir_memo.get((key, name))
-    if cached is not None and _index_is_current(cached, key, name):
-        return cached
-    published = _index_base_path(key, name)
-    if _index_is_current(published, key, name):
-        _ivf_index_dir_memo[(key, name)] = published
-        return published
-    v = _emb(spark, sf_dir)
-    split = int(_max_vec_id(v) * UPSERT_BASE_FRACTION)
-    base_v = v.filter(F.col("vec_id") < split)
-    cents = _lloyd_iterate(
-        base_v,
-        [list(c) for c in _first_n_centroids(spark, sf_dir, nlist)],
-        iters,
-    )
-    cb = _pq_lloyd(
-        _pq_subvectors_of(base_v),
-        _pq_frozen_codebook(spark, sf_dir),
-        PQ_TRAIN_ITERS,
-    )
-
-    def _rows() -> DataFrame:
-        if not cb or not cb[0]:
-            # empty corpus: no codebook to encode against — the encode
-            # expression cannot be constructed (r14 empty-corpus sweep)
-            return spark.createDataFrame(
-                [],
-                "vec_id long, "
-                + ", ".join(f"code_{m} int" for m in range(PQ_M))
-                + ", cell int",
-            )
-        codes = _pq_encode_with(base_v, cb).select(
-            "vec_id", *[f"code_{m}" for m in range(PQ_M)]
-        )
-        asg = _assign_by_literal(base_v, cents).select("vec_id", "cell")
-        return codes.join(asg, "vec_id")
-
-    return _write_cell_index(
+    return _base_slice_index(
         spark,
         sf_dir,
-        name,
-        _rows,
-        nlist=nlist,
-        centroids=cents,
-        extra_meta={
-            "centroid_kind": "lloyd_trained_base_slice",
-            "codebook": cb,
-            "codebook_kind": "lloyd_trained_base_slice",
-            "pq": {
-                "m": PQ_M,
-                "dsub": PQ_DSUB,
-                "k": PQ_K,
-                "train_iters": PQ_TRAIN_ITERS,
-            },
-            "iters": iters,
-            "split": split,
-        },
+        f"ivfpq_stream_maint_n{nlist}_i{iters}_t{PQ_TRAIN_ITERS}",
+        nlist,
+        iters,
+        delta=False,
+        pq=True,
     )
 
 
@@ -3425,57 +3268,28 @@ def kmeans_lloyd_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # review, same rule as the ml.py trainers); finally-scoped so a
     # mid-iteration failure can't leak them (ADVICE r12)
     try:
-        cents = [
-            [float(x) for x in r["e"]]
-            for r in v.filter(F.col("vec_id") < NLIST).orderBy("vec_id").collect()
-        ]
+        cents = _first_rows(v, NLIST)
         # empty corpus: no init grid, no trajectory (r14 empty-corpus
-        # sweep — F.lit([]) below would be an untyped empty literal)
+        # sweep — F.lit([]) would be an untyped empty literal)
         for it in range(1, LLOYD_ITERS + 1 if cents else 0):
-            carr = F.lit(cents)  # k x dim literal — the broadcast model
-            sims = F.transform(
-                carr, lambda c: F.round(cosine_similarity(F.col("e"), c), 6)
-            )
             assigned = (
-                v.withColumn("sims", sims)
-                .select(
-                    "e",
-                    (F.array_position(F.col("sims"), F.array_max("sims")) - 1)
-                    .cast("int")
-                    .alias("cluster"),
-                    F.array_max("sims").alias("sim"),
-                )
-            ).persist()
+                _cosine_e_step(v, cents)
+                .select("e", "cell", F.array_max("sims").alias("sim"))
+                .persist()
+            )
             try:
-                stats = assigned.groupBy("cluster").agg(
+                stats = assigned.groupBy("cell").agg(
                     F.count(F.lit(1)).alias("n_members"),
                     floor_nudge(F.avg("sim"), 6).alias("avg_sim"),
                 )
                 traj.extend(
-                    (it, int(r["cluster"]), int(r["n_members"]), float(r["avg_sim"]))
+                    (it, int(r["cell"]), int(r["n_members"]), float(r["avg_sim"]))
                     for r in stats.collect()
                 )
-                means = (
-                    assigned.select("cluster", F.posexplode("e").alias("dim", "x"))
-                    .groupBy("cluster", "dim")
-                    .agg(F.avg("x").alias("c"))
-                    .collect()
-                )
+                means = _lloyd_m_step(assigned, ["cell"], "e")
             finally:
                 assigned.unpersist()
-            by_cluster: dict[int, dict[int, float]] = {}
-            for r in means:
-                by_cluster.setdefault(int(r["cluster"]), {})[int(r["dim"])] = float(
-                    r["c"]
-                )
-            for cid in range(NLIST):
-                if cid in by_cluster:
-                    dims = by_cluster[cid]
-                    cents[cid] = [
-                        py_floor_nudge(dims[d], 9)
-                        for d in range(len(cents[cid]))
-                    ]
-                # else: empty cluster keeps its previous centroid
+            cents = [means.get((cid,), c) for cid, c in enumerate(cents)]
     finally:
         v.unpersist()
     return spark.createDataFrame(

@@ -1486,35 +1486,36 @@ def make_epoch_appender(spark: SparkSession, epoch_root: str, cents):
     or rebuild, which is what makes the oracle a full-rebuild
     equivalence), build the microbatch's epoch dir in a TEMP location
     with its _EPOCH marker inside, then atomically swap it into place
-    (the _publish_index seam). A replayed epoch (same epoch_id after
-    failure recovery) therefore replaces its predecessor atomically — a
-    reader either sees the old committed epoch or the new complete one,
-    never a half-written dir and never a committed epoch flickering back
-    to uncommitted (a plain overwrite deletes marker+data before
-    rewriting — r10 self-review finding). Assignment is the BROADCAST-DF
+    (the one cell-index writer, similarity._write_cell_index). A replayed
+    epoch (same epoch_id after failure recovery) therefore replaces its
+    predecessor atomically — a reader either sees the old committed epoch
+    or the new complete one, never a half-written dir and never a
+    committed epoch flickering back to uncommitted (a plain overwrite
+    deletes marker+data before rewriting — r10 self-review finding). Assignment is the BROADCAST-DF
     form: per-microbatch calls must not pay the k x dim literal planning
     tax (~1.6 s/call x 4 microbatches, measured — the r9 rule).
 
     Module-level factory (not an inline closure) so the crash-resume
     chaos test drives the SAME commit protocol the production query runs
     (tests/test_round10_ops.py)."""
+    from ..operators.similarity import _assign_by_broadcast
+
+    return _epoch_appender(
+        spark, epoch_root, lambda df: _assign_by_broadcast(spark, df, cents)
+    )
+
+
+def _epoch_appender(spark: SparkSession, epoch_root: str, rows):
+    """foreachBatch sink committing ``rows(batch_df)`` as the epoch dir
+    ``e<epoch_id>`` under *epoch_root* through the one cell-index writer
+    (temp tree, ``_EPOCH`` marker last, atomic publish)."""
     import os
 
-    from ..operators.similarity import _assign_by_broadcast, _publish_index
+    from ..operators.similarity import _write_cell_index
 
     def _append(batch_df: DataFrame, epoch_id: int) -> None:
         edir = os.path.join(epoch_root, f"e{int(epoch_id)}")
-        tmp = f"{edir}.build-{uuid.uuid4().hex[:8]}"
-        (
-            _assign_by_broadcast(spark, batch_df, cents)
-            .repartition("cell")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(tmp)
-        )
-        iofs.write_text(iofs.join(tmp, "_EPOCH"), str(int(epoch_id)))
-        _publish_index(edir, tmp)
+        _write_cell_index(spark, edir, [rows(batch_df)], str(int(epoch_id)))
 
     return _append
 
@@ -1654,35 +1655,18 @@ def make_codes_epoch_appender(
     appender. Module-level factory for the same reason as
     make_epoch_appender: the crash-resume chaos test must drive the
     production commit protocol itself."""
-    import os
-
     from ..operators.similarity import (
         _assign_by_broadcast,
         _pq_encode_by_broadcast,
-        _publish_index,
     )
 
-    def _append(batch_df: DataFrame, epoch_id: int) -> None:
-        edir = os.path.join(epoch_root, f"e{int(epoch_id)}")
-        tmp = f"{edir}.build-{uuid.uuid4().hex[:8]}"
-        codes = _pq_encode_by_broadcast(spark, batch_df, cb)
-        rows = codes.join(
-            _assign_by_broadcast(spark, batch_df, cents).select(
-                "vec_id", "cell"
-            ),
-            "vec_id",
+    def rows(batch_df: DataFrame) -> DataFrame:
+        asg = _assign_by_broadcast(spark, batch_df, cents)
+        return _pq_encode_by_broadcast(spark, batch_df, cb).join(
+            asg.select("vec_id", "cell"), "vec_id"
         )
-        (
-            rows.repartition("cell")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(tmp)
-        )
-        iofs.write_text(iofs.join(tmp, "_EPOCH"), str(int(epoch_id)))
-        _publish_index(edir, tmp)
 
-    return _append
+    return _epoch_appender(spark, epoch_root, rows)
 
 
 def stream_ivfpq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,6 +16,16 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_ORACLE, drop_session_memo
 
 
+@pytest.fixture(autouse=True)
+def _private_index_dir_memo(monkeypatch):
+    """Each test resolves through its own index-directory memo, so no entry
+    pointing into a test's tmp index root outlives the test (a later test
+    resolving the same index name would get that tmp path)."""
+    from hri_flink_validation_passthrough_spark.operators import similarity as S
+
+    monkeypatch.setattr(S, "_ivf_index_dir_memo", {})
+
+
 def _clear_session_memos():
     from hri_flink_validation_passthrough_spark.operators import similarity as S
 
@@ -131,13 +141,14 @@ def test_trained_upsert_equals_one_shot_with_frozen_centroids(
     cents = meta["centroids"]
 
     # one-shot build of the FULL corpus with the frozen base-trained grid
-    one_shot = S._write_cell_index(
+    one_shot = S._durable_index(
         spark,
         SF_ORACLE,
         "trained_oneshot_equiv",
-        lambda: S._assign_by_literal(S._emb(spark, SF_ORACLE), cents),
-        nlist=S.DNLIST,
-        centroids=cents,
+        lambda: (
+            [S._assign_by_literal(S._emb(spark, SF_ORACLE), cents)],
+            {"nlist": S.DNLIST, "centroids": cents},
+        ),
     )
     probes = S._probes_from_centroids(spark, SF_ORACLE, cents)
     read = lambda p: {  # noqa: E731

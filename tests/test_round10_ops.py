@@ -349,12 +349,11 @@ def test_ivfpq_trained_upsert_equals_one_shot_with_frozen_artifacts(
             S._assign_by_literal(df, cents).select("vec_id", "cell"), "vec_id"
         )
 
-    one_shot = S._write_cell_index(
+    one_shot = S._durable_index(
         spark,
         SF_ORACLE,
         "ivfpq_trained_oneshot_equiv",
-        lambda: rows(S._emb(spark, SF_ORACLE)),
-        nlist=S.DNLIST,
+        lambda: ([rows(S._emb(spark, SF_ORACLE))], {"nlist": S.DNLIST}),
     )
     code_cols = [f"code_{m}" for m in range(S.PQ_M)]
     got = {
