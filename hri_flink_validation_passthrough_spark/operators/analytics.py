@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions import floor_nudge, with_session_ids
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table, session_memo
 from ..materialize import cut
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -55,11 +55,6 @@ EWMA_B = 16  # block length: intra-block exponents stay in [-15, 15]
 EWMA_CARRY = 3
 
 HIST_BINS = 10
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prepare(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _fmt(col):
@@ -114,7 +109,7 @@ _SQL_SESSIONS = f"""
     "to ordering among equal (t, delta) rows, so both engines agree.",
 )
 def max_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sess = with_session_ids(e, SESSION_GAP_S)
     si = sess.groupBy("user_id", "sess_id").agg(
         F.min("ts").alias("t_start"), F.max("ts").alias("t_end")
@@ -211,7 +206,7 @@ def _ewma_oracle() -> str:
     "longer than one block; all JVM window/pow algebra.",
 )
 def events_ewma_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     o = e.withColumn("rn", F.row_number().over(w) - 1).withColumn(
         "blk", F.expr(f"rn div {EWMA_B}")
@@ -304,7 +299,7 @@ def events_ewma_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB swap the boundary job for approx_percentile, binning unchanged.",
 )
 def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     dist = li.groupBy(F.col("l_extendedprice").alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -390,10 +385,11 @@ MAD_CUT = 3.0
     "median for approx_percentile — the broadcast-back shape is unchanged.",
 )
 def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
+    # 5 rows; its lineage is a full percentile pass and dev is consumed twice
     med = e.groupBy("event_type").agg(
         F.percentile("value", F.lit(0.5)).alias("med")
-    ).persist()  # 5 rows; its lineage is a full percentile pass and dev is consumed twice
+    ).transform(cut(eager=False))
     dev = e.join(F.broadcast(med), "event_type").withColumn(
         "adev", F.abs(F.col("value") - F.col("med"))
     )
@@ -468,7 +464,7 @@ def _profile_oracle() -> str:
     "approx_count_distinct — shapes unchanged.",
 )
 def column_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cols = _PROFILE_NUM + _PROFILE_TXT + _PROFILE_DT
     aggs = [F.count(F.lit(1)).alias("n")]
     for c in cols:
@@ -640,7 +636,7 @@ def _profile_approx_oracle() -> str:
 def column_profile_stats_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import _hll_readout, _hll_reg_table
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cols = _PROFILE_NUM + _PROFILE_TXT + _PROFILE_DT
     pairs = (
         o.select(
@@ -727,7 +723,7 @@ _CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
     "Superseded in r12.",
 )
 def numeric_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pairs = [
         (a, b)
         for i, a in enumerate(_CORR_COLS)
@@ -793,7 +789,7 @@ def numeric_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sums, so results agree to float noise, far under round(4).",
 )
 def ols_price_on_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     s = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("double").alias("nn"),
         F.sum("l_quantity").alias("sx"),
@@ -855,7 +851,7 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts, both self-join sides) — persist it so the scan+distinct runs
     # once (r5 scan sweep: 5 lineitem scans, now 1)
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
         # cut() = the repo-wide materialization policy (materialize.py;
@@ -983,8 +979,8 @@ def _ts_oracle() -> str:
     """
 
 
-def _dense_hourly(e: DataFrame) -> DataFrame:
-    """Per-type hourly count series, DENSIFIED: zero-event hours are
+def _dense_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-type hourly count series of events, DENSIFIED: zero-event hours are
     materialized as 0.0 via a per-type sequence(min,max,1h) grid, so ordered
     frames over the series cover clock hours, never stitched across gaps.
     The grid is hourly-aggregate-sized (span hours x types) —
@@ -995,7 +991,14 @@ def _dense_hourly(e: DataFrame) -> DataFrame:
     caller fans out into several consumers (window + per-type aggregates).
     Without the persists each consumer re-runs the full events scan —
     8-12 base-table scans per query in the un-persisted plan, which at
-    100 TB is the whole cost. The cached tables are hours x types rows."""
+    100 TB is the whole cost. The cached tables are hours x types rows.
+    Session-memoized on ``events.parquet``, so the five callers share one
+    copy and an in-place regeneration unpersists both tables."""
+    return session_memo(spark, sf_dir, "events.parquet", _dense_hourly_build)[0]
+
+
+def _dense_hourly_build(spark: SparkSession, sf_dir: str):
+    e = load_table(spark, sf_dir, "events")
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
     ).agg(F.count(F.lit(1)).cast("double").alias("n")).persist()
@@ -1006,11 +1009,13 @@ def _dense_hourly(e: DataFrame) -> DataFrame:
         "event_type",
         F.explode(F.sequence("mn", "mx", F.expr("INTERVAL 1 HOUR"))).alias("hr"),
     )
-    return (
+    dense = (
         grid.join(hourly, ["event_type", "hr"], "left")
         .withColumn("n", F.coalesce("n", F.lit(0.0)))
         .persist()
     )
+    # hourly rides the memo tuple so eviction unpersists it with dense
+    return dense, hourly
 
 
 @register(
@@ -1033,7 +1038,7 @@ def _dense_hourly(e: DataFrame) -> DataFrame:
     "state O(W).",
 )
 def ts_subsequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dense = _dense_hourly(_t(spark, sf_dir, "events"))
+    dense = _dense_hourly(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("hr").rowsBetween(0, TS_W - 1)
     s = dense.withColumn("arr", F.collect_list("n").over(w)).filter(
         F.size("arr") == TS_W
@@ -1106,7 +1111,7 @@ CONV_TOL_S = 3600  # signup -> purchase conversion window (1 hour)
 def funnel_conversion_within_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .asof import asof_join
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     signups = e.filter(F.col("event_type") == "signup").select(
         "event_id", F.col("user_id").alias("k"), F.col("ts").alias("t")
     )
@@ -1191,7 +1196,7 @@ def _rfm_oracle() -> str:
     "necessity.",
 )
 def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cutoff = o.agg(F.max("o_orderdate").alias("cutoff"))
     rfm = (
         o.groupBy(F.col("o_custkey").alias("c"))
@@ -1434,7 +1439,7 @@ def _hw_oracle() -> str:
     "at any series length.",
 )
 def holt_winters_level_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dense = _dense_hourly(_t(spark, sf_dir, "events"))
+    dense = _dense_hourly(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("hr")
     o = dense.withColumn("rn", F.row_number().over(w) - 1)
     bl = o.select(
@@ -1518,7 +1523,7 @@ SEAS_P = 24  # hour-of-day period
 def _seasonal_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, hr, n, seasonal, trend, residual) over the densified
     hourly series — shared by the decomposition and anomaly queries."""
-    dense = _dense_hourly(_t(spark, sf_dir, "events"))
+    dense = _dense_hourly(spark, sf_dir)
     # seasonal index: hour-of-day mean minus the series mean (additive,
     # zero-mean); both are per-type aggregates over the dense grid — 120 and
     # 5 rows, broadcast back
@@ -1712,7 +1717,7 @@ def seasonal_anomaly_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ratio; all integer counts otherwise.",
 )
 def session_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sess = with_session_ids(e, SESSION_GAP_S)
     ws = Window.partitionBy("user_id", "sess_id").orderBy("ts", "event_id")
     trans = sess.select(
@@ -1783,7 +1788,7 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     outs = []
     for table, key in SKEW_KEYS:
-        t = _t(spark, sf_dir, table)
+        t = load_table(spark, sf_dir, table)
         c = t.groupBy(key).agg(F.count(F.lit(1)).alias("c"))
         cd = F.col("c").cast("double")
         outs.append(
@@ -1856,7 +1861,7 @@ WAU_DAYS = 7
     "sized. Day grid densified over the span so inactive days report 0.",
 )
 def rolling_7d_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     p = (
         e.select("user_id", F.date_trunc("day", F.col("ts")).alias("day"))
         .distinct()
@@ -1956,7 +1961,7 @@ KANON_COARSE = 50  # one step up the generalization hierarchy
     "output: rows per (event_type, release level).",
 )
 def k_anonymity_release(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     r = e.select(
         "event_type",
         F.date_trunc("day", F.col("ts")).alias("day"),
@@ -2031,7 +2036,7 @@ def k_anonymity_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     "association. Contributions floor-nudged at 1e-6.",
 )
 def chi_square_type_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     c = (
         e.select(
             "event_type",
@@ -2041,7 +2046,7 @@ def chi_square_type_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("event_type", "dow")
         .agg(F.count(F.lit(1)).alias("o"))
-        .persist()  # 35 cells feeding three marginal consumers
+        .transform(cut(eager=False))  # 35 cells feeding three marginal consumers
     )
     tot = c.agg(F.sum("o").cast("double").alias("n"))
     rt = c.groupBy("event_type").agg(F.sum("o").cast("double").alias("r"))
@@ -2113,7 +2118,7 @@ ATTR_WINDOW_H = 24
     "identically in both engines.",
 )
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "view", "purchase")
     )
     w = (
@@ -2206,7 +2211,7 @@ _BOOT_SCALE = float(1 << 60)  # md5 60-bit prefix -> uniform [0,1)
     "offer: bit-reproducibility across engines and runs.",
 )
 def bootstrap_ci_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     u = (
         F.conv(
             F.substring(
@@ -2280,7 +2285,7 @@ def bootstrap_ci_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     "map-side-combine shape, bar cardinality (hours x types) output.",
 )
 def ohlc_hourly_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     key = F.struct(
         F.col("ts"), F.col("event_id").alias("eid"), F.col("value").alias("v")
     )
@@ -2345,7 +2350,7 @@ def ohlc_hourly_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     "irregular-sampling mean.",
 )
 def time_weighted_avg_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     day = F.date_trunc("day", F.col("ts"))
     o = e.select(
@@ -2426,7 +2431,7 @@ PATH_GAP_S = 1800  # same 30-min session gap as events_sessionize
     "TakeOrdered, no global sort of the session table.",
 )
 def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sess = with_session_ids(e, PATH_GAP_S)
     ws = Window.partitionBy("user_id", "sess_id").orderBy("ts", "event_id")
     ranked = sess.withColumn("rn", F.row_number().over(ws)).filter(
@@ -2490,7 +2495,7 @@ def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "uses the same struct-argmax as the OHLC bars.",
 )
 def max_drawdown_hourly_close(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     key = F.struct(
         F.col("ts"), F.col("event_id").alias("eid"), F.col("value").alias("v")
     )
@@ -2589,7 +2594,7 @@ def _frontier(df, part_cols):
     "semantic): identical results by construction.",
 )
 def skyline_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pts = (
         li.select(
             F.col("l_returnflag").alias("rf"),
@@ -2652,7 +2657,7 @@ def _fk_oracle() -> str:
     "small parent key sets broadcast, the two big edges "
     "(lineitem->orders/part) hash-join on the key and AQE handles skew. "
     "At 100 TB each edge is one shuffle, and the audit table is 7 rows. "
-    "scan_sweep note: lineitem/nation appear in 3 edges each — one "
+    "perf_audit rescans note: lineitem/nation appear in 3 edges each — one "
     "COLUMN-PRUNED scan per edge (only the FK column is read), the "
     "documented-acceptable multi-scan shape; caching the fact table "
     "would cost O(data) to save a sliver of I/O. BOTH sides join the "
@@ -2660,12 +2665,11 @@ def _fk_oracle() -> str:
     "audit must tolerate) cannot fan child rows out and skew the counts.",
 )
 def fk_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     outs = []
     for child, fk, parent, pk in _FK_EDGES:
-        c = _t(spark, sf_dir, child).select(F.col(fk).alias("fk_val"))
+        c = load_table(spark, sf_dir, child).select(F.col(fk).alias("fk_val"))
         p = (
-            _t(spark, sf_dir, parent)
+            load_table(spark, sf_dir, parent)
             .select(F.col(pk).alias("pk_val"))
             .distinct()
         )
@@ -2730,7 +2734,7 @@ LDIV_L = 3  # a QI group must see >= L distinct sensitive values to release
     "QI-cell-sized rollup; all-integer output.",
 )
 def l_diversity_release(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     g = (
         e.select(
             "event_type",
@@ -2805,7 +2809,7 @@ def frequent_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the four consumers AND is reference-released by the ContextCleaner
     # when the query's DataFrames go out of scope.
     b = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey")
         .distinct()
         .transform(cut())
@@ -2900,7 +2904,7 @@ def frequent_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
     "type-cardinality table.",
 )
 def welch_t_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     g = e.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("value").alias("s"),
@@ -3007,7 +3011,7 @@ _DENSE_SQL = """
     "as the EWMA/Holt-Winters family.",
 )
 def cusum_changepoint_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dense = _dense_hourly(_t(spark, sf_dir, "events"))
+    dense = _dense_hourly(spark, sf_dir)
     mu = dense.groupBy("event_type").agg(
         F.avg("n").alias("mu"), F.count(F.lit(1)).alias("n_hours")
     )
@@ -3079,7 +3083,7 @@ ACF_MAX_LAG = 24
     "in one shuffle; no per-row window state.",
 )
 def acf_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dense = _dense_hourly(_t(spark, sf_dir, "events"))
+    dense = _dense_hourly(spark, sf_dir)
     mu = dense.groupBy("event_type").agg(F.avg("n").alias("mu"))
     dev = dense.join(F.broadcast(mu), "event_type").select(
         "event_type", "hr", (F.col("n") - F.col("mu")).alias("x")
@@ -3125,7 +3129,7 @@ H2D_QTY_BIN = 5.0
     "(bounded by the value domain, not the data).",
 )
 def histogram2d_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy(
         F.floor(F.col("l_extendedprice") / H2D_PRICE_BIN).cast("long").alias("price_bin"),
         F.floor(F.col("l_quantity") / H2D_QTY_BIN).cast("long").alias("qty_bin"),
@@ -3182,7 +3186,7 @@ def histogram2d_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "end, on identical integers.",
 )
 def gini_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cents = e.select(
         "event_type",
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v"),
@@ -3283,7 +3287,7 @@ def gini_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     "non-normal value distributions.",
 )
 def mann_whitney_u_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cents = e.select(
         "event_type", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v")
     )
@@ -3381,7 +3385,7 @@ def mann_whitney_u_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     "complement to the location tests (Welch t, Mann-Whitney U).",
 )
 def ks_two_sample_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cents = e.select(
         "event_type", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v")
     )
@@ -3478,7 +3482,7 @@ TRIM_FRAC = 0.1  # fraction trimmed/clamped on EACH side
     "events_mad_outliers.",
 )
 def trimmed_winsorized_means(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cents = e.select(
         "event_type", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v")
     )
@@ -3572,7 +3576,7 @@ def trimmed_winsorized_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     "value key.",
 )
 def spearman_pearson_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     rows = li.select(
         F.col("l_quantity").cast("long").alias("x"),
         F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("y"),
@@ -3694,7 +3698,7 @@ def spearman_pearson_price_quantity(spark: SparkSession, sf_dir: str) -> DataFra
     "audit (curve + scalar).",
 )
 def lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cents = e.select(
         "event_type", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v")
     )

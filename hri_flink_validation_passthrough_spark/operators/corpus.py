@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions import floor_nudge
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table
 from .dedup import _shingles_for
 from ..materialize import cut, materialize
 
@@ -53,11 +53,6 @@ _SQL_SHINGLES_5 = """
       FROM t WHERE len(toks) >= 5
     )
 """
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prepare(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _tok(d: DataFrame) -> DataFrame:
@@ -98,7 +93,6 @@ def _tok(d: DataFrame) -> DataFrame:
     "shingle builder so tokenization cannot drift between families.",
 )
 def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     sh = _shingles_for(spark, sf_dir, DECONTAM_N)
     is_eval = (F.col("doc_id") % EVAL_MOD) == EVAL_REM
     ev_grams = (
@@ -153,7 +147,7 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "coverage checks before committing a vocab to a 100 TB run.",
 )
 def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = _tok(d)
     vocab = (
         tok.groupBy("token")
@@ -213,7 +207,7 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window) and a broadcast; nothing global.",
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = _tok(d)
     # tf is the aggregated (doc, token) table reused by THREE consumers
     # (df, n_docs, scoring join) — persisted so the tokenize+explode scan
@@ -285,7 +279,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "before paying for inference.",
 )
 def chunk_overlap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     n = F.size("toks")
     n_chunks = F.when(n <= CHUNK_C, F.lit(1)).otherwise(
@@ -338,7 +332,7 @@ BPE_TOP = 30  # merge candidates kept
     "tiebreak — no float compare surface at all.",
 )
 def bpe_pair_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     n = F.size("toks")
     pairs = F.zip_with(
@@ -408,7 +402,7 @@ PMI_TOP = 25
     "table, which stays broadcastable by Zipf's law (or hash-joins if not).",
 )
 def pmi_cooccurrence_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     t = d.select(toks.alias("toks"))
     n = F.size("toks")
@@ -509,7 +503,7 @@ SPLIT_VAL_PCT = 5  # val occupies [test, test+val)
     "Pure map-side expression + one aggregation.",
 )
 def corpus_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.groupBy("source", split_assignment_col().alias("split")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("long").alias("n_chars"),
@@ -577,7 +571,7 @@ LB_BATCH = 16  # sequences per batch
     "WITHOUT padding) by quantifying what padding costs instead.",
 )
 def length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
     b = d.select(
         F.floor(n_tokens / LB_WIDTH).cast("long").alias("bucket"),
@@ -663,7 +657,7 @@ KL_VOCAB = 100  # shared vocabulary size for the divergence
     "rows regardless of data size; single KL aggregate floor-nudged at 6.",
 )
 def corpus_split_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     b = (
         F.conv(
             F.substring(

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cosine_similarity, fingerprint_md5
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare, session_memo
+from ..session import load_table, session_memo
 from ..materialize import cut, materialize
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -291,7 +291,6 @@ _CAPPED_PAIRS_SQL = """
     "shuffle with map-side partial agg; the canonical first pass at 100 TB.",
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.groupBy(F.md5("text").alias("text_hash")).agg(
         F.min("doc_id").alias("keeper_doc_id"),
@@ -317,7 +316,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "that exact hashing misses.",
 )
 def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.groupBy(fingerprint_md5("text").alias("fp")).agg(
         F.min("doc_id").alias("keeper_doc_id"),
@@ -334,7 +332,6 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "verification path; LSH below is the scale path.",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     return _jaccard_pairs(_shingles_for(spark, sf_dir), 0.5)
 
 
@@ -348,7 +345,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "0.8 ≈ 6e-15, so output equals the brute-force oracle.",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     # _shingles_for repartitions the doc table across all cores BEFORE the
     # expensive projection (a single parquet file arrives as one input
     # partition locally; at 100 TB the scan already has thousands) and
@@ -475,7 +471,6 @@ _DELTA_NUM, _DELTA_DEN = 3, 4
     "verification at 0.8. Oracle = brute-force cross-partition pairs.",
 )
 def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     max_id = (
         load_table(spark, sf_dir, "documents").agg(F.max("doc_id")).collect()[0][0]
     )
@@ -579,7 +574,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 always matches in at least one band (pigeonhole), so recall is exact.
     (r11 self-review: the earlier single 16-bit-prefix blocking silently
     dropped pairs whose differing bits fell in the prefix.)"""
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
@@ -619,7 +613,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recursive-CTE transitive closure over the identically-capped pair set.",
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     pairs = _capped_pairs_for(spark, sf_dir, 0.5).select("doc_a", "doc_b")
     labels = min_label_components(pairs, "doc_a", "doc_b")
     return labels.select(F.col("v").alias("doc_id"), F.col("lbl").alias("cluster_id"))
@@ -740,7 +733,6 @@ def min_label_components(
     "answer a 100 TB pipeline writes back.",
 )
 def dedup_removal_list(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     pairs = _capped_pairs_for(spark, sf_dir, 0.5)
     return pairs.select(F.col("doc_b").alias("removed_doc_id")).distinct()
 
@@ -814,7 +806,6 @@ CONTAIN_TAU = 0.8
     "before ranking per the cross-engine float rule.",
 )
 def dedup_containment_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     s = _shingles_for(spark, sf_dir)
     shared_rare, stats = _capped_shared_rare(s, DF_CAP)
     st_a = stats.select(
@@ -909,7 +900,6 @@ def dedup_containment_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_embedding_srp_lsh below is the bucketed scale path.",
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings").filter(
         # NULL embeddings are unindexable — same rule as similarity._emb
         # (r14 null-corpus sweep)
@@ -1001,7 +991,6 @@ def _srp_band_keys_factory(n_bands: int, n_rows: int):
     "the brute-force oracle.",
 )
 def dedup_embedding_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings").filter(
         # NULL embeddings are unindexable — same rule as similarity._emb
         # (r14 null-corpus sweep)
@@ -1247,7 +1236,6 @@ def dedup_simhash_md5_pairs(s: DataFrame) -> DataFrame:
     "SQL equivalent).",
 )
 def dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     return dedup_simhash_md5_pairs(_shingles_for(spark, sf_dir))
 
 
@@ -1273,7 +1261,6 @@ def dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     "degree-ordered orientation, which the a<b ordering already provides.",
 )
 def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     pairs = _capped_pairs_for(spark, sf_dir, 0.5).select("doc_a", "doc_b")
     e1 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     e2 = pairs.select(F.col("doc_a").alias("b"), F.col("doc_b").alias("c"))
@@ -1325,7 +1312,6 @@ def _pagerank_oracle_sql() -> str:
     "partition edges by u so the join is co-located across iterations.",
 )
 def dedup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     pairs = _capped_pairs_for(spark, sf_dir, 0.5).select("doc_a", "doc_b")
     edges = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
@@ -1381,7 +1367,6 @@ def dedup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "md5 for xxhash64 (same plan, cheaper hash).",
 )
 def dedup_passage_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id", F.split(F.lower("text"), r"\s+").alias("ts")
@@ -1452,7 +1437,6 @@ def dedup_passage_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fraction of the corpus) reach it.",
 )
 def dedup_passage_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id", F.split(F.lower("text"), r"\s+").alias("ts")
@@ -1539,7 +1523,6 @@ TFIDF_TOP = 20
     "Jaccard family.",
 )
 def tfidf_shingle_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     s = _shingles_for(spark, sf_dir)
     e = s.select("doc_id", F.explode("sh").alias("g"))
     n_docs = s.count()  # one scalar (memoized persisted table — cheap)
@@ -1639,7 +1622,6 @@ MH_CAL_PERMS = 64
     "appearing in candidate pairs (output-sized, not corpus-sized).",
 )
 def minhash_calibration_by_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     pairs = _capped_pairs_for(spark, sf_dir, 0.5)
     docs = (
         pairs.select(F.col("doc_a").alias("doc_id"))

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions import floor_nudge
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare, session_memo
+from ..session import load_table, session_memo
 from ..materialize import cut
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -87,7 +87,6 @@ def _mutual_knn_edges(spark: SparkSession, sf_dir: str):
 
 
 def _knn_graph_build(spark: SparkSession, sf_dir: str):
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     a, b = li.alias("a"), li.alias("b")
     c = (

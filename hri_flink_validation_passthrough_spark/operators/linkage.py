@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare, session_memo
+from ..session import load_table, session_memo
 from .corpus import _SQL_SHINGLES_5, EVAL_MOD, EVAL_REM
 from .dedup import _JACCARD_ORACLE, _shingles_for
 from ..materialize import cut
@@ -58,11 +58,6 @@ FUZZY_MIN_LEN = FUZZY_Q * FUZZY_K + FUZZY_Q  # = 6
 BLOOM_BITS = 1 << 16  # m: 65536 bits = 1024 longs = 8 KiB broadcast
 BLOOM_WORDS = BLOOM_BITS // 64
 BLOOM_K = 5  # hash functions
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prepare(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _prefix_index(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
@@ -112,7 +107,6 @@ def _prefix_index(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
     "only rare-token postings, so the candidate join never sees a hot key.",
 )
 def set_similarity_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     s = _shingles_for(spark, sf_dir)  # doc_id, sh (distinct 3-gram shingles)
     prefix = session_memo(
         spark, sf_dir, "documents.parquet", _prefix_index, PREFIX_TAU
@@ -178,7 +172,7 @@ def set_similarity_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "names are a bounded vocabulary at any corpus size.",
 )
 def fuzzy_part_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     nm = (
         p.filter(F.length("p_name") >= FUZZY_MIN_LEN)
         .groupBy(F.col("p_name").alias("name"))
@@ -333,7 +327,6 @@ def _bloom_bitmap(spark: SparkSession, sf_dir: str) -> list[int]:
     "map-side; only the ~0.01% bloom-positive grams reach the shuffle.",
 )
 def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     # Persisted+repartitioned 5-gram stage (shared with corpus decontam):
     # also a plan barrier — see _shingles_for's docstring for the
     # filter-pushdown pathology a bare projection hits here.

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from .. import iofs
 
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table
 from ..materialize import cut
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -303,7 +303,6 @@ _CS_COLS_SPARK = [
     "compare; only mismatched buckets need row-level repair reads.",
 )
 def table_checksum_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey"),
         F.col("o_orderkey").cast("string").alias("ck_orderkey"),

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ..functions import dot as fdot
 from ..functions import py_floor_nudge
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table
 from ..materialize import cut
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -101,7 +101,6 @@ def _snap9(v: float) -> float:
     "the distributed-shallow-trainer shape.",
 )
 def logistic_gd_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     # persisted: every GD step re-reads the (x, y) projection — 16 bytes/row,
     # the standard cache-the-training-set trade (MLlib does the same); the
@@ -268,7 +267,6 @@ def _pca_oracle() -> str:
     "with the top eigenvector.",
 )
 def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     # ONE base scan total: the raw projection is cached, the mean pass and
     # every iteration read the cache, and centering is a cheap in-row
     # zip_with against the literal snapped mean (recomputing 64
@@ -426,7 +424,6 @@ NB_ALPHA = 1  # Laplace smoothing
 def naive_bayes_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks")
     )

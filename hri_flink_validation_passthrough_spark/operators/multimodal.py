@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -246,7 +246,6 @@ def documents_as_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "point), and empty docs yield n_frames=0 on both sides.",
 )
 def multimodal_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     blobs = documents_as_blobs(spark, sf_dir).select("doc_id", "content")
     return extract_features(blobs).select(
         "doc_id", "byte_len", "first_byte", "n_frames"
@@ -269,7 +268,6 @@ def multimodal_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pushdown are the whole point of typed metadata next to blobs).",
 )
 def multimodal_meta_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     blobs = documents_as_blobs(spark, sf_dir)
     return (
         blobs.filter(F.col("meta.size_hint") > 200)
@@ -340,7 +338,6 @@ def sample_frames(blobs: DataFrame) -> DataFrame:
     "shape through mapInPandas with in-batch row explosion (no shuffle).",
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     blobs = (
         documents_as_blobs(spark, sf_dir)
         # byte-exact oracle parity needs chars == bytes; non-ASCII blobs are
@@ -412,7 +409,6 @@ def resize_blobs(blobs: DataFrame, stride: int = RESIZE_STRIDE) -> DataFrame:
     "decode_real. Completes the decode/extract/resize/frame-sample quartet.",
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     blobs = (
         documents_as_blobs(spark, sf_dir)
         .filter(F.col("content").cast("string").rlike("^[\\x00-\\x7F]*$"))

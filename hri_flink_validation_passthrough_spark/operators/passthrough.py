@@ -42,7 +42,7 @@ from ..model import (
     UNKNOWN_BATCH_FAILURE,
 )
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table
 from ..sources.envelope import (
     ROUTED_SCHEMA,
     control_to_envelope,
@@ -519,7 +519,6 @@ def _summarize(routed: DataFrame) -> DataFrame:
     ),
 )
 def passthrough_route(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     e = load_table(spark, sf_dir, "events")
     routed = run_pipeline_batch(events_as_records(e), _derive_control(e))
     return _summarize(routed)
@@ -543,7 +542,6 @@ def passthrough_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def passthrough_unknown_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     e = load_table(spark, sf_dir, "events")
     ctrl = _derive_control(e, exclude=["error"])
     return _summarize(run_pipeline_batch(events_as_records(e), ctrl))
@@ -567,7 +565,6 @@ def passthrough_unknown_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def passthrough_overcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     e = load_table(spark, sf_dir, "events")
     ctrl = _derive_control(e, expected_delta={"click": -5})
     routed = run_pipeline_batch(events_as_records(e), ctrl)
@@ -599,7 +596,6 @@ def passthrough_overcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def passthrough_terminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     e = load_table(spark, sf_dir, "events")
     ctrl = _derive_control(e).unionByName(_view_terminated(e))
     routed = run_pipeline_batch(events_as_records(e), ctrl)

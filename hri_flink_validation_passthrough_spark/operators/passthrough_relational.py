@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..model import COMPLETED, FAILED, SEND_COMPLETED, STARTED, TERMINATED, UNKNOWN_BATCH_FAILURE
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table
 from ..sources.envelope import events_as_records
 from .passthrough import (
     _derive_control,
@@ -270,7 +270,6 @@ def route_records_relational(
 # scenario queries — SAME oracles as the state-machine versions
 # ---------------------------------------------------------------------------
 def _routed_events(spark: SparkSession, sf_dir: str, **ctrl_kw) -> DataFrame:
-    prepare(spark)
     e = load_table(spark, sf_dir, "events")
     recs = events_as_records(e)
     from ..sources.envelope import batch_id_from_headers
@@ -328,7 +327,6 @@ def passthrough_overcount_relational(spark: SparkSession, sf_dir: str) -> DataFr
 def passthrough_terminate_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Terminate via the relational plan (same oracle as the state
     machine's passthrough_terminate)."""
-    prepare(spark)
     e = load_table(spark, sf_dir, "events")
     ctrl = _derive_control(e).unionByName(_view_terminated(e))
     from ..sources.envelope import batch_id_from_headers

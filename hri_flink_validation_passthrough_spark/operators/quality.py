@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -82,7 +82,6 @@ def _toks():
     "embarrassingly-parallel shape a 100 TB quality pass needs.",
 )
 def quality_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = _toks()
     # bigrams as one array expression; distinct-count per bigram via array
@@ -156,7 +155,6 @@ _IP_RE = "\\d+\\.\\d+\\.\\d+\\.\\d+"
     "100 TB this is whole-stage-codegen row work: no shuffle, no Python.",
 )
 def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     wire = F.concat(
         F.col("text"),
@@ -215,7 +213,6 @@ _SQL_BIGRAMS = """
     "below broadcast it.",
 )
 def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     d = d.select("doc_id", _toks().alias("toks")).filter(F.size("toks") >= 2)
     bigrams = F.expr(
@@ -259,7 +256,6 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scan: the only big shuffle in the whole pass is the df aggregation.",
 )
 def boilerplate_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     d = d.select("doc_id", _toks().alias("toks")).filter(F.size("toks") >= 2)
     bigrams = F.expr(
@@ -372,7 +368,6 @@ def _clf_bucket_col(tok):
     "filter runs over 100 TB.",
 )
 def quality_classifier_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     weights = F.array(*[F.lit(w) for w in CLF_WEIGHTS])
     wsum = F.aggregate(

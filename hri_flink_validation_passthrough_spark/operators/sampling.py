@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..functions import fingerprint_md5
 from ..materialize import materialize
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -54,11 +54,6 @@ def _hash_bucket(n: int):
     return h % n
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prepare(spark)
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     QUERIES,
     "sample_hash_10pct",
@@ -71,7 +66,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "across runs/engines, map-side only (no shuffle, no rand()).",
 )
 def sample_hash_10pct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     b = _hash_bucket(100)
     return d.select("doc_id", "source", "n_chars", b.alias("bucket")).filter(
         F.col("bucket") < 10
@@ -96,7 +91,7 @@ def sample_hash_10pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "build needs (same doc always lands in the same split).",
 )
 def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     b = _hash_bucket(100)
     split = (
         F.when(b < 80, F.lit("train")).when(b < 90, F.lit("val")).otherwise(F.lit("test"))
@@ -129,7 +124,7 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "One window shuffle on the stratum key; K bounds output per group.",
 )
 def stratified_sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     order_key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(SAMPLE_SALT)))
     w = Window.partitionBy("source").orderBy(order_key, "doc_id")
     return (
@@ -154,7 +149,7 @@ def stratified_sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "map-side, the shuffle carries only (labels x dims) partials.",
 )
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return (
         e.select(
             "label",
@@ -210,7 +205,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_quality_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import STOPWORDS
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     keeper = F.min("doc_id").over(Window.partitionBy(fingerprint_md5("text")))
     kept = (
         d.withColumn("keeper", keeper)
@@ -285,7 +280,6 @@ PACK_BLOCK = 64
     "(forced-recursion frame-equality pin + naive differential).",
 )
 def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     return pack_token_counts(
@@ -402,7 +396,7 @@ SHUFFLE_SALT = "|shuffle-v1"
     "round-robin at train time, so no global sort ever happens.",
 )
 def corpus_shuffle_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ordh = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(SHUFFLE_SALT)))
     w = Window.partitionBy("shard").orderBy("ord", "doc_id")
     return (
@@ -454,7 +448,7 @@ MIX_BUDGET = 800
     "window (equal by construction).",
 )
 def mixture_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
         "source",
@@ -527,7 +521,7 @@ _WSAMPLE_U = (
     "strictly inside (0,1) so ln(u) is always finite.",
 )
 def weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     u = (
         F.conv(
             F.substring(

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from .. import iofs
 from ..functions import cosine_similarity, floor_nudge, py_floor_nudge
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare, session_memo
+from ..session import load_table, session_memo
 from ..materialize import cut, materialize
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -48,7 +48,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims) from these rows driver-side, where a None is a crash, not a
     rankable candidate (r14 null-corpus sweep). Driver corpora carry no
     NULL vectors, so the rule is invisible to the oracle gate."""
-    prepare(spark)
     return (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("embedding").isNotNull())
@@ -557,7 +556,6 @@ def _first_n_index(
     "the finer grid.",
 )
 def ann_ivf_durable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     return _ivf_index_read_topk(spark, sf_dir, ivf_durable_index(spark, sf_dir))
 
 
@@ -577,7 +575,6 @@ def ann_ivf_durable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scheme must not change a single neighbor.",
 )
 def ann_ivf_objectstore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     path = _first_n_index(
         spark,
         sf_dir,
@@ -661,7 +658,6 @@ def _ivf_index_read_topk(
     "maintenance op (operators/maintenance.py compact_small_files).",
 )
 def ann_ivf_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     return _ivf_index_read_topk(spark, sf_dir, ivf_upsert_index(spark, sf_dir))
 
 
@@ -1336,7 +1332,6 @@ def _trained_ivf_oracle(
     "as kmeans_lloyd_convergence) and runs the standard IVF tail.",
 )
 def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     path = ivf_trained_index(spark, sf_dir)
     meta = read_index_meta(path)
     probes = _probes_from_centroids(spark, sf_dir, meta["centroids"])
@@ -1413,7 +1408,6 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     def tf_col(w: str):
@@ -2442,7 +2436,6 @@ def _ivfpq_shortlist_rerank(
     "session.",
 )
 def ann_ivfpq_durable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     path = ivfpq_durable_index(spark, sf_dir)
     _, probes = _ivf_assign_probes(spark, sf_dir, nlist=DNLIST)
     probed = sorted(
@@ -2615,7 +2608,6 @@ def ann_ivfpq_trained_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     twin of ann_ivfpq_durable_topk; shares the probe policy with
     stream_ivfpq_maintenance so the {batch, stream} codes-only cells stay
     row-for-row comparable."""
-    prepare(spark)
     path = ivfpq_trained_upsert_index(spark, sf_dir)
     meta = read_index_meta(path)
     probes = _maintained_probes(spark, sf_dir, meta)
@@ -2797,7 +2789,6 @@ HN_K = 3  # positives / hard negatives kept per query
     "not the full corpus.",
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     v = load_table(spark, sf_dir, "embeddings").filter(
         # NULL embeddings are unindexable — same rule as similarity._emb
         # (r14 null-corpus sweep)

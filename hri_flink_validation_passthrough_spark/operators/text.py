@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions import fingerprint_md5
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table
 from ..materialize import cut, materialize
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -63,7 +63,6 @@ def _tokens_col():
     doc="Per-document token/punctuation/stopword metrics (quality signals).",
 )
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = _tokens_col()
     stops_arr = F.array(*[F.lit(w) for w in STOPWORDS])
@@ -128,7 +127,6 @@ def quality_score_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered aggregate reports — single-sourced so pipeline stages
     filtering on quality (tests/test_corpus_pipeline_e2e.py) rank by the
     SAME unrounded number, never a re-implementation that drifts."""
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = _tokens_col()
     stops_arr = F.array(*[F.lit(w) for w in STOPWORDS])
@@ -184,7 +182,6 @@ def _lang_case_sql() -> str:
     "argmax with fixed precedence.",
 )
 def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = _tokens_col()
 
@@ -219,7 +216,6 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     "question every training pipeline asks).",
 )
 def token_count_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.groupBy("source").agg(
         F.sum(F.size(_tokens_col())).cast("long").alias("total_tokens"),
@@ -242,7 +238,6 @@ def token_count_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(lowercase, alnum-only, squeezed whitespace).",
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", fingerprint_md5("text").alias("fingerprint"))
 
@@ -268,7 +263,6 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cheap pre-filter fingerprint computable identically in any engine.",
 )
 def rolling_hash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = _tokens_col()
     per_tok = F.transform(
@@ -310,7 +304,6 @@ def rolling_hash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast-joined, exactly this plan with the count table materialized.",
 )
 def lm_trigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     t = F.lower(F.trim(F.col("text")))
     docs = d.select("doc_id", t.alias("t")).filter(F.length("t") >= 3)
@@ -384,7 +377,6 @@ BPE_PATTERN = "[a-z]+|[0-9]|[^a-z0-9\\s]+"
     "regexp_extract_all is JVM-side (codegen); one partial-agg groupBy.",
 )
 def token_count_bpe_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     bpe = F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_PATTERN), F.lit(0)))
     ws = F.size(_tokens_col())
@@ -460,7 +452,6 @@ def _cms_bucket(i_col, tok_col):
     "nature).",
 )
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     exact = (
         d.select(F.explode(_tokens_col()).alias("tok"))
@@ -531,7 +522,6 @@ PHRASE = ("table", "hash")  # present at every SF in the synthetic corpus
     "longer phrases chain one join per extra term.",
 )
 def inverted_index_phrase_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     postings = (
         d.select("doc_id", F.posexplode(_tokens_col()).alias("pos", "term"))
@@ -627,7 +617,6 @@ def _letter_counts(txt: pd.Series) -> pd.Series:
     "before ordering (cross-engine ln drift ~1 ulp) with doc_id tiebreak.",
 )
 def char_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     counts_udf = F.pandas_udf(_letter_counts, "array<long>")
     t = d.select("doc_id", counts_udf(F.lower("text")).alias("c"))
@@ -695,7 +684,6 @@ ZIPF_TOP = 1000
     "aggregate over those rows.",
 )
 def zipf_token_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     d = load_table(spark, sf_dir, "documents")
     counts = (
         d.select(F.explode(_tokens_col()).alias("w"))

@@ -6,14 +6,21 @@ tables. The driver hash-compares the two at sf0.01 (order-insensitive, columns
 sorted by name) — so every computed column is aliased identically on both
 sides, doubles are rounded identically on both sides, and timestamps are
 emitted as formatted strings to sidestep tz/precision representation drift.
+
+One query entry: the callable ``register`` stores, and the name it returns,
+runs ``session.prepare(spark)`` once and then the body, so a registered query
+runs on a tuned session whoever built it, a vanilla one included.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import prepare
 
 
 @dataclass(frozen=True)
@@ -28,7 +35,12 @@ def register(registry: dict[str, QuerySpec], name: str, oracle: str | None, doc:
     """Decorator: add a query function to a module registry."""
 
     def deco(fn):
-        registry[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
+        @functools.wraps(fn)
+        def query(spark, *args, **kwargs):
+            prepare(spark)
+            return fn(spark, *args, **kwargs)
+
+        registry[name] = QuerySpec(fn=query, oracle=oracle, doc=doc)
+        return query
 
     return deco

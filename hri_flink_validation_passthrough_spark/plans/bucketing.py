@@ -24,7 +24,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table, prepare, source_fingerprint
+from ..session import (
+    load_table,
+    normalize_timestamps,
+    raw_schema,
+    scoped_conf,
+    source_fingerprint,
+)
 from . import QuerySpec, register
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -79,7 +85,6 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     lt, ot = f"lineitem_{tag}", f"orders_{tag}"
     if not spark.catalog.tableExists(lt):
         base = tempfile.mkdtemp(prefix=f"bucketed_{uuid.uuid4().hex[:6]}_")
-        prepare(spark)
         (
             load_table(spark, sf_dir, "lineitem")
             .write.mode("overwrite")
@@ -138,7 +143,6 @@ def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"events_{tag}"
     if not spark.catalog.tableExists(name):
         base = tempfile.mkdtemp(prefix=f"partitioned_{uuid.uuid4().hex[:6]}_")
-        prepare(spark)
         (
             load_table(spark, sf_dir, "events")
             .write.mode("overwrite")
@@ -199,7 +203,6 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregates raw directly, proving the decomposition is lossless.",
 )
 def rollup_daily_to_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         F.date_trunc("day", F.col("ts")).alias("day"), "event_type"
@@ -274,7 +277,6 @@ def zordered_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"events_{tag}"
     if not spark.catalog.tableExists(name):
         base = tempfile.mkdtemp(prefix=f"zorder_{uuid.uuid4().hex[:6]}_")
-        prepare(spark)
         e = load_table(spark, sf_dir, "events")
         e = e.withColumn("ub", (F.col("user_id") % 256).cast("int")).withColumn(
             "vb", F.least(F.floor("value"), F.lit(255)).cast("int")
@@ -411,24 +413,14 @@ def dpp_event_tier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "returned DataFrame keeps the bloom-filtered shape.",
 )
 def bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        )
-    }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "0",
-        )
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10GB"
-        )
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10GB",
+        },
+    ):
         l = load_table(spark, sf_dir, "lineitem")
         o = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -446,9 +438,6 @@ def bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pin the plan (QueryExecution caches) while the confs are in force
         df._jdf.queryExecution().executedPlan()
         return df
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
 
 
 # --- Incremental materialized-view maintenance: merge delta partials into a
@@ -466,7 +455,6 @@ def materialized_daily_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"daily_mv_{tag}"
     if not spark.catalog.tableExists(name):
         base = tempfile.mkdtemp(prefix=f"dailymv_{uuid.uuid4().hex[:6]}_")
-        prepare(spark)
         (
             load_table(spark, sf_dir, "events")
             .filter(F.col("ts") < F.lit(MV_CUTOFF).cast("timestamp"))
@@ -508,27 +496,23 @@ def materialized_daily_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rollup_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv = materialized_daily_mv(spark, sf_dir)
-    prepare(spark)
     # Filter the delta in the STORAGE type's domain so the predicate reaches
     # the parquet scan: driver events.ts is TIMESTAMP(NANOS) surfaced as a
     # nanos LONG (see session.load_table) — a filter on the converted
     # timestamp expression is not pushable, a bigint comparison is. The
     # cutoff is a whole second, so nanos-domain and micros-domain cuts agree.
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    schema = raw_schema(spark, sf_dir, "events")
+    raw = spark.read.schema(schema).parquet(f"{sf_dir}/events.parquet")
     if dict(raw.dtypes)["ts"] == "bigint":
         cutoff_ns = int(
             datetime.datetime.strptime(MV_CUTOFF, "%Y-%m-%d %H:%M:%S")
             .replace(tzinfo=datetime.timezone.utc)
             .timestamp()
         ) * 1_000_000_000
-        raw = raw.filter(F.col("ts") >= F.lit(cutoff_ns)).withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
+        raw = raw.filter(F.col("ts") >= F.lit(cutoff_ns))
     else:
         raw = raw.filter(F.col("ts") >= F.lit(MV_CUTOFF).cast("timestamp"))
-        if dict(raw.dtypes)["ts"] == "timestamp_ntz":
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    delta = raw.groupBy(
+    delta = normalize_timestamps(raw).groupBy(
         F.date_trunc("day", F.col("ts")).alias("day"), "event_type"
     ).agg(
         F.count(F.lit(1)).alias("n"),
@@ -601,11 +585,9 @@ def zonemap_manifest(
         # scope contract in iofs module docstring).
         base = tempfile.mkdtemp(prefix=f"zonemap_{uuid.uuid4().hex[:6]}_")
         data_dir = f"{base}/lineitem_clustered"
-        prepare(spark)
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev = spark.conf.get(ts_conf, None)
-        spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-        try:
+        with scoped_conf(
+            spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+        ):
             (
                 load_table(spark, sf_dir, "lineitem")
                 .repartitionByRange(ZM_FILES, "l_shipdate")
@@ -613,11 +595,6 @@ def zonemap_manifest(
                 .write.mode("overwrite")
                 .parquet(data_dir)
             )
-        finally:
-            if prev is None:
-                spark.conf.unset(ts_conf)
-            else:
-                spark.conf.set(ts_conf, prev)
         manifest: list[dict] = []
         for path in sorted(globmod.glob(f"{data_dir}/part-*.parquet")):
             md = pq.ParquetFile(path).metadata

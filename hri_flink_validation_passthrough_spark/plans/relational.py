@@ -22,16 +22,11 @@ from pyspark.sql import functions as F
 
 from ..functions import with_session_ids
 from ..operators.asof import asof_join
-from ..session import load_table, prepare
+from ..session import load_table
 from . import QuerySpec, register
 from ..materialize import cut
 
 QUERIES: dict[str, QuerySpec] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prepare(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _fmt_ts(col):
@@ -61,7 +56,7 @@ def _fmt_ts(col):
     doc="TPC-H Q1 shape: scan + filter + 8-agg groupBy (partial+final agg).",
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         l.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -100,11 +95,13 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q3 shape: 3-way join + agg + deterministic top-k.",
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
     )
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
     )
     return (
@@ -143,15 +140,15 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q5 shape: 6-way join, dims broadcast, local-supplier predicate.",
 )
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").filter(
+    r = load_table(spark, sf_dir, "region")
+    n = load_table(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         # nation/region are true bounded dims → keep the broadcast hint.
         # customer/supplier grow with SF → no hint; the optimizer broadcasts
@@ -188,7 +185,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q6 shape: pure scan-side predicates (pushdown showcase) + global agg.",
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -227,13 +224,13 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q10 shape: returned-item revenue by customer, top-20.",
 )
 def q10_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)  # optimizer-chosen strategy (see q3)
@@ -268,7 +265,7 @@ def q10_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Ranking window: top-3 orders per customer (one shuffle on o_custkey).",
 )
 def top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         o.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -295,7 +292,7 @@ def top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Hierarchical rollup with NULL grouping markers (matches SQL ROLLUP).",
 )
 def rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return l.rollup("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         F.count(F.lit(1)).alias("n"),
@@ -315,7 +312,7 @@ def rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="CUBE over two low-cardinality dims.",
 )
 def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
         F.count(F.lit(1)).alias("n"),
@@ -336,7 +333,7 @@ def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Pivot: order counts by priority × status.",
 )
 def pivot_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     p = (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -361,8 +358,10 @@ def pivot_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Left-semi join (EXISTS).",
 )
 def semi_customers_with_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
 
 
@@ -378,8 +377,8 @@ def semi_customers_with_urgent_orders(spark: SparkSession, sf_dir: str) -> DataF
     doc="Left-anti join (NOT EXISTS).",
 )
 def anti_customers_no_recent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
     )
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
@@ -400,7 +399,7 @@ def anti_customers_no_recent_orders(spark: SparkSession, sf_dir: str) -> DataFra
     doc="Set difference: customers active in 1995 but not 1996.",
 )
 def except_lapsed_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
 
     def year(y: int) -> DataFrame:
         return (
@@ -430,7 +429,7 @@ def except_lapsed_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Set intersection: customers active in both 1995 and 1996.",
 )
 def intersect_repeat_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
 
     def year(y: int) -> DataFrame:
         return (
@@ -459,7 +458,7 @@ def intersect_repeat_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Distinct aggregation per key (expand + two-phase agg in Spark).",
 )
 def supplier_part_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return l.groupBy("l_suppkey").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.count(F.lit(1)).alias("n_items"),
@@ -482,7 +481,7 @@ def supplier_part_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Scalar funcs + agg over the part dimension.",
 )
 def part_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.groupBy("p_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.avg("p_retailprice"), 4).alias("avg_price"),
@@ -509,7 +508,7 @@ def part_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Tumbling 1h window aggregation (batch form of the streaming window).",
 )
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(
             _fmt_ts(F.date_trunc("hour", F.col("ts"))).alias("hour_ts"), "event_type"
@@ -549,7 +548,7 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Sessionization: 30-min inactivity gap via lag + running sum (no UDF).",
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sess = with_session_ids(e, 1800)
     return sess.groupBy("user_id", "sess_id").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -575,7 +574,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Top-k heavy hitters (TakeOrderedAndProject, no global sort).",
 )
 def events_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("user_id")
         .agg(
@@ -607,7 +606,7 @@ def events_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def range_join_event_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.rangejoin import range_join
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     a = e.select(
         F.col("event_id").alias("event_a"),
         F.col("user_id"),
@@ -640,11 +639,11 @@ def range_join_event_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q4 shape: EXISTS-semi-join feeding an aggregation.",
 )
 def q4_priority_with_late_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     late = l.join(
         o.select("o_orderkey", "o_orderdate"), l.l_orderkey == F.col("o_orderkey")
     ).filter(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
@@ -668,8 +667,8 @@ def q4_priority_with_late_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q18 shape: join + aggregation + HAVING on the aggregate.",
 )
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .groupBy(
@@ -703,8 +702,8 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q22 shape: scalar subquery threshold + NOT EXISTS anti-join.",
 )
 def q22_wealthy_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp")
     )
     threshold = (
@@ -742,7 +741,7 @@ def q22_wealthy_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFram
     ),
 )
 def events_topk_users_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     salted = e.withColumn("salt", F.pmod(F.hash("event_id"), F.lit(16)))
     partial = salted.groupBy("user_id", "salt").agg(
         F.count(F.lit(1)).alias("pn"),
@@ -771,7 +770,7 @@ def sketch_cardinalities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate sketches for 100 TB-scale profiling: HyperLogLog
     distinct counts and approx percentiles (sub-1% error, constant
     memory). Exact twins: supplier_part_stats / percentile_events."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
         F.approx_count_distinct("user_id").alias("approx_users"),
         F.approx_count_distinct("event_id").alias("approx_events"),
@@ -803,10 +802,10 @@ def sketch_cardinalities(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def asof_latest_order_per_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select(F.col("event_id"), F.col("user_id").alias("k"), F.col("ts").alias("t"))
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("k"),
         F.col("o_orderdate").alias("t"),
         F.col("o_orderkey").alias("asof_orderkey"),
@@ -842,7 +841,7 @@ def asof_latest_order_per_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and AQE broadcasts it onto the hourly aggregate.",
 )
 def events_gap_filled_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
     ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -897,8 +896,8 @@ def events_gap_filled_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_salts = 16
-    e = _t(spark, sf_dir, "events")
-    c = _t(spark, sf_dir, "customer")
+    e = load_table(spark, sf_dir, "events")
+    c = load_table(spark, sf_dir, "customer")
     fact = e.select(
         F.when(F.col("user_id") < 30, F.lit(0))
         .otherwise(F.col("user_id"))
@@ -957,7 +956,7 @@ def skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lake formats implement exactly this under MERGE INTO.",
 )
 def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir, "orders").select(
+    t = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     upd = t.filter(F.col("o_orderkey") % 10 == 0).select(
@@ -1008,7 +1007,7 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "global aggregate — the standard product-analytics funnel at any scale.",
 )
 def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     stage = e.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
         F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),
@@ -1058,7 +1057,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "state carried, one row per user.",
 )
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     first_seen = e.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
     )
@@ -1098,7 +1097,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per partition via Spark's sliding-frame aggregation.",
 )
 def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sec = F.col("ts").cast("long")
     w = Window.partitionBy("user_id").orderBy(sec).rangeBetween(-3600, 0)
     return e.select(
@@ -1128,7 +1127,7 @@ def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a handful of types + a map-side broadcast join — no second shuffle.",
 )
 def events_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     stats = e.groupBy("event_type").agg(
         F.avg("value").alias("mu"), F.stddev_samp("value").alias("sigma")
     )
@@ -1198,7 +1197,6 @@ def _closure_rounds(max_key: int) -> int:
     "closure.",
 )
 def transitive_closure_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer").select("c_custkey")
     # The ancestor map is built over the FULL integer key range, not just
     # the customer rows: the parent function is arithmetic, so a chain may
@@ -1300,7 +1298,6 @@ def transitive_closure_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ones.",
 )
 def scd2_user_state_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changes = (
@@ -1374,7 +1371,6 @@ _SCD2_STATE_SQL = ", ".join(f"'{t}'" for t in SCD2_STATE_TYPES)
     "for the dense-interval case).",
 )
 def scd2_temporal_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     e = load_table(spark, sf_dir, "events")
     chg = (
         e.filter(F.col("event_type").isin(*SCD2_STATE_TYPES))
@@ -1436,10 +1432,10 @@ def scd2_temporal_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def asof_next_order_within_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         F.col("event_id"), F.col("user_id").alias("k"), F.col("ts").alias("t")
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("k"),
         F.col("o_orderdate").alias("t"),
         F.col("o_orderkey").alias("next_orderkey"),

@@ -14,15 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import floor_nudge
-from ..session import load_table, prepare
+from ..session import load_table
 from . import QuerySpec, register
 
 QUERIES: dict[str, QuerySpec] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prepare(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -39,7 +34,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     doc="Explicit GROUPING SETS (finer than rollup/cube).",
 )
 def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
@@ -70,7 +65,7 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="JSON scalar extraction over the events.props column.",
 )
 def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return e.groupBy("event_type").agg(
         F.sum(k).cast("long").alias("sum_k"),
@@ -96,7 +91,7 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="String scalar functions incl. levenshtein (identical in both engines).",
 )
 def string_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.upper("p_name").alias("name_upper"),
@@ -124,7 +119,7 @@ def string_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Date part extraction + monthly aggregation.",
 )
 def date_functions_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy(
             F.year("o_orderdate").cast("long").alias("yr"),
@@ -155,7 +150,7 @@ def date_functions_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Math scalar functions over aggregates.",
 )
 def math_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return l.groupBy("l_returnflag").agg(
         F.round(F.sqrt(F.sum("l_quantity")), 6).alias("sqrt_qty"),
         F.round(F.log(F.sum("l_extendedprice")), 6).alias("ln_price"),
@@ -185,7 +180,7 @@ def math_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Unpivot (wide→long) via the native unpivot operator; oracle UNION ALL.",
 )
 def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     agg = l.groupBy("l_returnflag").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
@@ -218,9 +213,8 @@ def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t in (text or "").strip().lower().split():
                 yield (t,)
 
-    prepare(spark)
     spark.udtf.register("tokenize_udtf", Tokenize)
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     d.createOrReplaceTempView("docs_udtf")
     return spark.sql(
         "SELECT doc_id, token FROM docs_udtf, LATERAL tokenize_udtf(text)"
@@ -244,7 +238,7 @@ def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sorts columns pre-hash and cannot hash ndarray cells.",
 )
 def array_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     statuses = F.sort_array(F.collect_set("l_linestatus"))
     return l.groupBy("l_returnflag").agg(
         F.array_join(statuses, ",").alias("statuses"),
@@ -269,7 +263,7 @@ def array_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scale; the exact form is the oracle-checkable one.",
 )
 def percentile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
         F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
         F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"),
@@ -293,7 +287,7 @@ def percentile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="CASE bucketing histogram.",
 )
 def case_when_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     bucket = (
         F.when(F.col("value") < 10, "lo")
         .when(F.col("value") < 100, "mid")
@@ -340,7 +334,7 @@ def udaf_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     median_udaf = F.pandas_udf(_median, "double")
     count_udaf = F.pandas_udf(_n, "long")
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
         count_udaf("value").alias("n"),
         F.round(median_udaf("value"), 6).alias("med"),
@@ -367,7 +361,7 @@ def udaf_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     "value-checked end to end.",
 )
 def corrupt_record_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     wire = F.to_json(F.struct("event_id", "event_type", "value"))
     # deterministically corrupt ~6% of payloads: drop the closing half
     corrupted = F.when(
@@ -418,10 +412,9 @@ def corrupt_record_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cogroup_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    prepare(spark)
-    e = _t(spark, sf_dir, "events").select("user_id", "value")
+    e = load_table(spark, sf_dir, "events").select("user_id", "value")
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") <= 1000)
         .select(F.col("o_custkey").alias("user_id"))
     )
@@ -474,7 +467,7 @@ def cogroup_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "compare (cross-engine MAP representations don't hash stably).",
 )
 def map_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     per_type = e.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -568,7 +561,7 @@ def map_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_navigation_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     wrun = w.rowsBetween(Window.unboundedPreceding, 0)
     nudge = lambda c: floor_nudge(c, 6)
@@ -620,11 +613,11 @@ def window_navigation_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     "deviating from ANSI breaks the hash.",
 )
 def null_semantics_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.nullif("o_orderstatus", F.lit("P")).alias("st"), "o_custkey"
     )
     o.createOrReplaceTempView("o_null_demo")
-    n = _t(spark, sf_dir, "nation").select(
+    n = load_table(spark, sf_dir, "nation").select(
         F.nullif("n_regionkey", F.lit(0)).alias("rk")
     )
     a, b = n.alias("a"), n.alias("b")
@@ -632,7 +625,7 @@ def null_semantics_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, F.col("a.rk").eqNullSafe(F.col("b.rk"))).count()
     )
     fkeys = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select(F.col("o_custkey").alias("k"))
         .unionByName(

@@ -26,15 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table, prepare
+from ..session import load_table
 from . import QuerySpec, register
 
 QUERIES: dict[str, QuerySpec] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prepare(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _revenue():
@@ -66,11 +61,11 @@ def _revenue():
     "price stands in for ps_supplycost; no partsupp in TESTDATA.md).",
 )
 def q2_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size") == 15)
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_size") == 15)
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     offers = (
         l.join(p, l.l_partkey == p.p_partkey)
         .join(s, l.l_suppkey == s.s_suppkey)
@@ -130,12 +125,12 @@ def q2_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle on their keys with AQE skew handling.",
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n1 = _t(spark, sf_dir, "nation").alias("n1")
-    n2 = _t(spark, sf_dir, "nation").alias("n2")
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n1 = load_table(spark, sf_dir, "nation").alias("n1")
+    n2 = load_table(spark, sf_dir, "nation").alias("n2")
     pair = (F.col("n1.n_name") == "NATION_1") & (F.col("n2.n_name") == "NATION_2")
     rev_pair = (F.col("n1.n_name") == "NATION_2") & (F.col("n2.n_name") == "NATION_1")
     return (
@@ -180,14 +175,14 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(one nation's volume over all volume per order year).",
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n1 = _t(spark, sf_dir, "nation").alias("n1")
-    n2 = _t(spark, sf_dir, "nation").alias("n2")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n1 = load_table(spark, sf_dir, "nation").alias("n1")
+    n2 = load_table(spark, sf_dir, "nation").alias("n2")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     base = (
         l.join(p, l.l_partkey == p.p_partkey)
         .join(s, l.l_suppkey == s.s_suppkey)
@@ -228,11 +223,11 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ps_supplycost; no partsupp in TESTDATA.md).",
 )
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    n = load_table(spark, sf_dir, "nation")
     profit = _revenue() - 0.5 * F.col("p_retailprice") * F.col("l_quantity")
     return (
         l.join(p, l.l_partkey == p.p_partkey)
@@ -268,9 +263,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "total is broadcast-joined, not recomputed per group.",
 )
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
     natl = (
         l.join(s, l.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -304,8 +299,8 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "count). count(o_orderkey) counts only matched rows — null-safe.",
 )
 def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     per_cust = (
         c.join(
             o,
@@ -335,11 +330,11 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over unconditional aggregate, single-row output).",
 )
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1998-03-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-04-01").cast("timestamp"))
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     promo = F.sum(F.when(F.col("p_type") == "PROMO", _revenue()).otherwise(F.lit(0.0)))
     return (
         l.join(p, l.l_partkey == p.p_partkey)
@@ -369,11 +364,11 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "max-compare is drift-free). Spark: 1-row max broadcast-joined.",
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1999-04-01").cast("timestamp"))
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     revenue = l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         F.round(F.sum(_revenue()), 2).alias("total_revenue")
     )
@@ -406,13 +401,13 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "link (no partsupp in TESTDATA.md).",
 )
 def q16_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#5")
         & (F.col("p_type") != "PROMO")
         & F.col("p_size").isin(1, 9, 19, 23, 36, 45, 49, 3)
     )
-    excluded = _t(spark, sf_dir, "supplier").filter(
+    excluded = load_table(spark, sf_dir, "supplier").filter(
         F.col("s_name").like("%7")
     ).select("s_suppkey")
     return (
@@ -439,8 +434,8 @@ def q16_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(AQE broadcasts the small aggregate side), then the brand filter.",
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#13")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#13")
     per_part = l.groupBy(F.col("l_partkey").alias("pk")).agg(
         (F.lit(0.2) * F.avg("l_quantity")).alias("qty_threshold")
     )
@@ -471,8 +466,8 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "p_partkey equi-condition and keeps the residual disjunction).",
 )
 def q19_ored_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     j = l.join(p, l.l_partkey == p.p_partkey)
     q = F.col("l_quantity")
     sz = F.col("p_size")
@@ -507,13 +502,13 @@ def q19_ored_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ps_availqty).",
 )
 def q20_part_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("2000-01-01").cast("timestamp"))
     )
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("red%"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("red%"))
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     movers = (
         l.join(p, l.l_partkey == p.p_partkey)
         .groupBy("l_suppkey")
@@ -551,11 +546,11 @@ def q20_part_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "missing commit/receipt dates).",
 )
 def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "supplier")
-    l1 = _t(spark, sf_dir, "lineitem").alias("l1")
-    l2 = _t(spark, sf_dir, "lineitem").alias("l2")
-    l3 = _t(spark, sf_dir, "lineitem").alias("l3")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    s = load_table(spark, sf_dir, "supplier")
+    l1 = load_table(spark, sf_dir, "lineitem").alias("l1")
+    l2 = load_table(spark, sf_dir, "lineitem").alias("l2")
+    l3 = load_table(spark, sf_dir, "lineitem").alias("l3")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     waiting = (
         l1.join(
             l2,
@@ -606,8 +601,8 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     "query-shape set (Q1-Q22) adapted to TESTDATA.md's trimmed schema.",
 )
 def q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     joined = l.join(o, l.l_orderkey == o.o_orderkey).filter(
         (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS"))

@@ -7,6 +7,12 @@ Two entry points:
   a session we did not create (the driver passes us its own session). Only
   ``spark.sql.*`` runtime confs are touched; never the master or memory.
 
+Only ``build_session``, ``register_views`` and the query entry
+(``plans.register``: every registered query prepares once per call) call
+``prepare``. Library functions outside the registry (memo and index builders,
+``run_pipeline_batch``, ``build_routed_stream``) expect a session one of them
+tuned; tests, tools and benchmarks get theirs from ``build_session()``.
+
 Scale posture (100 TB, ~1000 executors): everything here is either
 runtime-settable or per-job. ``prepare()`` sizes stream state to the cores
 (one wave) and starts batch shuffles at >= 8 for AQE to coalesce; adaptive
@@ -41,6 +47,7 @@ refuses a second active run of the same query.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from itertools import count as _itercount
@@ -147,6 +154,23 @@ def prepare(spark: SparkSession) -> SparkSession:
     return spark
 
 
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set *confs* on the session for the ``with`` block, then restore each
+    key's previous value; a key that was unset before is unset again."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def build_session(
     app_name: str = "hri_spark",
     cpus: int | None = None,
@@ -238,26 +262,27 @@ def session_memo(spark: SparkSession, sf_dir: str, source: str, build, *params):
 
 
 def _parquet_schema(spark: SparkSession, sf_dir: str, name: str):
-    """Inferred schema of one table. Memoized because a bare
-    ``spark.read.parquet`` runs a footer-inference job on EVERY call
-    (measured 0.16-0.37 s warm per table vs 0.027 s with the schema
-    supplied), and the repo's queries call load_table 1-3x per invocation.
-    The applicationId in the memo key keeps sessions with different reader
-    confs (e.g. a driver session where ``nanosAsLong`` could not be
-    applied) from sharing inference results."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver-generated parquet table (TESTDATA.md).
+def raw_schema(spark: SparkSession, sf_dir: str, name: str):
+    """Inferred parquet schema of one table, before ``normalize_timestamps``.
+    Memoized because a bare ``spark.read.parquet`` runs a footer-inference
+    job on EVERY call (measured 0.16-0.37 s warm per table vs 0.027 s with
+    the schema supplied). The applicationId in the memo key keeps sessions
+    with different reader confs (e.g. one where ``nanosAsLong`` could not be
+    applied) from sharing inference results."""
+    return session_memo(spark, sf_dir, f"{name}.parquet", _parquet_schema, name)
+
+
+def normalize_timestamps(df: DataFrame) -> DataFrame:
+    """The one timestamp normalization of a source table, batch or stream.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS); with ``nanosAsLong`` Spark
     surfaces it as nanos-since-epoch LONG. Convert with *integer* division
     (``div``) to microseconds — matching DuckDB's truncating nanos→micros
     read; float division would round and drift by 1µs.
     """
-    schema = session_memo(spark, sf_dir, f"{name}.parquet", _parquet_schema, name)
-    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
     for f in df.schema.fields:
         if f.name == "ts" and f.dataType.simpleString() == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -266,6 +291,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
             # reinterpretation matching the DuckDB oracle's naive reads.
             df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str):
+    """Read one driver-generated parquet table (TESTDATA.md)."""
+    reader = spark.read.schema(raw_schema(spark, sf_dir, name))
+    return normalize_timestamps(reader.parquet(f"{sf_dir}/{name}.parquet"))
 
 
 TABLES = (

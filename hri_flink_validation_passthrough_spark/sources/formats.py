@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import QuerySpec, register
-from ..session import load_table, prepare
+from ..session import load_table
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -57,7 +57,6 @@ _ROUNDTRIPS = [
     "parquet, so equality proves the round-trip is lossless.",
 )
 def file_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     base = tempfile.mkdtemp(prefix="fmt_roundtrip_")
     out: DataFrame | None = None
     for fmt, table, key, name in _ROUNDTRIPS:

@@ -44,7 +44,6 @@ from pyspark.sql.datasource import (
 )
 
 from ..plans import QuerySpec, register
-from ..session import prepare
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -195,7 +194,6 @@ def _envelope_summary(df: DataFrame, with_distinct: bool = True) -> DataFrame:
     "lacks built-in.",
 )
 def custom_source_batch_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     _register_ds(spark)
     df = spark.read.format("hri_envelope").option("n", str(PYDS_N)).load()
     return _envelope_summary(df)
@@ -216,7 +214,6 @@ def custom_source_batch_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 def custom_source_stream_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import _run_to_table
 
-    prepare(spark)
     _register_ds(spark)
     stream = spark.readStream.format("hri_envelope").option("n", str(PYDS_N)).load()
     # default micro-batch trigger until every record is in: availableNow

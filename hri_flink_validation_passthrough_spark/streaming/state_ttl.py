@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import QuerySpec, register
-from ..session import prepare
+from ..session import load_table
 from .windows import _events_stream, _run_to_table
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -282,9 +282,6 @@ def _events_keyed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "session accounting; state is O(live keys), not O(stream).",
 )
 def stream_state_ttl_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
-    from ..session import load_table
-
     # expected flush count from the BATCH table, not the constant: a scale
     # factor whose user ids miss a residue class must not hang the wait
     n_keys = (
@@ -340,9 +337,6 @@ def stream_state_ttl_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the batch row_number() top-k.",
 )
 def stream_windowed_topk_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
-    from ..session import load_table
-
     # expected flush rows = sum over keys of min(n_rows, K): a key with
     # fewer than K events flushes fewer rows and must not hang the wait
     n_expected = (
@@ -453,9 +447,6 @@ def build_user_activity_stream(keyed: DataFrame, ttl_ms: int = TTL_MS) -> DataFr
     "two-level batch GROUP BY.",
 )
 def stream_user_activity_mapstate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
-    from ..session import load_table
-
     n_keys = (
         load_table(spark, sf_dir, "events")
         .select((F.col("user_id") % N_BUCKETS).alias("b"))

@@ -27,7 +27,6 @@ replays a finite table; in production these run in append mode with
 
 from __future__ import annotations
 
-import contextlib
 import time
 import uuid
 
@@ -37,7 +36,13 @@ from pyspark.sql import functions as F
 from .. import iofs
 from ..operators.text import HLL_ORACLE, QSK_BIN_CENTS, QSK_ORACLE, QSK_QS
 from ..plans import QuerySpec, register
-from ..session import prepare, session_memo
+from ..session import (
+    load_table,
+    normalize_timestamps,
+    raw_schema,
+    scoped_conf,
+    session_memo,
+)
 from ..materialize import cut
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -52,52 +57,27 @@ QUERIES: dict[str, QuerySpec] = {}
 _STATE_PARTITIONS = 8
 
 
-@contextlib.contextmanager
 def _pinned_state(spark: SparkSession):
     # Mutates the SESSION-global shuffle-partition conf around query start
     # and restores it after: safe for this serial harness, but a second
     # query started concurrently on the same session would observe the
     # pinned value (round-3 ADVICE). Concurrent runners should set the conf
     # per-query (own session or writeStream-time sizing) instead.
-    prev = None
-    try:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-    except Exception:
-        pass
-    try:
-        cur = int(prev) if prev is not None else 1 << 30
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(cur, _STATE_PARTITIONS)),
-        )
-    except Exception:
-        pass
-    try:
-        yield
-    finally:
-        if prev is not None:
-            try:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-            except Exception:
-                pass
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": str(min(cur, _STATE_PARTITIONS))}
+    )
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
-    # raw schema (ts is INT64 nanos under nanosAsLong — conversion below);
     # the file streaming source wants a directory: point at sf_dir and
     # glob-filter down to the events table
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     df = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    # events.ts is TIMESTAMP(NANOS) → long under nanosAsLong (see session.py)
-    for f in df.schema.fields:
-        if f.name == "ts" and f.dataType.simpleString() == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return df
+    return normalize_timestamps(df)
 
 
 # No finite harness stream waits longer than this for its ``until``.
@@ -313,8 +293,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     "of dimension enrichment.",
 )
 def stream_static_join_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import load_table
-
     e = _events_stream(spark, sf_dir)
     spark = e.sparkSession
     c = load_table(spark, sf_dir, "customer")
@@ -455,8 +433,6 @@ def _app_scoped_dir(prefix: str) -> str:
 
 
 def _write_ssjoin_input(spark: SparkSession, sf_dir: str) -> str:
-    from ..session import load_table
-
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
@@ -516,7 +492,6 @@ def _write_ssjoin_input(spark: SparkSession, sf_dir: str) -> str:
     "of attribution pipelines at scale.",
 )
 def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     path = _outer_join_input_dir(spark, sf_dir)
     schema = spark.read.parquet(path).schema
 
@@ -574,11 +549,9 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def stream_passthrough_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.passthrough import _derive_control, _summarize
-    from ..session import load_table
     from ..sources.envelope import events_as_records
     from .topology import TRIGGER_GROUP_WARN_ROWS, build_routed_stream
 
-    prepare(spark)
     e = load_table(spark, sf_dir, "events")
     n_events = e.count()
     n_batches = e.select("event_type").distinct().count()
@@ -1008,9 +981,7 @@ def cdc_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.maintenance import list_table_versions, read_table_version
-    from ..session import load_table
 
-    prepare(spark)
     e = load_table(spark, sf_dir, "events")
     base = tempfile.mkdtemp(prefix="hri_cdc_travel_")
     state: dict[str, object] = {"cur": None, "ver": 0}
@@ -1135,7 +1106,6 @@ def stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     "output, and the batch FULL JOIN oracle applies exactly.",
 )
 def stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     path = _outer_join_input_dir(spark, sf_dir)
     schema = spark.read.parquet(path).schema
 
@@ -1218,7 +1188,6 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import _hll_complete_grid, _hll_readout, _hll_rho
-    from ..session import load_table
 
     e = _events_stream(spark, sf_dir)
     sink = _run_to_table(_hll_rho(e), "hllsketch")
@@ -1245,8 +1214,6 @@ def _qsk_window_input_dir(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _write_qskw_input(spark: SparkSession, sf_dir: str) -> str:
-    from ..session import load_table
-
     e = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
     sent = e.agg(F.max("ts").alias("ts")).select(
         (F.col("ts") + F.expr(f"INTERVAL {_QSKW_SENTINEL_OFFSET_D} DAYS")).alias(
@@ -1311,7 +1278,6 @@ def _write_qskw_input(spark: SparkSession, sf_dir: str) -> str:
 def stream_quantile_sketch_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import QSK_BIN_CENTS, quantile_sketch_quantiles
 
-    prepare(spark)
     path = _qsk_window_input_dir(spark, sf_dir)
     schema = spark.read.parquet(path).schema
     src = spark.readStream.schema(schema).parquet(path)
@@ -1365,9 +1331,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shingles_for,
         _verify_jaccard_pairs,
     )
-    from ..session import load_table
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]
     # empty corpus: no split point; every stage below is empty (r14)
@@ -1444,12 +1408,12 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _register_stream_dedup_incremental() -> None:
+def _register_stream_dedup_incremental():
     # oracle = the batch twin's, verbatim: both compute old x new
     # cross-partition near-dup pairs at the same 3/4 split and 0.8 cut.
     from ..operators.dedup import QUERIES as DEDUP_QUERIES
 
-    register(
+    return register(
         QUERIES,
         "stream_dedup_incremental",
         oracle=DEDUP_QUERIES["dedup_incremental_delta"].oracle,
@@ -1470,7 +1434,7 @@ def _register_stream_dedup_incremental() -> None:
     )(stream_dedup_incremental)
 
 
-_register_stream_dedup_incremental()
+stream_dedup_incremental = _register_stream_dedup_incremental()
 
 # --------------------------------------------------------------------------
 # Streaming ANN index maintenance (r9 verdict ask #2): the continuous-ingest
@@ -1534,7 +1498,6 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_maintained_ivf_index,
     )
 
-    prepare(spark)
     # Base: centroids Lloyd-trained on the base slice, FROZEN in the
     # sidecar; a fresh session resolves them from metadata alone.
     path = stream_maintained_ivf_index(spark, sf_dir)
@@ -1602,7 +1565,7 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_stream_ann_index_maintenance() -> None:
+def _register_stream_ann_index_maintenance():
     from ..operators.similarity import (
         DNLIST,
         NPROBE,
@@ -1610,7 +1573,7 @@ def _register_stream_ann_index_maintenance() -> None:
         _trained_ivf_oracle,
     )
 
-    register(
+    return register(
         QUERIES,
         "stream_ann_index_maintenance",
         # adaptive=True superseded the fixed-nprobe read in r11 (verdict
@@ -1641,7 +1604,7 @@ def _register_stream_ann_index_maintenance() -> None:
     )(stream_ann_index_maintenance)
 
 
-_register_stream_ann_index_maintenance()
+stream_ann_index_maintenance = _register_stream_ann_index_maintenance()
 
 
 def make_codes_epoch_appender(
@@ -1699,7 +1662,6 @@ def stream_ivfpq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_maintained_ivfpq_index,
     )
 
-    prepare(spark)
     path = stream_maintained_ivfpq_index(spark, sf_dir)
     meta = read_index_meta(path)
     cents = [[float(x) for x in c] for c in meta["centroids"]]
@@ -1772,7 +1734,7 @@ def stream_ivfpq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read()
 
 
-def _register_stream_ivfpq_maintenance() -> None:
+def _register_stream_ivfpq_maintenance():
     from ..operators.similarity import (
         DNLIST,
         NPROBE,
@@ -1780,7 +1742,7 @@ def _register_stream_ivfpq_maintenance() -> None:
         _trained_ivfpq_oracle,
     )
 
-    register(
+    return register(
         QUERIES,
         "stream_ivfpq_maintenance",
         oracle=_trained_ivfpq_oracle(
@@ -1809,4 +1771,4 @@ def _register_stream_ivfpq_maintenance() -> None:
     )(stream_ivfpq_maintenance)
 
 
-_register_stream_ivfpq_maintenance()
+stream_ivfpq_maintenance = _register_stream_ivfpq_maintenance()

@@ -213,7 +213,7 @@ def test_qgram_count_filter_blocking_is_complete(spark):
 
     import unittest.mock as mock
 
-    with mock.patch.object(linkage, "_t", lambda _s, _d, _n: df):
+    with mock.patch.object(linkage, "load_table", lambda _s, _d, _n: df):
         got = {
             (r["name_a"], r["name_b"]): (r["edit_distance"], r["n_part_pairs"])
             for r in linkage.fuzzy_part_match_blocked(spark, "unused").collect()

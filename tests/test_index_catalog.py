@@ -326,6 +326,43 @@ def test_dedup_memo_staleness_same_session_regen(spark, tmp_path):
     )
 
 
+def test_events_intermediates_track_same_session_regen(spark, tmp_path):
+    """Cached events intermediates (the shared dense hourly series and the
+    per-query MAD / chi-square tables) must not outlive an in-place
+    regeneration of events.parquet: Spark's CacheManager would substitute
+    a cached table into the next semantically equal plan and serve the
+    pre-regeneration rows."""
+    import duckdb
+
+    from hri_flink_validation_passthrough_spark.operators import analytics as A
+    from tests.oracle import canon_rows
+
+    corpus = tmp_path / "corpus"
+    os.makedirs(corpus)
+    src = str(corpus / "events.parquet")
+    shutil.copy(os.path.join(SF_ORACLE, "events.parquet"), src)
+    names = ["ts_subsequence_match", "events_mad_outliers", "chi_square_type_by_dow"]
+    for name in names:
+        A.QUERIES[name].fn(spark, str(corpus)).collect()
+
+    # regenerate IN PLACE with half the events — same path, new content
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE TABLE t AS SELECT * FROM read_parquet('{src}')"
+        " WHERE event_id % 2 = 0"
+    )
+    con.execute(f"COPY t TO '{src}' (FORMAT PARQUET)")
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{src}')")
+
+    for name in names:
+        spec = A.QUERIES[name]
+        got = canon_rows(spec.fn(spark, str(corpus)).toPandas())
+        assert got == canon_rows(con.sql(spec.oracle).df()), (
+            f"{name} served rows cached before the regeneration"
+        )
+    con.close()
+
+
 def test_window_input_dirs_track_same_session_regen(spark, tmp_path):
     """The streaming harnesses replay events from a session-memoized temp
     dir (events + far-future sentinels). Regenerating events.parquet in

@@ -312,13 +312,13 @@ def test_sketch_cardinalities_tracks_exact_counts(spark):
     from pyspark.sql import functions as F
 
     from hri_flink_validation_passthrough_spark.plans.relational import (
-        _t,
         sketch_cardinalities,
     )
+    from hri_flink_validation_passthrough_spark.session import load_table
 
     rows = {r["event_type"]: r for r in sketch_cardinalities(spark, SF_ORACLE).collect()}
     assert rows, "sketch query returned no groups"
-    e = _t(spark, SF_ORACLE, "events")
+    e = load_table(spark, SF_ORACLE, "events")
     exact = {
         r["event_type"]: r
         for r in e.groupBy("event_type")
